@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -11,11 +12,13 @@ import org.apache.spark.sql.SparkSession
   *     sbt "runMain graft.Profile kv_zorder keyed_cbo_join"
   *
   * Each query runs once untimed (warm the session) and once profiled; jobs
-  * are listed in submission order with their duration and call site. Gaps
-  * between the sum of job times and the wall clock are DRIVER-side work
-  * (planning, manifest I/O, catalog DDL) — the profile prints both so the
-  * split is visible. A query name may be suffixed `!` to skip its warmup
-  * (profile the cold path).
+  * are listed in submission order with their duration and call site. Job
+  * time is the UNION of the job intervals (concurrent jobs count once), so
+  * wall minus it is the DRIVER-side work (planning, code generation,
+  * manifest I/O, catalog DDL) and never negative. The profile also prints
+  * how many classes Spark compiled for the query and the compile time,
+  * from Spark's CodegenMetrics. A query name may be suffixed `!` to skip
+  * its warmup (profile the cold path).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -38,7 +41,7 @@ object Profile {
       catch { case e: Throwable => System.err.println(s"[profile] warmup: $e") }
     }
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val site = Option(j.properties)
@@ -47,7 +50,7 @@ object Profile {
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
         Option(jobs.remove(j.jobId)).foreach { case (t0, site) =>
-          done.add((j.jobId, j.time - t0, site))
+          done.add((j.jobId, t0, j.time, site))
         }
       }
     }
@@ -57,22 +60,46 @@ object Profile {
       val fn = SparkEntry.queries(name)
       if (!cold) { try fn(spark, sfDir).count(): Unit catch { case _: Throwable => () } }
       done.clear()
+      val cg = CodegenMetrics.METRIC_COMPILATION_TIME
+      val (cg0, cgMs0) = (cg.getCount, cg.getSnapshot.getValues.sum)
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count(): Unit
       catch { case e: Throwable => println(s"[profile] $name FAILED: $e") }
       val wallMs = (System.nanoTime() - t0) / 1e6
+      val cgSnap = cg.getSnapshot
+      val cgN = cg.getCount - cg0
       Thread.sleep(500) // let the listener bus drain (public API has no wait)
       spark.sparkContext.removeSparkListener(listener)
       println(s"\n===== $name: wall ${f"$wallMs%.0f"} ms =====")
       import scala.jdk.CollectionConverters._
       val rows = done.asScala.toSeq.sortBy(_._1)
-      rows.foreach { case (id, ms, site) =>
-        println(f"  job $id%4d ${ms}%6d ms  $site")
+      rows.foreach { case (id, s, e, site) =>
+        println(f"  job $id%4d ${e - s}%6d ms  $site")
       }
-      val jobSum = rows.map(_._2).sum
-      println(f"  jobs ${rows.size}%3d  sum ${jobSum}%6d ms  driver-side ${wallMs - jobSum}%.0f ms")
+      val jobSum = rows.map(r => r._3 - r._2).sum
+      val jobUnion = unionMs(rows.map(r => (r._2, r._3)))
+      println(f"  jobs ${rows.size}%3d  sum ${jobSum}%6d ms  union ${jobUnion}%6d ms  " +
+        f"driver-side ${wallMs - jobUnion}%.0f ms")
+      // the summed time is exact while the histogram's reservoir still holds
+      // every sample; past that, estimate it from the reservoir's mean
+      val exact = cgSnap.size == cg0 + cgN
+      val cgMs = if (exact) (cgSnap.getValues.sum - cgMs0).toDouble else cgN * cgSnap.getMean
+      println(f"  codegen ${cgN}%4d classes compiled  ${if (exact) "" else "~"}${cgMs}%.0f ms")
     }
     spark.stop()
+  }
+
+  /** Length of the union of [start, end) intervals: overlapping jobs count
+    * once. */
+  private[graft] def unionMs(iv: Seq[(Long, Long)]): Long = {
+    var total = 0L
+    var cs = 0L
+    var ce = 0L
+    iv.sortBy(_._1).foreach { case (s, e) =>
+      if (s > ce) { total += ce - cs; cs = s; ce = e }
+      else if (e > ce) ce = e
+    }
+    total + ce - cs
   }
 }

@@ -45,6 +45,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the strategy plans the annotation node away as its child.
     ext.injectPreCBORule(session => new graft.plans.AnalyzeStatsRule(session))
     ext.injectPlannerStrategy(session => graft.plans.GraftStatsStrategy)
+    // Primitive constants in filter/project comparisons become codegen
+    // parameters, so statements that differ only in key constants reuse
+    // one compiled class (see plans.ParamLiteral). The columnar hook's
+    // pre-transition rule runs just before CollapseCodegenStages.
+    ext.injectColumnar(session => graft.plans.ParamLiteralColumnarRule)
     // Same arity checks VectorOps.ensureRegistered enforces — without them
     // extra arguments would be silently dropped via exprs.head.
     ext.injectFunction((

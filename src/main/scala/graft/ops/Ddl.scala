@@ -1746,9 +1746,9 @@ object Ddl {
     * from the dispatch regexes below (each is anchored `\s*<KEYWORD>…`).
     * intercept() runs inside the injected parser on EVERY spark.sql text;
     * a first-word check lets the dominant SELECT/WITH/VALUES/EXPLAIN
-    * traffic skip all ~50 regex attempts (r21). Keep in sync when adding
-    * a statement form. */
-  private val InterceptLeads = Set(
+    * traffic skip all ~50 regex attempts (r21). DdlSpec checks every
+    * statement regex's leading keyword against this set. */
+  private[graft] val InterceptLeads = Set(
     "CREATE", "DROP", "ALTER", "CACHE", "UNCACHE", "DESC", "DESCRIBE",
     "LOAD", "INSERT", "DELETE", "UPDATE", "MERGE", "SHOW", "OPTIMIZE",
     "VACUUM", "RESTORE", "REFRESH", "SET", "ANALYZE")

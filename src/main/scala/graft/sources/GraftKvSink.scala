@@ -544,8 +544,9 @@ object GraftKvSink {
   // literal string element "N" writes unescaped as `N`, and a literal
   // string "\N" doubles its backslash to `\\N`, so the null token never
   // collides. Empty array `[]` ≠ NULL cell `\N` (the cell-level marker).
-  // Elements never contain tabs/newlines (required below, the same rule
-  // scalar strings enforce), so the enclosing TSV row format is untouched.
+  // Elements never contain tabs or line breaks (required below, the same
+  // rule scalar strings enforce), so the enclosing TSV row format is
+  // untouched.
   private def appendArrayEscaped(sb: StringBuilder, img: String): Unit = {
     var j = 0
     while (j < img.length) {
@@ -554,6 +555,18 @@ object GraftKvSink {
       sb.append(c)
       j += 1
     }
+  }
+  /** True when `s` holds a character no field of the line format can
+    * carry: the tab separator, or a line terminator — the reader ends a
+    * line at '\n', "\r\n" and a bare '\r'. */
+  private[sources] def hasFieldBreak(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\t' || c == '\n' || c == '\r') return true
+      i += 1
+    }
+    false
   }
   private[sources] def encodeArrayCell(et: DataType,
       arr: org.apache.spark.sql.catalyst.util.ArrayData): String = {
@@ -576,8 +589,8 @@ object GraftKvSink {
               .toJavaBigDecimal.toPlainString
           case StringType  =>
             val v = arr.getUTF8String(j).toString
-            require(!v.contains('\t') && !v.contains('\n'),
-              "graft_kv: tab/newline in array string element")
+            require(!hasFieldBreak(v),
+              "graft_kv: tab/newline/carriage return in array string element")
             v
           case other => throw new IllegalStateException(
             s"unsupported array element type $other")
@@ -833,7 +846,6 @@ object GraftKvSink {
         else {
           val entries = parseFileEntries(mapper.readTree(
             Files.readAllBytes(p)))
-          if (shardParseCache.size > 2048) shardParseCache.clear()
           shardParseCache.put(k, (si.sig, entries))
           entries
         }
@@ -1302,31 +1314,30 @@ object GraftKvSink {
   // inode and invalidates the entry by construction (the stat costs one
   // syscall, the same open the parse path would issue; cross-process
   // visibility is therefore identical to parse-per-read). Entries are
-  // immutable parsed Manifests; the map is bounded by periodic clear.
-  private final case class MfCacheEntry(fileKey: AnyRef, size: Long,
+  // immutable parsed Manifests; the map is bounded by LRU eviction.
+  private[sources] final case class MfCacheEntry(fileKey: AnyRef, size: Long,
       mtime: java.nio.file.attribute.FileTime, m: Manifest) {
     def matches(a: java.nio.file.attribute.BasicFileAttributes): Boolean =
       java.util.Objects.equals(fileKey, a.fileKey) && size == a.size &&
         mtime == a.lastModifiedTime
   }
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[Path, MfCacheEntry]()
+  private[sources] val manifestCache = new LruCache[Path, MfCacheEntry](512)
   private def statAttrs(p: Path): java.nio.file.attribute.BasicFileAttributes =
     try Files.readAttributes(p,
       classOf[java.nio.file.attribute.BasicFileAttributes])
     catch { case _: java.io.IOException => null }
   private[sources] def invalidateManifestCache(mf: Path): Unit =
-    manifestCache.remove(mf.toAbsolutePath.normalize): Unit
+    manifestCache.remove(mf.toAbsolutePath.normalize)
 
   /** Shard parses cached by (path, sig): a shard's sig names its CONTENT —
     * the commit path already relies on equal sig ⇒ identical entries to
     * re-reference shard files without re-serialization, so a cached parse
     * under the same sig is sound by the same rule. A rewritten shard
     * publishes a new sig in the manifest list and misses here. */
-  private val shardParseCache = new java.util.concurrent.ConcurrentHashMap[
+  private[sources] val shardParseCache = new LruCache[
     String, (String, (Seq[(String, Long)],
       Map[String, Map[String, (String, String)]],
-      Map[String, Map[String, String]]))]()
+      Map[String, Map[String, String]]))](2048)
 
   private[graft] def readManifest(mf: Path): Manifest =
     readManifestImpl(mf, Nil)._1
@@ -1451,7 +1462,6 @@ object GraftKvSink {
             attrs0.fileKey, attrs1.fileKey) &&
           attrs0.size == attrs1.size &&
           attrs0.lastModifiedTime == attrs1.lastModifiedTime) {
-        if (manifestCache.size > 512) manifestCache.clear()
         manifestCache.put(canon,
           MfCacheEntry(attrs1.fileKey, attrs1.size,
             attrs1.lastModifiedTime, m))
@@ -1571,8 +1581,8 @@ object GraftKvSink {
           sb.append(cell); observed(i) = cell
         case StringType =>
           val s = row.getUTF8String(i).toString
-          require(!s.contains('\t') && !s.contains('\n'),
-            s"graft_kv: tab/newline in string value for '${schema(i).name}'")
+          require(!hasFieldBreak(s),
+            s"graft_kv: tab/newline/carriage return in string value for '${schema(i).name}'")
           // a literal leading backslash gets doubled so the null marker
           // can never collide with real data
           if (s.startsWith("\\")) sb.append('\\')
@@ -4463,9 +4473,18 @@ final class GraftKvDeltaWriter(dir: String, schema: StructType,
     out.write(lineChars, 0, n)
   }
 
+  // The row ID's file name is a field of the D/U record; a foreign path
+  // (SHALLOW CLONE) holding a tab or line break would split the record.
+  private def idFile(id: InternalRow): String = {
+    val f = id.getUTF8String(0).toString
+    require(!GraftKvSink.hasFieldBreak(f),
+      s"graft_kv: tab/newline/carriage return in row-ID file '$f'")
+    f
+  }
+
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     sb.setLength(0)
-    sb.append("D\t").append(id.getUTF8String(0).toString).append('\t')
+    sb.append("D\t").append(idFile(id)).append('\t')
       .append(id.getLong(1)).append('\n')
     flushLine()
     deletes += 1L
@@ -4485,7 +4504,7 @@ final class GraftKvDeltaWriter(dir: String, schema: StructType,
     // update_preimage/update_postimage (Delta CDF's four-valued
     // _change_type) — which a split delete+insert pair cannot express.
     sb.setLength(0)
-    sb.append("U\t").append(id.getUTF8String(0).toString).append('\t')
+    sb.append("U\t").append(idFile(id)).append('\t')
       .append(id.getLong(1)).append('\t')
     GraftKvSink.encodeRow(schema, row, sb, observed, byPid)
     flushLine()

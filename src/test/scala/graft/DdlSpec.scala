@@ -26,6 +26,29 @@ class DdlSpec extends SparkSpec {
     assert(viaCatalog.collect().toSeq == handWritten.collect().toSeq)
   }
 
+  test("every Ddl statement regex leads with a keyword in InterceptLeads") {
+    // intercept() drops any statement whose first word is not in
+    // InterceptLeads before trying the dispatch regexes, so a regex with
+    // another lead would never match. Every statement regex is a Regex
+    // field of Ddl anchored as `(?flags)\s*KEYWORD…` (DESC(?:RIBE)? gives
+    // both spellings); SeqHeadRe reads the catalog file, not SQL.
+    import scala.util.matching.Regex
+    val lead = """^\(\?[a-z]+\)\\s\*([A-Z]+)(?:\(\?:([A-Z]+)\)\?)?""".r
+    val fields = ops.Ddl.getClass.getDeclaredFields.toSeq
+      .filter(f => classOf[Regex].isAssignableFrom(f.getType))
+      .map { f => f.setAccessible(true); f.getName -> f.get(ops.Ddl).asInstanceOf[Regex] }
+    val (statements, others) = fields.partition { case (_, re) =>
+      lead.findPrefixMatchOf(re.regex).isDefined }
+    assert(others.map(_._1).map(_.split("\\$").last) == Seq("SeqHeadRe"), others)
+    assert(statements.size >= 50, statements.map(_._1))
+    val missing = statements.flatMap { case (name, re) =>
+      val m = lead.findPrefixMatchOf(re.regex).get
+      val words = m.group(1) +: Option(m.group(2)).map(m.group(1) + _).toSeq
+      words.filterNot(ops.Ddl.InterceptLeads).map(w => s"$name: $w")
+    }
+    assert(missing.isEmpty, missing)
+  }
+
   test("malformed DDL and unknown key columns are rejected") {
     intercept[IllegalArgumentException] {
       ops.Ddl.create(spark, "CREATE TABLE broken")

@@ -758,6 +758,42 @@ class DsV2Spec extends SparkSpec {
     assert(back.toSeq == orig.toSeq, back.mkString("|"))
   }
 
+  test("kv writers refuse tab, newline and carriage return in strings; the table is unchanged") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_kv_cr").toString
+    kvWrite(Seq((1L, "a", Seq("x"))).toDF("id", "s", "arr"), dir, "overwrite")
+    def state = (kvRead(dir).orderBy(col("id")).collect().toSeq,
+      graft.sources.GraftKvSink.listedFiles(dir))
+    val before = state
+    def refused(write: => Unit): Unit = {
+      val e = intercept[Exception](write)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("tab/newline/carriage return")), e.toString)
+      assert(state == before)
+    }
+    Seq("cr\rsplit", "crlf\r\n", "\r", "nl\nsplit", "tab\tsplit").foreach { bad =>
+      refused(kvWrite(Seq((2L, bad, Seq("y"))).toDF("id", "s", "arr"), dir, "append"))
+      refused(kvWrite(Seq((3L, "ok", Seq("y", bad))).toDF("id", "s", "arr"), dir, "append"))
+    }
+    // the merge-on-read delta writer: an UPDATE's post-image is refused too
+    val mor = java.nio.file.Files.createTempDirectory("graft_kv_cr_mor").toString
+    spark.sql("DROP TABLE IF EXISTS graft.rlspec.cr")
+    spark.sql(s"CREATE TABLE graft.rlspec.cr (id BIGINT, s STRING) " +
+      s"USING graft_kv OPTIONS (path '$mor', mor 'true')")
+    try {
+      spark.sql("INSERT INTO graft.rlspec.cr VALUES (1, 'a'), (2, 'b')")
+      def rows = spark.table("graft.rlspec.cr").orderBy("id").collect().toSeq
+      val rowsBefore = rows
+      val e = intercept[Exception](
+        spark.sql("UPDATE graft.rlspec.cr SET s = 'x\\ry' WHERE id = 2"))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("carriage return")), e.toString)
+      assert(rows == rowsBefore)
+      assert(graft.sources.GraftKvSink.listedFiles(mor)._2.isEmpty)
+    } finally spark.sql("DROP TABLE graft.rlspec.cr")
+  }
+
   test("kv scan prunes files from manifest min/max stats") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_kv_stats").toString
