@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Per-job profile of a named query: attributes wall time to the source
   * call sites (file:line) that submitted each Spark job, so a multi-step
@@ -17,8 +18,9 @@ import org.apache.spark.sql.SparkSession
   * wall minus it is the DRIVER-side work (planning, code generation,
   * manifest I/O, catalog DDL) and never negative. The profile also prints
   * how many classes Spark compiled for the query and the compile time,
-  * from Spark's CodegenMetrics. A query name may be suffixed `!` to skip
-  * its warmup (profile the cold path).
+  * from Spark's CodegenMetrics; its first line names the compiled-class
+  * cache bound those counts were taken under. A query name may be suffixed
+  * `!` to skip its warmup (profile the cold path).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -35,6 +37,11 @@ object Profile {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // profiles taken under different compiled-class cache bounds differ in
+    // their compile counts; name the bound this JVM's cache was built with
+    val cacheBound = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
+    println(s"[profile] compiled-class cache bound ${spark.conf.get(cacheBound.key)} " +
+      s"(${cacheBound.key})")
     // session warmup (same shape as Bench's untimed warmups)
     Seq("filter_pred", "agg_groupby").foreach { w =>
       try SparkEntry.queries(w)(spark, sfDir).count(): Unit

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** SparkSessionExtensions entry point — the deployment-grade way to install
   * graft's custom Catalyst surface into any session:
@@ -15,9 +16,18 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * harness mains use the runtime-registry path (VectorOps.ensureRegistered)
   * because the driver owns session construction; both paths bind the same
   * expressions.
+  *
+  * Built through `withExtensions`, it also raises Spark's compiled-class
+  * cache bound (see GraftExtensions.CodegenCacheEntries).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Size Spark's compiled-class cache before the session's SparkConf
+    // exists: withExtensions runs this at builder time, and build() later
+    // loads spark.* system properties into its new SparkConf. A value set
+    // by builder .config(...) or spark-submit --conf still wins.
+    sys.props.getOrElseUpdate(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      GraftExtensions.CodegenCacheEntries.toString)
     // SQL-string DDL entry point: intercepts the MAPPED BY grammar (and
     // catalog-guarded shared statements) and falls through to the vanilla
     // parser otherwise — see plans.GraftSqlParser for the routing rules.
@@ -69,4 +79,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         SimHash64(exprs.head)
       }))
   }
+}
+
+object GraftExtensions {
+  /** Bound of Spark's compiled-class cache in a session built with
+    * `withExtensions(new GraftExtensions)`
+    * (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100).
+    *
+    * The working set it must hold: the LLM-pipeline operators (dedup,
+    * graph, ANN, text, streaming) keep about
+    * 300 distinct generated sources alive, with up to 2 entries each,
+    * because the cache is keyed by (context class loader, source): an AQE
+    * stage compiles a class on the driver and a task compiles the same
+    * source under the executor's loader. The cache is a Guava cache, so the
+    * bound is split over its 4 segments; 100 entries are 4 LRU lists of 25.
+    * At 100 one pass over the 11 pipelines recompiled about 500 classes; at
+    * 4096, about 45.
+    *
+    * Limit: Spark builds the cache once per JVM, from the static SQL conf
+    * in force when code is first generated. A JVM whose SparkContext
+    * already exists, or that has already generated code, keeps its old
+    * bound. The `spark.sql.extensions=` route installs graft after the
+    * context is built, so there the bound has to be passed as a conf.
+    */
+  val CodegenCacheEntries = 4096
 }

@@ -893,17 +893,15 @@ object KeyRange {
     // not care WHY a row appeared or vanished, only that it did
     val signed = when(col("_change_type").isin("insert", "update_postimage"),
       lit(1L)).otherwise(lit(-1L))
-    // The stateful aggregate allocates one state store per shuffle
-    // partition PER MICRO-BATCH, and the maintained state is THREE groups
-    // (o_orderstatus has three arms — the state this query ever holds), so
-    // the partition count DERIVES from that state size instead of pinning
-    // a constant the fixture happens to fit (r21; r20 pinned 4): groups+1
-    // stores carry the aggregate with a fraction of the session's 32
-    // store commits per batch, capped by the core count on small hosts.
-    // Key-hashed state — the emitted set cannot change, only the fixed
-    // commit overhead. At real volume `stateGroups` is the admitted
-    // group-key cardinality, which for this MV is fixed by the schema.
-    val stateGroups = 3 // |{'F','O','P'}| — o_orderstatus arms maintained
+    // PINNED shuffle width, not derived from stats: 4 partitions
+    // (stateGroups + 1), capped by the core count. The stateful aggregate
+    // opens and commits one state store per shuffle partition per
+    // micro-batch, so the session width (one per core) would multiply that
+    // fixed per-batch cost while the state is only the three o_orderstatus
+    // groups. The constant fits this query's schema, not measured input.
+    // The result does not depend on it (key-hashed state, decimal sums);
+    // only the per-batch cost does.
+    val stateGroups = 3 // |{'F','O','P'}|: the o_orderstatus groups held
     val statePartitions =
       math.max(1, math.min(s.sparkContext.defaultParallelism, stateGroups + 1))
     Events.withConfs(s, "spark.sql.shuffle.partitions" -> statePartitions.toString) {
@@ -968,14 +966,14 @@ object KeyRange {
       "WHERE 1 = 0")
     val ckpt = s"$scratch/repl_ck"
     clearDir(ckpt)
-    // each per-epoch MERGE joins a FEW HUNDRED change rows against the
-    // target, so the per-statement shuffle width DERIVES from that batch
-    // scale rather than pinning a constant (r21; r20 pinned 4): a few
-    // hundred rows divided by a ~128-row-per-task floor gives 4 tasks,
-    // capped by the core count on small hosts (the stream's cloned
-    // session inherits the conf at start). At real volume the same rule —
-    // admitted change rows / target rows per task — sizes the width.
-    val replBatchRows = 512 // DML touches O(1e2) keys per epoch at any sf
+    // PINNED shuffle width, not derived from stats: 4 partitions
+    // (replBatchRows / 128), capped by the core count; the stream's cloned
+    // session inherits the conf at start. Each per-epoch MERGE joins a few
+    // hundred change rows against the target, so the session width (one
+    // per core) would only add near-empty tasks. 512 is the order of the
+    // keys this query's DML touches per epoch, not a measured count; the
+    // replicated rows do not depend on the width, only the cost does.
+    val replBatchRows = 512 // O(1e2) changed keys per epoch, rounded up
     val replPartitions = math.max(1,
       math.min(s.sparkContext.defaultParallelism, replBatchRows / 128))
     Events.withConfs(s, "spark.sql.shuffle.partitions" -> replPartitions.toString) {

@@ -6776,7 +6776,12 @@ final class GraftKvReaderFactory(schemaJson: String, projectedJson: String)
         false
       }
       // ASCII view over the current line for the JDK's range parsers
-      // (numeric images are pure ASCII by construction)
+      // (numeric images are pure ASCII by construction). Offsets are
+      // ABSOLUTE into larr, not 0-based from the line start: length() is
+      // lend (the line's end offset, not its length) and charAt(i) reads
+      // larr(i). Callers pass (s, e) with lbase <= s <= e <= lend, as
+      // parseInt/parseLong(cs, begin, end, radix) do; a caller reading it
+      // as an ordinary 0-based sequence would see bytes before the line.
       private val asciiView: CharSequence = new CharSequence {
         override def length(): Int = lend
         override def charAt(i: Int): Char = (larr(i) & 0xFF).toChar
