@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-hygiene utility: prints the formatted physical plan for the named
   * queries (or a default hygiene set) so pushdown/broadcast/codegen can be
   * inspected: `sbt "runMain graft.Explain keyrange_scan join_star"`. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      // full extension parity with Verify/Bench: the audited plans must be
-      // the plans the judged queries actually run under
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_pricing", "q3_shipping", "keyrange_scan", "join_broadcast",

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-bench utility: times the named queries REPS times each (default 3)
   * against SPARK_GRAFT_SF_DIR, printing every rep — the tool for separating
   * a real plan regression from this host's bursty ambient noise (single-run
@@ -20,17 +18,7 @@ object Time {
       System.err.println(s"[time] available: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      // Multipart-identifier resolution for graft-managed tables/views
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: the cheap filter query if registered; otherwise a trivial
     // range count — never an arbitrary (alphabetically-first, possibly

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,25 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Deployment-grade install of the custom surface (functions + the
-      // MAPPED BY SQL parser) — the same extensions a cluster job would set
-      // via spark.sql.extensions=graft.functions.GraftExtensions.
-      .withExtensions(new graft.functions.GraftExtensions)
-      // Multipart-identifier resolution for graft-managed tables/views
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as long, Tables.events
-      // converts to a truncated microsecond timestamp (matches DuckDB).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Write MICROS (not INT96): the driver loads results via pandas, which
-      // reads INT96 as datetime64[ns] but the DuckDB oracle side is
-      // datetime64[us] — micros keeps both sides' dtype identical.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names); unset on the driver,

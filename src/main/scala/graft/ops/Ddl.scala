@@ -35,24 +35,29 @@ import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, IntegerType, 
   *   UPDATE <name> SET <col> = <expr> WHERE <pred>
   *   ANALYZE TABLE <name> COMPUTE STATISTICS [FOR [ALL] COLUMNS [a, b]]
   *   SHOW STATS <name>
-  * Qualified names (`db.t`, one qualifier) are first-class: the graft
-  * catalog keys on the lowercased full name, the database is created on
-  * demand, and the relation registers as a PERSISTENT session-catalog view
-  * (temp views cannot hold multipart names) whose body is self-contained
-  * SQL over the base parquet path with the mutation log replayed as nested
-  * SELECTs. LOAD DATA into a qualified table materializes the
-  * header-aligned CSV to a managed parquet snapshot under the warehouse
-  * (header alignment is not expressible in self-contained view SQL, but a
-  * parquet path is), and the view unions the snapshot — so restart replay
-  * stays a pure-SQL rebuild.
+  * ONE REPLAY: each logged mutation means exactly one SQL step
+  * ([[stepSql]]: a SELECT over the previous state). The full replay
+  * ([[rebuildSql]]) folds those steps over the base parquet; it is
+  * self-contained SQL, so it serves `graft.t`, `VERSION`/`TIMESTAMP AS OF`,
+  * [[asOf]], restart replay and the catalog plugin's views alike. A
+  * statement goes through one funnel ([[commit]]): a single-part table's
+  * temp view takes the new step on top of its live view (one step per
+  * statement, not a replay of the whole history), while a qualified table
+  * (`db.t`, one qualifier; temp views cannot hold multipart names)
+  * re-registers its PERSISTENT session-catalog view from the full replay,
+  * which must not reference temp state. The graft catalog keys on the
+  * lowercased full name; the database is created on demand. Rows a
+  * statement brings in (INSERT, LOAD DATA's header-aligned CSV, MERGE
+  * sources) are written to managed parquet snapshots under the warehouse
+  * at statement time, so every replay reads parquet only.
   *
   * PERSISTENCE: Astro's catalog survived process restart (table metadata
   * lived in an HBase metadata table [ref*: …/hbase/HBaseCatalog.scala —
   * mount empty]). Graft mirrors that: every DDL mutation serializes the
   * catalog — base path, key columns, and the CHRONOLOGICAL mutation log
-  * (ALTER ADD/DROP, LOAD) — to `spark-warehouse/graft_catalog.json`
+  * (ALTER, LOAD, DML) — to `spark-warehouse/graft_catalog.json`
   * (override: -Dgraft.catalog.path). A new JVM lazily reloads the file and
-  * re-registers each table's temp view on first touch by REPLAYING the
+  * re-registers each table's view on first touch by REPLAYING the
   * mutation log over the base parquet, so a restarted session sees the same
   * schema and data the old one did, computed columns and loaded CSVs
   * included. The file is tiny (metadata only — no data is copied), so the
@@ -61,7 +66,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, IntegerType, 
 object Ddl {
 
   /** One replayable mutation: op ∈ add (col, expr) | drop (col, -) |
-    * load (csv path, snapshot-or-empty) | insert (-, snapshot) |
+    * load (csv path, snapshot) | insert (-, snapshot) |
     * delete (pred, -) | update (col, frozen CASE expr). Kept as strings so
     * the catalog file stays a flat JSON list and replay is exactly the
     * statement the user ran. */
@@ -103,6 +108,7 @@ object Ddl {
   private val indexDefs = TrieMap.empty[String, graft.plans.IndexDef]
   @volatile private var loadedFromDisk = false
   @volatile private var mvViewsReplayed = false
+  @volatile private var legacyLoadsSnapshotted = false
   /** Sequence number of the catalog file as last read/written by THIS
     * process. persist() refuses to overwrite a file whose seq has moved
     * past it (another JVM wrote since we loaded) — last-writer-wins across
@@ -383,6 +389,7 @@ object Ddl {
     visAuths = Seq.empty // session state: a fresh process has no auths
     loadedFromDisk = false
     mvViewsReplayed = false
+    legacyLoadsSnapshotted = false
     diskSeq = 0L
   }
 
@@ -411,12 +418,12 @@ object Ddl {
   /** Keyed tables for the catalog plugin's view half: self-contained SQL
     * (base parquet + replayed mutation log) for a registered table. */
   def viewSqlFor(spark: SparkSession, name: String): Option[String] =
-    lookup(name).map(rebuildSql(spark, _))
-  /** Self-contained SQL for a keyed table AT A LOG VERSION — the SQL-side
-    * twin of [[asOf]] (version counts applied mutations; 0 = base), what
-    * the injected parser expands `graft.t VERSION AS OF n` to. */
+    replayable(spark, name).map(rebuildSql(spark, _))
+  /** Self-contained SQL for a keyed table AT A LOG VERSION (version counts
+    * applied mutations; 0 = base): what [[asOf]] runs and what the injected
+    * parser expands `graft.t VERSION AS OF n` to. */
   def viewSqlAsOf(spark: SparkSession, name: String, version: Int): Option[String] =
-    lookup(name).map { t =>
+    replayable(spark, name).map { t =>
       require(version >= 0 && version <= t.muts.length,
         s"version $version out of range 0..${t.muts.length} for ${t.name}")
       rebuildSql(spark, t.copy(muts = t.muts.take(version)))
@@ -429,7 +436,7 @@ object Ddl {
     * the table was created (no state existed to read). */
   def viewSqlAsOfTimestamp(spark: SparkSession, name: String,
       ms: Long): Option[String] =
-    lookup(name).map { t =>
+    replayable(spark, name).map { t =>
       require(t.createdTs > 0L && t.muts.forall(_.ts > 0L),
         s"${t.name}: history predates commit clocks — use VERSION AS OF " +
           "(SHOW VERSIONS lists the log)")
@@ -1082,92 +1089,128 @@ object Ddl {
   private def quoted(name: String): String =
     name.split('.').map(p => s"`$p`").mkString(".")
 
-  /** View SQL for a qualified table: base parquet path + the mutation log
-    * replayed as nested SELECTs. Temp views cannot hold multipart names, so
-    * `db.t` registers as a PERSISTENT session-catalog view, whose body must
-    * be SQL text with no temp-view references — `parquet.`path`` at the
-    * bottom keeps it self-contained. Only column NAMES are tracked while
-    * folding (needed to expand DROP COLUMN into an explicit projection);
-    * types stay wherever Catalyst infers them. */
-  private def rebuildSql(spark: SparkSession, t: KeyedTable): String = {
-    var cols = spark.read.parquet(t.path).schema.fieldNames.toSeq
-    var sqlText = s"SELECT * FROM parquet.`${t.path}`"
-    t.muts.foreach { m =>
-      m.op match {
-        case "add" =>
-          sqlText = s"SELECT *, (${m.b}) AS `${m.a}` FROM ( $sqlText )"
-          cols = cols :+ m.a
-        case "default" =>
-          // history reads NULL, TYPED as the default expression (the
-          // IF(FALSE, ...) trick keeps the replay self-contained); the
-          // default itself applies only to later INSERT snapshots, which
-          // carry the spliced value materialized at statement time
-          sqlText =
-            s"SELECT *, IF(FALSE, (${m.b}), NULL) AS `${m.a}` FROM ( $sqlText )"
-          cols = cols :+ m.a
-        case "drop" =>
-          cols = cols.filterNot(_.equalsIgnoreCase(m.a))
-          sqlText =
-            s"SELECT ${cols.map(c => s"`$c`").mkString(", ")} FROM ( $sqlText )"
-        case "rename" =>
-          sqlText = s"SELECT ${cols.map(c =>
-              if (c.equalsIgnoreCase(m.a)) s"`$c` AS `${m.b}`" else s"`$c`")
-            .mkString(", ")} FROM ( $sqlText )"
-          cols = cols.map(c => if (c.equalsIgnoreCase(m.a)) m.b else c)
-        case "widen" =>
-          // in-place lossless CAST: position and name keep, type widens —
-          // history rows and later INSERT snapshots both read through it
-          sqlText = s"SELECT ${cols.map(c =>
-              if (c.equalsIgnoreCase(m.a)) s"CAST(`$c` AS ${m.b}) AS `$c`"
-              else s"`$c`")
-            .mkString(", ")} FROM ( $sqlText )"
-        case "load" | "insert" =>
-          // m.b = the managed parquet snapshot (header-aligned CSV for
-          // LOAD, evaluated rows for INSERT), written at statement time
-          // with the schema the table had THEN (which equals `cols` at
-          // this fold point). Selecting the columns by name keeps union
-          // semantics order-independent.
-          sqlText = s"SELECT * FROM ( $sqlText ) UNION ALL " +
-            s"SELECT ${cols.map(c => s"`$c`").mkString(", ")} FROM parquet.`${m.b}`"
-        case "delete" =>
-          sqlText =
-            s"SELECT * FROM ( $sqlText ) WHERE NOT coalesce((${m.a}), false)"
-        case "update" =>
-          sqlText = s"SELECT ${cols.map(c =>
-              if (c.equalsIgnoreCase(m.a)) s"(${m.b}) AS `$c`" else s"`$c`")
-            .mkString(", ")} FROM ( $sqlText )"
-        case "merge" =>
-          // whole-row upsert in self-contained SQL: snapshot rows first,
-          // then the prior body anti-joined on the primary key via a
-          // correlated NOT EXISTS (no temp-view references)
-          val keyPred = t.keys.map(k => s"s.`$k` = b.`$k`").mkString(" AND ")
-          sqlText = s"SELECT ${cols.map(c => s"`$c`").mkString(", ")} " +
-            s"FROM parquet.`${m.b}` UNION ALL " +
-            s"SELECT ${cols.map(c => s"b.`$c`").mkString(", ")} FROM ( $sqlText ) b " +
-            s"WHERE NOT EXISTS (SELECT 1 FROM parquet.`${m.b}` s WHERE $keyPred)"
-        case "merge2" =>
-          // generalized merge: b = output rows (updates + inserts), a =
-          // dropped-keys snapshot (replaced or deleted); prior rows survive
-          // only when their key is absent from the drop set
-          val keyPred = t.keys.map(k => s"s.`$k` = b.`$k`").mkString(" AND ")
-          sqlText = s"SELECT ${cols.map(c => s"`$c`").mkString(", ")} " +
-            s"FROM parquet.`${m.b}` UNION ALL " +
-            s"SELECT ${cols.map(c => s"b.`$c`").mkString(", ")} FROM ( $sqlText ) b " +
-            s"WHERE NOT EXISTS (SELECT 1 FROM parquet.`${m.a}` s WHERE $keyPred)"
-        case "viscol" =>
-          sqlText = s"SELECT * FROM ( $sqlText ) " +
-            s"WHERE ${visPredicateSql(m.a, visAuths)}"
-        case "squash" =>
-          // materialized replay prefix: restart the view body from the
-          // snapshot (see the rebuild analogue)
-          cols = spark.read.parquet(m.b).schema.fieldNames.toSeq
-          sqlText = s"SELECT * FROM parquet.`${m.b}`"
-        case other =>
-          throw new IllegalStateException(
-            s"unsupported mutation '$other' on qualified table ${t.name}")
-      }
+  /** One logged mutation as one SELECT over `from` (a quoted view name or a
+    * parenthesized replay body) whose columns are `cols`; returns the SELECT
+    * and the column list after the step. The only definition of what each
+    * op means: [[rebuildSql]] folds it over the base parquet, [[commit]]
+    * applies it once on top of a single-part table's live view. Only
+    * column NAMES are tracked (DROP/RENAME/UPDATE/WIDEN expand to explicit
+    * projections); types stay wherever Catalyst infers them. */
+  private def stepSql(t: KeyedTable, m: Mut, cols: Seq[String],
+      from: String): (String, Seq[String]) = {
+    def names(cs: Seq[String]) = cs.map(quotedCol).mkString(", ")
+    // every column projected in place, column m.a rewritten by `f`
+    def rewrite(f: String => String) = s"SELECT ${cols.map(c =>
+      if (c.equalsIgnoreCase(m.a)) f(quotedCol(c)) else quotedCol(c))
+      .mkString(", ")} FROM $from"
+    // whole-row upsert: the `rows` snapshot first, then the prior rows whose
+    // key is absent from the `dropped` snapshot (a correlated NOT EXISTS —
+    // Catalyst plans it as a left-anti join)
+    def upsert(rows: String, dropped: String) = {
+      val keyPred = t.keys.map(k => s"s.`$k` = b.`$k`").mkString(" AND ")
+      s"SELECT ${names(cols)} FROM parquet.`$rows` UNION ALL " +
+        s"SELECT ${cols.map(c => s"b.`$c`").mkString(", ")} FROM $from b " +
+        s"WHERE NOT EXISTS (SELECT 1 FROM parquet.`$dropped` s WHERE $keyPred)"
     }
-    sqlText
+    m.op match {
+      case "add" => (s"SELECT *, (${m.b}) AS `${m.a}` FROM $from", cols :+ m.a)
+      // history reads NULL, TYPED as the default expression; the default
+      // itself applies only to later INSERT snapshots, which carry the
+      // spliced value materialized at statement time
+      case "default" =>
+        (s"SELECT *, IF(FALSE, (${m.b}), NULL) AS `${m.a}` FROM $from", cols :+ m.a)
+      case "drop" =>
+        val kept = cols.filterNot(_.equalsIgnoreCase(m.a))
+        (s"SELECT ${names(kept)} FROM $from", kept)
+      case "rename" => (rewrite(c => s"$c AS `${m.b}`"),
+        cols.map(c => if (c.equalsIgnoreCase(m.a)) m.b else c))
+      // in-place lossless CAST: position and name keep, type widens —
+      // history rows and later INSERT snapshots both read through it
+      case "widen" => (rewrite(c => s"CAST($c AS ${m.b}) AS $c"), cols)
+      // b = the managed parquet snapshot (header-aligned CSV for LOAD,
+      // evaluated rows for INSERT), written at statement time with the
+      // schema the table had then, which is `cols` here; selecting by name
+      // keeps the union order-independent
+      case "load" | "insert" =>
+        (s"SELECT * FROM $from UNION ALL SELECT ${names(cols)} FROM parquet.`${m.b}`",
+          cols)
+      // DELETE keeps rows where the predicate is false OR NULL (SQL DELETE
+      // removes only where it is TRUE)
+      case "delete" =>
+        (s"SELECT * FROM $from WHERE NOT coalesce((${m.a}), false)", cols)
+      // b = the CASE projection frozen at statement time
+      case "update" => (rewrite(c => s"(${m.b}) AS $c"), cols)
+      // star MERGE: b = the aligned source rows, which also name the
+      // replaced keys
+      case "merge" => (upsert(m.b, m.b), cols)
+      // generalized MERGE: b = output rows (updates + inserts), a = the
+      // dropped-keys snapshot (replaced or deleted)
+      case "merge2" => (upsert(m.b, m.a), cols)
+      // visibility gate under the CURRENT session auth set (SET VISIBILITY
+      // re-registers every labeled table)
+      case "viscol" =>
+        (s"SELECT * FROM $from WHERE ${visPredicateSql(m.a, visAuths)}", cols)
+      case other =>
+        throw new IllegalStateException(s"bad catalog mutation '$other' on ${t.name}")
+    }
+  }
+
+  /** Where a replay starts: the newest squash snapshot (which materialized
+    * every earlier mutation) or the base parquet, and the mutations after
+    * it. */
+  private def replayRoot(t: KeyedTable): (String, Seq[Mut]) = {
+    val last = t.muts.lastIndexWhere(_.op == "squash")
+    if (last < 0) (t.path, t.muts) else (t.muts(last).b, t.muts.drop(last + 1))
+  }
+
+  /** A keyed table's full replay as self-contained SQL: [[stepSql]] folded
+    * over the replay root. It references no temp state, so it is both a
+    * qualified table's persistent view body and what `graft.t`, time
+    * travel and restart replay read. */
+  private def rebuildSql(spark: SparkSession, t: KeyedTable): String = {
+    val (root, tail) = replayRoot(t)
+    val scan = s"SELECT * FROM parquet.`$root`"
+    // the root's column names cost a schema read (a Spark job): only a
+    // replay with steps needs them
+    if (tail.isEmpty) scan
+    else tail.foldLeft((scan, spark.read.parquet(root).schema.fieldNames.toSeq)) {
+      case ((sql, cols), m) => stepSql(t, m, cols, s"( $sql )")
+    }._1
+  }
+
+  /** [[lookup]] for paths that replay a table. */
+  private def replayable(spark: SparkSession, name: String): Option[KeyedTable] = {
+    snapshotLegacyLoads(spark)
+    lookup(name)
+  }
+
+  /** Catalogs written before single-part LOAD snapshotted its rows can hold
+    * `load` entries without a snapshot, whose replay re-read the CSV. The
+    * first replay in a process writes each such snapshot — the CSV aligned
+    * to the schema the table had just before the LOAD — and persists the
+    * catalog, so every replay after that reads parquet only. */
+  private def snapshotLegacyLoads(spark: SparkSession): Unit = {
+    if (legacyLoadsSnapshotted) return
+    synchronized {
+      if (legacyLoadsSnapshotted) return
+      ensureLoaded()
+      val legacy = catalog.values.toSeq
+        .filter(_.muts.exists(m => m.op == "load" && m.b.isEmpty))
+      legacy.foreach { t =>
+        val muts = t.muts.indices.foldLeft(t.muts) { (ms, i) => ms(i) match {
+          case m @ Mut("load", csv, "", _) =>
+            val before = t.copy(muts = ms.take(i))
+            val snap = loadSnapshotPath(before)
+            readCsvAligned(spark, spark.sql(rebuildSql(spark, before)).schema, csv)
+              .write.mode(SaveMode.Overwrite).parquet(snap)
+            ms.updated(i, m.copy(b = snap))
+          case _ => ms
+        } }
+        catalog.put(t.name.toLowerCase, t.copy(muts = muts))
+      }
+      if (legacy.nonEmpty) persist()
+      legacyLoadsSnapshotted = true
+    }
   }
 
   /** Managed snapshot location for a qualified LOAD: lives beside the
@@ -1517,10 +1560,7 @@ object Ddl {
     * mutation is not an append — index/MV maintenance must then squash
     * again before it can cover the replay with plain parquet paths. */
   private def appendState(t: KeyedTable): Option[(String, Seq[String])] = {
-    val lastSquash = t.muts.lastIndexWhere(_.op == "squash")
-    val (root, tail) =
-      if (lastSquash < 0) (t.path, t.muts)
-      else (t.muts(lastSquash).b, t.muts.drop(lastSquash + 1))
+    val (root, tail) = replayRoot(t)
     val snaps = appendOnlySnaps(tail)
     if (snaps.length == tail.length) Some((root, snaps)) else None
   }
@@ -1551,12 +1591,11 @@ object Ddl {
       s"cannot materialize ${t0.name}: a visibility-gated history replays " +
         "per-session; a squash would freeze the current authorizations")
     val out = squashSnapshotPath(t0)
-    rebuild(spark, t0).write.mode(SaveMode.Overwrite).parquet(out)
+    spark.sql(rebuildSql(spark, t0)).write.mode(SaveMode.Overwrite).parquet(out)
     val t = t0.copy(muts = t0.muts :+ Mut("squash", "", out, nextMutTs(t0)))
     catalog.put(t.name.toLowerCase, t)
     persist()
-    if (isQualified(t.name)) replaceQualified(spark, t)
-    else replaceView(spark, t.name, rebuild(spark, t))
+    register(spark, t)
     t
   }
 
@@ -1596,23 +1635,44 @@ object Ddl {
     mv.copy(snapshotPath = out, coveredPaths = covered ++ newPaths)
   }
 
-  /** Create/refresh the persistent view for a qualified table, creating its
-    * database on demand. */
-  private def registerQualified(spark: SparkSession, t: KeyedTable): Unit = {
-    val db = t.name.split('.').head
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
-    spark.sql(s"CREATE OR REPLACE VIEW ${quoted(t.name)} AS ${rebuildSql(spark, t)}")
-  }
-
-  /** Qualified analogue of [[replaceView]]: swap the persistent view while
-    * preserving cache status. */
-  private def replaceQualified(spark: SparkSession, t: KeyedTable): Unit = {
+  /** The registration funnel. A qualified table's PERSISTENT view is the
+    * full replay (a persistent view cannot reference temp state), its
+    * database created on demand. A single-part table's temp view is
+    * `step` applied on top of its live view — each statement costs one
+    * step, never a replay of the whole history — or, with no step, the full
+    * replay. A CACHE'd table stays cached: the old plan is uncached first
+    * (else its data leaks in the cache manager, unreachable by any later
+    * UNCACHE) and whichever plan is registered afterwards is re-cached. */
+  private def register(spark: SparkSession, t: KeyedTable,
+      step: Option[Mut] = None): Unit = {
     val wasCached =
       try spark.catalog.tableExists(t.name) && spark.catalog.isCached(t.name)
-      catch { case _: Exception => false }
+      catch { case _: Exception => false } // missing database on a fresh JVM
     if (wasCached) spark.catalog.uncacheTable(t.name)
-    registerQualified(spark, t)
-    if (wasCached) spark.catalog.cacheTable(t.name)
+    try {
+      if (isQualified(t.name)) {
+        spark.sql(s"CREATE DATABASE IF NOT EXISTS `${t.name.split('.').head}`")
+        spark.sql(s"CREATE OR REPLACE VIEW ${quoted(t.name)} AS " +
+          rebuildSql(spark, t.copy(muts = t.muts ++ step)))
+      } else {
+        val df = spark.sql(step.fold(rebuildSql(spark, t))(m =>
+          stepSql(t, m, spark.table(t.name).columns.toSeq, quoted(t.name))._1))
+        tagBase(df, t)
+        df.createOrReplaceTempView(t.name)
+      }
+    } finally if (wasCached) spark.catalog.cacheTable(t.name)
+  }
+
+  private def unregister(spark: SparkSession, t: KeyedTable): Unit =
+    if (isQualified(t.name)) spark.sql(s"DROP VIEW IF EXISTS ${quoted(t.name)}")
+    else spark.catalog.dropTempView(t.name): Unit
+
+  /** Every statement that logs a mutation ends here: the new state is
+    * registered (analyzing it, so a bad expression fails before anything
+    * is logged), then the mutation is logged. */
+  private def commit(spark: SparkSession, t: KeyedTable, m: Mut): Unit = {
+    register(spark, t, Some(m))
+    logMut(t, m)
   }
 
   /** Executes the DDL: registers the parquet file as a temp view and records
@@ -1620,18 +1680,15 @@ object Ddl {
   def create(spark: SparkSession, ddl: String): KeyedTable = ddl match {
     case CreateRe(name, path, keyList) =>
       val keys = keyList.split(",").map(_.trim).toSeq
-      val df = spark.read.parquet(path)
-      keys.foreach { k =>
-        require(df.columns.exists(_.equalsIgnoreCase(k)),
-          s"key column '$k' not in $path schema")
-      }
       val t = KeyedTable(name, path, keys,
         createdTs = System.currentTimeMillis())
-      if (isQualified(name)) registerQualified(spark, t)
-      else {
-        tagBase(df, t)
-        df.createOrReplaceTempView(name)
-      }
+      // the keys are checked against the registered view, so the parquet
+      // schema is read once; a bad key list leaves no view behind
+      register(spark, t)
+      val cols = spark.table(name).columns
+      try keys.foreach { k =>
+        require(cols.exists(_.equalsIgnoreCase(k)), s"key column '$k' not in $path schema")
+      } catch { case e: IllegalArgumentException => unregister(spark, t); throw e }
       catalog.put(name.toLowerCase, t)
       persist()
       t
@@ -1683,10 +1740,8 @@ object Ddl {
     * 0 = the base parquet, muts.length = the current table. Read-only —
     * nothing is materialized or changed. */
   def asOf(spark: SparkSession, name: String, version: Int): DataFrame = {
-    val t = lookupOrThrow(name)
-    require(version >= 0 && version <= t.muts.length,
-      s"version $version out of range 0..${t.muts.length} for ${t.name}")
-    rebuild(spark, t.copy(muts = t.muts.take(version)))
+    lookupOrThrow(name)
+    spark.sql(viewSqlAsOf(spark, name, version).get)
   }
 
   /** CDC CHANGEFEED between two versions of a keyed table: the row-level
@@ -1926,8 +1981,7 @@ object Ddl {
       rowsSql: String): String = {
     val t = lookupOrThrow(name)
     ensureView(spark, t)
-    val cur = spark.table(t.name)
-    val schema = cur.schema
+    val schema = spark.table(t.name).schema
     val raw = spark.sql(rowsSql)
     // trailing columns added by ADD COLUMN ... DEFAULT may be omitted
     // (the SQL positional rule); their defaults splice in at write time,
@@ -1955,27 +2009,11 @@ object Ddl {
           expr(defaults(f.name.toLowerCase)).cast(f.dataType).as(f.name)): _*)
     val snap = loadSnapshotPath(t)
     rows.write.mode(SaveMode.Overwrite).parquet(snap)
-    if (isQualified(t.name))
-      replaceQualified(spark, t.copy(muts = t.muts :+ Mut("insert", "", snap)))
-    else
-      replaceView(spark, t.name, cur.unionByName(spark.read.parquet(snap)))
-    logMut(t, Mut("insert", "", snap))
+    commit(spark, t, Mut("insert", "", snap))
     t.name
   }
 
   private def quotedCol(name: String): String = s"`$name`"
-
-  /** Replace a table's temp view without orphaning cached plans: if the old
-    * view was CACHE'd, uncache it first (otherwise its cached data leaks in
-    * the cache manager, unreachable by any later UNCACHE), then re-cache the
-    * new plan so a cached table stays cached across ALTER/LOAD. */
-  private def replaceView(spark: SparkSession, name: String, df: DataFrame): Unit = {
-    val wasCached = spark.catalog.tableExists(name) && spark.catalog.isCached(name)
-    if (wasCached) spark.catalog.uncacheTable(name)
-    lookup(name).foreach(t => tagBase(df, t))
-    df.createOrReplaceTempView(name)
-    if (wasCached) spark.catalog.cacheTable(name)
-  }
 
   /** Fresh registration nonce per (table, registered view): the CBO
     * annotation rule (plans.AnalyzeStatsRule) annotates ONLY subtrees whose
@@ -1983,17 +2021,16 @@ object Ddl {
     * identifying "this is the registered view's replay". Frames that merely
     * read the same files never qualify: an independent
     * `spark.read.parquet(samePath)` is untagged (different dataset — the
-    * pre-mutation file), and asOf/rebuild time-travel frames are built
-    * outside the registration funnel, so they stay untagged too. */
+    * pre-mutation file), and `graft.t`/asOf/time-travel frames run the
+    * replay SQL outside the registration funnel, so they stay untagged
+    * too. */
   private val viewNonce = TrieMap.empty[String, String]
   def currentViewNonce(name: String): Option[String] =
     viewNonce.get(name.toLowerCase)
   private def tagBase(df: DataFrame, t: KeyedTable): Unit = {
     // the replay root: the base parquet, or the newest squash snapshot
     // once a REFRESH materialized the log prefix
-    val root = t.muts.reverseIterator
-      .collectFirst { case Mut("squash", _, b, _) => b }.getOrElse(t.path)
-    val base = normPath(root)
+    val base = normPath(replayRoot(t)._1)
     val nonce = s"${t.name.toLowerCase}#${java.util.UUID.randomUUID()}"
     var found = false
     df.queryExecution.analyzed.foreach {
@@ -2011,8 +2048,6 @@ object Ddl {
     if (found) viewNonce.put(t.name.toLowerCase, nonce): Unit
   }
 
-  /** Rebuild a table's DataFrame from its catalog entry: base parquet, then
-    * the mutation log replayed in order — the restart path. */
   /** Session visibility authorizations (HBase `setAuths` analogue);
     * process-scoped like the rest of the session surface here, never
     * persisted. */
@@ -2021,16 +2056,9 @@ object Ddl {
 
   /** Row visible under `auths`? DNF over the label column: some
     * '|'-alternative has all its '&'-atoms authorized; blank/NULL label =
-    * public. Pure higher-order Columns — codegen, no UDF. */
-  private[graft] def visPredicate(label: Column, auths: Seq[String]): Column = {
-    val authArr = typedLit(auths)
-    (label.isNull || trim(label) === "") ||
-      exists(split(label, "\\|"),
-        term => forall(split(term, "&"), a => array_contains(authArr, trim(a))))
-  }
-
-  /** The same predicate as self-contained SQL (for qualified-table view
-    * bodies, which must survive replay from the catalog file alone). */
+    * public. Higher-order SQL functions — codegen, no UDF — and
+    * self-contained, so qualified view bodies survive replay from the
+    * catalog file alone. */
   private def visPredicateSql(labelCol: String, auths: Seq[String]): String = {
     val arr =
       if (auths.isEmpty) "CAST(array() AS ARRAY<STRING>)"
@@ -2040,68 +2068,13 @@ object Ddl {
       s"forall(split(t, '&'), a -> array_contains($arr, trim(a)))))"
   }
 
-  private def rebuild(spark: SparkSession, t: KeyedTable): DataFrame = {
-    val base = spark.read.parquet(t.path)
-    t.muts.foldLeft(base) { (df, m) =>
-      m.op match {
-        case "add"  => df.withColumn(m.a, expr(m.b))
-        case "default" => df.withColumn(m.a, when(lit(false), expr(m.b)))
-        case "drop" => df.drop(m.a)
-        case "rename" => df.withColumnRenamed(m.a, m.b)
-        case "widen" =>
-          df.withColumn(m.a, col(quotedCol(m.a)).cast(m.b))
-        case "load" => df.unionByName(
-          // b = parquet snapshot (qualified tables); empty = replay the CSV
-          if (m.b.nonEmpty) spark.read.parquet(m.b)
-          else readCsvAligned(spark, df.schema, m.a))
-        // INSERT always snapshots (a SELECT tail may reference session
-        // state that no longer exists at replay time; the snapshot does)
-        case "insert" => df.unionByName(spark.read.parquet(m.b))
-        // DELETE keeps rows where the predicate is false OR NULL (SQL
-        // DELETE removes only where it is TRUE)
-        case "delete" => df.filter(!coalesce(expr(m.a), lit(false)))
-        // UPDATE replays as the frozen CASE projection built at statement
-        // time (b = `CASE WHEN pred THEN CAST(expr AS type) ELSE col END`)
-        case "update" => df.withColumn(m.a, expr(m.b))
-        // MERGE replays as the whole-row upsert: snapshot rows win, prior
-        // rows survive only if their key is absent from the snapshot
-        case "merge" =>
-          val s = spark.read.parquet(m.b)
-          s.unionByName(
-            df.join(s.select(t.keys.map(k => col(k)): _*), t.keys, "left_anti"))
-        // generalized merge: output snapshot wins; prior rows survive only
-        // if their key is absent from the dropped-keys snapshot
-        case "merge2" =>
-          spark.read.parquet(m.b).unionByName(
-            df.join(spark.read.parquet(m.a), t.keys, "left_anti"))
-        // visibility gate, evaluated against the CURRENT session auth set
-        // (SET VISIBILITY re-registers every labeled table's view)
-        case "viscol" => df.filter(visPredicate(col(m.a), visAuths))
-        // SQUASH: the replay state at this point was materialized to one
-        // parquet snapshot (REFRESH INDEX/MV on a non-append history) —
-        // the replay restarts from it, dropping the folded prefix. By
-        // construction read(b) == replay(prefix), so the view is unchanged
-        // and earlier versions still reconstruct from the prefix.
-        case "squash" => spark.read.parquet(m.b)
-        case other  => throw new IllegalStateException(s"bad catalog mutation: $other")
-      }
-    }
-  }
-
-  /** Materialize the temp view for a catalog entry if this session does not
-    * have it yet (fresh process reading a persisted catalog). */
+  /** Register the view for a catalog entry if this session does not have
+    * it yet (fresh process reading a persisted catalog). */
   private def ensureView(spark: SparkSession, t: KeyedTable): Unit = {
     val exists =
       try spark.catalog.tableExists(t.name)
       catch { case _: Exception => false } // missing database on fresh JVM
-    if (!exists) {
-      if (isQualified(t.name)) registerQualified(spark, t)
-      else {
-        val df = rebuild(spark, t)
-        tagBase(df, t)
-        df.createOrReplaceTempView(t.name)
-      }
-    }
+    if (!exists) register(spark, t)
   }
 
   private def normPath(p: String): String =
@@ -2174,6 +2147,7 @@ object Ddl {
   def execute(spark: SparkSession, ddl: String): DataFrame = {
     import spark.implicits._
     ensureMvLoaded(spark) // restart path: re-register persisted MVs + views
+    snapshotLegacyLoads(spark)
     def status(op: String, table: String): DataFrame =
       spark.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row(op, table)),
@@ -2184,9 +2158,7 @@ object Ddl {
       case DropRe(ifExists, name) =>
         lookup(name) match {
           case Some(t) =>
-            if (isQualified(t.name))
-              spark.sql(s"DROP VIEW IF EXISTS ${quoted(t.name)}")
-            else spark.catalog.dropTempView(t.name)
+            unregister(spark, t)
             catalog.remove(t.name.toLowerCase)
             persist()
             status("DROP", t.name)
@@ -2199,40 +2171,22 @@ object Ddl {
       case AlterDefaultRe(name, colName, sqlExpr) =>
         val t = lookupOrThrow(name)
         ensureView(spark, t)
-        val df = spark.table(t.name)
-        require(!hasColumn(df.columns, colName),
+        require(!hasColumn(spark.table(t.name).columns, colName),
           s"column '$colName' already exists in ${t.name}")
         // the default must resolve WITHOUT the table's columns (it is
         // re-evaluated at INSERT time, where no prior row exists)
         spark.sql(s"SELECT ($sqlExpr) AS `$colName`").schema
-        if (isQualified(t.name))
-          replaceQualified(spark, t.copy(muts =
-            t.muts :+ Mut("default", colName, sqlExpr)))
-        else replaceView(spark, t.name,
-          df.withColumn(colName, when(lit(false), expr(sqlExpr))))
-        logMut(t, Mut("default", colName, sqlExpr))
+        commit(spark, t, Mut("default", colName, sqlExpr))
         status("ALTER_ADD_DEFAULT", t.name)
       case AlterAddRe(name, colName, sqlExpr) =>
         val t = lookupOrThrow(name)
         ensureView(spark, t)
-        val df = spark.table(t.name)
-        require(!hasColumn(df.columns, colName),
+        require(!hasColumn(spark.table(t.name).columns, colName),
           s"column '$colName' already exists in ${t.name}")
-        if (isQualified(t.name)) {
-          // analyze eagerly so a bad expression fails HERE, not on the
-          // first SELECT against the rewritten view — and analyze it in
-          // the SELF-CONTAINED replay context (base parquet + mutation
-          // log), not against the live session table: an expression that
-          // only resolves via session-scoped objects must not validate
-          // (CREATE VIEW's own temp-reference guard backstops this for
-          // temp views/functions, but this check also catches anything
-          // resolvable live yet absent at restart replay)
-          spark.sql(
-            s"SELECT *, ($sqlExpr) AS `$colName` FROM ( ${rebuildSql(spark, t)} )").schema
-          replaceQualified(spark, t.copy(muts =
-            t.muts :+ Mut("add", colName, sqlExpr)))
-        } else replaceView(spark, t.name, df.withColumn(colName, expr(sqlExpr)))
-        logMut(t, Mut("add", colName, sqlExpr))
+        // a qualified table analyzes the expression in its SELF-CONTAINED
+        // replay (CREATE VIEW refuses temp views/functions), so one that
+        // only resolves through session state fails here, not at restart
+        commit(spark, t, Mut("add", colName, sqlExpr))
         status("ALTER_ADD", t.name)
       case AlterVisRe(name, colName) =>
         val t = lookupOrThrow(name)
@@ -2241,10 +2195,7 @@ object Ddl {
           s"column '$colName' not in ${t.name}")
         require(!t.muts.exists(_.op == "viscol"),
           s"${t.name} already has a visibility column")
-        val mutated = t.copy(muts = t.muts :+ Mut("viscol", colName, ""))
-        if (isQualified(t.name)) replaceQualified(spark, mutated)
-        else replaceView(spark, t.name, rebuild(spark, mutated))
-        logMut(t, Mut("viscol", colName, ""))
+        commit(spark, t, Mut("viscol", colName, ""))
         status("ALTER_VISIBILITY", t.name)
       case SetVisRe(none, labels) =>
         visAuths =
@@ -2254,10 +2205,8 @@ object Ddl {
             .filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
         // every labeled table's view re-registers under the new auth set
         ensureLoaded()
-        catalog.values.filter(_.muts.exists(_.op == "viscol")).foreach { vt =>
-          if (isQualified(vt.name)) replaceQualified(spark, vt)
-          else replaceView(spark, vt.name, rebuild(spark, vt))
-        }
+        catalog.values.filter(_.muts.exists(_.op == "viscol"))
+          .foreach(register(spark, _))
         status("SET_VISIBILITY",
           if (visAuths.isEmpty) "none" else visAuths.mkString(","))
       case AlterDropRe(name, colName) =>
@@ -2267,13 +2216,9 @@ object Ddl {
           s"cannot drop key column '$colName' of ${t.name}")
         require(!t.muts.exists(m => m.op == "viscol" && m.a.equalsIgnoreCase(colName)),
           s"cannot drop visibility column '$colName' of ${t.name}")
-        val df = spark.table(t.name)
-        require(hasColumn(df.columns, colName),
+        require(hasColumn(spark.table(t.name).columns, colName),
           s"column '$colName' not in ${t.name}")
-        if (isQualified(t.name))
-          replaceQualified(spark, t.copy(muts = t.muts :+ Mut("drop", colName, "")))
-        else replaceView(spark, t.name, df.drop(colName))
-        logMut(t, Mut("drop", colName, ""))
+        commit(spark, t, Mut("drop", colName, ""))
         status("ALTER_DROP", t.name)
       case AlterKeyedTypeRe(name, colName, typeStr)
           if lookup(name).isDefined =>
@@ -2285,8 +2230,7 @@ object Ddl {
         require(!t.muts.exists(m =>
             m.op == "viscol" && m.a.equalsIgnoreCase(colName)),
           s"cannot change the type of visibility column '$colName' of ${t.name}")
-        val wdf = spark.table(t.name)
-        val wf = wdf.schema.fields.find(_.name.equalsIgnoreCase(colName))
+        val wf = spark.table(t.name).schema.fields.find(_.name.equalsIgnoreCase(colName))
           .getOrElse(throw new IllegalArgumentException(
             s"column '$colName' not in ${t.name}"))
         val toType = org.apache.spark.sql.types.DataType.fromDDL(typeStr)
@@ -2296,13 +2240,7 @@ object Ddl {
             s"from ${wf.dataType.simpleString} — only lossless widening " +
             "promotions are supported (committed values must re-read " +
             "exactly)")
-        val cast = wdf.withColumn(wf.name,
-          col(quotedCol(wf.name)).cast(toType))
-        if (isQualified(t.name))
-          replaceQualified(spark,
-            t.copy(muts = t.muts :+ Mut("widen", wf.name, typeStr.trim)))
-        else replaceView(spark, t.name, cast)
-        logMut(t, Mut("widen", wf.name, typeStr.trim))
+        commit(spark, t, Mut("widen", wf.name, typeStr.trim))
         status("ALTER_TYPE", s"${t.name} ($colName -> ${toType.simpleString})")
       case AlterRenameRe(name, from, to) =>
         val t = lookupOrThrow(name)
@@ -2313,16 +2251,10 @@ object Ddl {
         require(!t.muts.exists(m =>
             m.op == "viscol" && m.a.equalsIgnoreCase(from)),
           s"cannot rename visibility column '$from' of ${t.name}")
-        val rdf = spark.table(t.name)
-        require(hasColumn(rdf.columns, from),
-          s"column '$from' not in ${t.name}")
-        require(!hasColumn(rdf.columns, to),
-          s"column '$to' already exists in ${t.name}")
-        if (isQualified(t.name))
-          replaceQualified(spark,
-            t.copy(muts = t.muts :+ Mut("rename", from, to)))
-        else replaceView(spark, t.name, rdf.withColumnRenamed(from, to))
-        logMut(t, Mut("rename", from, to))
+        val cols = spark.table(t.name).columns
+        require(hasColumn(cols, from), s"column '$from' not in ${t.name}")
+        require(!hasColumn(cols, to), s"column '$to' already exists in ${t.name}")
+        commit(spark, t, Mut("rename", from, to))
         status("ALTER_RENAME", t.name)
       case CacheRe(name) =>
         val t = lookupOrThrow(name)
@@ -2338,23 +2270,15 @@ object Ddl {
         // Astro's bulk-load statement (LOAD DATA INPATH ... INTO TABLE t
         // [ref*: per SURVEY.md §2 A7 — mount empty]): CSV rows appended to
         // the keyed table under its CURRENT schema, columns matched by
-        // header NAME (readCsvAligned). Single-part tables stay a
-        // declarative view rewrite (nothing materializes until read);
-        // qualified tables materialize the aligned CSV to a managed parquet
-        // snapshot so the persistent view's SQL stays self-contained.
+        // header NAME (readCsvAligned). The aligned rows are written to a
+        // managed parquet snapshot now, as INSERT does, so every replay
+        // (restart, `graft.t`, time travel) reads parquet, never the CSV.
         val t = lookupOrThrow(name)
         ensureView(spark, t)
-        val df = spark.table(t.name)
-        if (isQualified(t.name)) {
-          val snap = loadSnapshotPath(t)
-          readCsvAligned(spark, df.schema, path)
-            .write.mode(SaveMode.Overwrite).parquet(snap)
-          replaceQualified(spark, t.copy(muts = t.muts :+ Mut("load", path, snap)))
-          logMut(t, Mut("load", path, snap))
-        } else {
-          replaceView(spark, t.name, df.unionByName(readCsvAligned(spark, df.schema, path)))
-          logMut(t, Mut("load", path, ""))
-        }
+        val snap = loadSnapshotPath(t)
+        readCsvAligned(spark, spark.table(t.name).schema, path)
+          .write.mode(SaveMode.Overwrite).parquet(snap)
+        commit(spark, t, Mut("load", path, snap))
         status("LOAD", t.name)
       case InsertValuesRe(name, valuesTail) =>
         // `VALUES (...), (...)` is a bare inline table in Spark SQL
@@ -2364,34 +2288,21 @@ object Ddl {
       case DeleteRe(name, pred) =>
         val t = lookupOrThrow(name)
         ensureView(spark, t)
-        val df = spark.table(t.name)
-        val kept = df.filter(!coalesce(expr(pred), lit(false)))
-        kept.schema // eager: a bad predicate fails HERE, not on first read
-        if (isQualified(t.name))
-          replaceQualified(spark, t.copy(muts = t.muts :+ Mut("delete", pred, "")))
-        else replaceView(spark, t.name, kept)
-        logMut(t, Mut("delete", pred, ""))
+        commit(spark, t, Mut("delete", pred, ""))
         status("DELETE", t.name)
       case UpdateRe(name, colName, valueExpr, pred) =>
         val t = lookupOrThrow(name)
         ensureView(spark, t)
-        val df = spark.table(t.name)
-        require(hasColumn(df.columns, colName),
-          s"column '$colName' not in ${t.name}")
+        val field = spark.table(t.name).schema.fields
+          .find(_.name.equalsIgnoreCase(colName)).getOrElse(
+            throw new IllegalArgumentException(s"column '$colName' not in ${t.name}"))
         require(!t.keys.exists(_.equalsIgnoreCase(colName)),
           s"cannot update key column '$colName' of ${t.name}")
         // freeze the rewrite at statement time: CAST pins the column's
         // current type so the CASE branches can never silently widen it
-        val dt = df.schema.fields
-          .find(_.name.equalsIgnoreCase(colName)).get.dataType
-        val caseExpr =
-          s"CASE WHEN ($pred) THEN CAST(($valueExpr) AS ${dt.sql}) ELSE `$colName` END"
-        val updated = df.withColumn(colName, expr(caseExpr))
-        updated.schema // eager validation, as for DELETE
-        if (isQualified(t.name))
-          replaceQualified(spark, t.copy(muts = t.muts :+ Mut("update", colName, caseExpr)))
-        else replaceView(spark, t.name, updated)
-        logMut(t, Mut("update", colName, caseExpr))
+        val caseExpr = s"CASE WHEN ($pred) THEN CAST(($valueExpr) AS " +
+          s"${field.dataType.sql}) ELSE `$colName` END"
+        commit(spark, t, Mut("update", colName, caseExpr))
         status("UPDATE", t.name)
       case ShowIndexesRe(_*) =>
         ensureLoaded()
@@ -2607,8 +2518,7 @@ object Ddl {
         val restored = t.copy(muts = t.muts.take(v))
         catalog.put(restored.name.toLowerCase, restored)
         persist()
-        if (isQualified(restored.name)) replaceQualified(spark, restored)
-        else replaceView(spark, restored.name, rebuild(spark, restored))
+        register(spark, restored)
         status("RESTORE", s"${t.name} (timestamp -> version $v)")
       case CloneRe(tgt, src, verStr, refStr, loc) =>
         // zero-copy branch: one manifest write references the source's
@@ -2649,8 +2559,7 @@ object Ddl {
         val restored = t.copy(muts = t.muts.take(v))
         catalog.put(restored.name.toLowerCase, restored)
         persist()
-        if (isQualified(restored.name)) replaceQualified(spark, restored)
-        else replaceView(spark, restored.name, rebuild(spark, restored))
+        register(spark, restored)
         status("RESTORE", t.name)
       case CreateMvRe(mvName, tName, groupsCsv, sumsCsv)
           if lookup(tName).isEmpty && kvTableFor(tName).isDefined =>
@@ -2906,14 +2815,7 @@ object Ddl {
               s"$k=${dupKeys.head.get(i)}" }.mkString(", ")})")
         val snap = loadSnapshotPath(t)
         aligned.write.mode(SaveMode.Overwrite).parquet(snap)
-        val snapDf = spark.read.parquet(snap)
-        val merged = snapDf.unionByName(
-          cur.join(snapDf.select(t.keys.map(k => col(k)): _*), t.keys, "left_anti"))
-        merged.schema // eager validation, as for DELETE/UPDATE
-        if (isQualified(t.name))
-          replaceQualified(spark, t.copy(muts = t.muts :+ Mut("merge", onCond, snap)))
-        else replaceView(spark, t.name, merged)
-        logMut(t, Mut("merge", onCond, snap))
+        commit(spark, t, Mut("merge", onCond, snap))
         status("MERGE", t.name)
       case MergeGenRe(name, tgtAliasOpt, srcSqlParen, srcTable, alias, onCond,
           clausesText) =>
@@ -3096,15 +2998,7 @@ object Ddl {
         val snapDrop = snapOut + "_dropkeys"
         outDf.write.mode(SaveMode.Overwrite).parquet(snapOut)
         dropDf.write.mode(SaveMode.Overwrite).parquet(snapDrop)
-        val outR = spark.read.parquet(snapOut)
-        val mergedGen = outR.unionByName(
-          cur.join(spark.read.parquet(snapDrop), t.keys, "left_anti"))
-        mergedGen.schema // eager validation, as for DELETE/UPDATE
-        if (isQualified(t.name))
-          replaceQualified(spark,
-            t.copy(muts = t.muts :+ Mut("merge2", snapDrop, snapOut)))
-        else replaceView(spark, t.name, mergedGen)
-        logMut(t, Mut("merge2", snapDrop, snapOut))
+        commit(spark, t, Mut("merge2", snapDrop, snapOut))
         status("MERGE", t.name)
       case ViewRe(name, sql) =>
         require(lookup(name).isEmpty,
@@ -4092,7 +3986,7 @@ object Ddl {
     * hand-written per query. Bounds may cover a prefix of the key columns. */
   def keyRangeScan(spark: SparkSession, table: String,
       lower: Seq[Any], upper: Seq[Any]): DataFrame = {
-    val t = lookup(table).getOrElse(
+    val t = replayable(spark, table).getOrElse(
       throw new IllegalArgumentException(s"unknown keyed table: $table"))
     ensureView(spark, t)
     require(lower.length <= t.keys.length && upper.length <= t.keys.length,

@@ -43,13 +43,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   */
 object StatsAnnotation {
   /** Positive identification of replay plans: Ddl's registration funnel
-    * (create / ensureView / replaceView) tags the registered view's BASE
-    * relation with a fresh per-registration NONCE. The annotation rule
-    * requires the table's CURRENT nonce — an independent
-    * `spark.read.parquet(samePath)` is a DIFFERENT dataset (the
-    * pre-mutation file) and asOf/rebuild time-travel frames are built
-    * outside the funnel, so neither ever inherits the table's
-    * post-mutation statistics. Tags survive Catalyst's copy-on-transform
+    * (`Ddl.register`, behind CREATE, every logged statement and restart
+    * replay) tags the registered view's BASE relation with a fresh
+    * per-registration NONCE. The annotation rule requires the table's
+    * CURRENT nonce — an independent `spark.read.parquet(samePath)` is a
+    * DIFFERENT dataset (the pre-mutation file), and `graft.t`, asOf and
+    * time-travel frames run the replay SQL outside the funnel, so neither
+    * ever inherits the table's post-mutation statistics. Tags survive Catalyst's copy-on-transform
     * (makeCopy preserves them). */
   val KeyedTableTag: org.apache.spark.sql.catalyst.trees.TreeNodeTag[String] =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[String]("graft.keyed.table")

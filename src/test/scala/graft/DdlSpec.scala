@@ -1179,6 +1179,76 @@ class DdlSpec extends SparkSpec {
     spark.sql("DROP TABLE load_rev")
   }
 
+  test("LOAD into a single-part table: bare name, graft.t and time travel agree") {
+    if (ops.Ddl.lookup("load_p").isDefined) spark.sql("DROP TABLE load_p")
+    spark.sql(
+      s"CREATE TABLE load_p MAPPED BY '${sf("sf0.001")}/region.parquet' KEYS (r_regionkey)")
+    val dir = java.nio.file.Files.createTempDirectory("graft_load_p").toString
+    spark.table("load_p").orderBy(col("r_regionkey")).limit(2)
+      .write.mode("overwrite").option("header", "true").csv(dir)
+    spark.sql(s"LOAD DATA INPATH '$dir' INTO TABLE load_p")
+    def rows(q: String) =
+      spark.sql(q).collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+    val bare = rows("SELECT * FROM load_p")
+    assert(bare.length == 7)
+    val ts = ops.Ddl.lookup("load_p").get.muts.last.ts
+    assert(rows("SELECT * FROM graft.load_p") == bare)
+    assert(rows("SELECT * FROM graft.load_p VERSION AS OF 1") == bare)
+    assert(rows(s"SELECT * FROM graft.load_p TIMESTAMP AS OF '$ts'") == bare)
+    assert(ops.Ddl.asOf(spark, "load_p", 1).count() == 7)
+    spark.sql("DROP TABLE load_p")
+  }
+
+  test("a persisted LOAD entry without a snapshot gets one on first replay") {
+    // catalogs written before single-part LOAD snapshotted its rows log
+    // Mut("load", csv, ""); the first replay writes the CSV's snapshot,
+    // aligned to the schema the table had just before the LOAD (here with
+    // a computed column), and persists it — the CSV is never read again
+    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_load")
+    val cat = dir.resolve("graft_catalog.json")
+    val base = s"${sf("sf0.001")}/region.parquet"
+    val csv = dir.resolve("csv").toString
+    spark.read.parquet(base).where("r_regionkey < 2")
+      .selectExpr("r_name", "r_regionkey * 2 AS k2", "r_regionkey", "'extra' AS junk")
+      .write.option("header", "true").csv(csv)
+    java.nio.file.Files.writeString(cat,
+      s"""{"seq": 1, "tables": [{"name": "legacy_p", "path": "$base",
+         |  "keys": ["r_regionkey"], "created": 1000, "stats": [], "muts": [
+         |    {"op": "add", "a": "k2", "b": "r_regionkey * 2", "ts": "1001"},
+         |    {"op": "load", "a": "$csv", "b": "", "ts": "1002"},
+         |    {"op": "add", "a": "k3", "b": "k2 + 1", "ts": "1003"}]}],
+         | "mvs": [], "dsv2": [], "indexes": []}""".stripMargin)
+    val prev = sys.props.get("graft.catalog.path")
+    sys.props("graft.catalog.path") = cat.toString
+    def rows(q: String) =
+      spark.sql(q).collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+    val want = rows(s"SELECT *, r_regionkey * 2 AS k2, r_regionkey * 2 + 1 AS k3 " +
+      s"FROM parquet.`$base` UNION ALL SELECT *, r_regionkey * 2, r_regionkey * 2 + 1 " +
+      s"FROM parquet.`$base` WHERE r_regionkey < 2")
+    try {
+      ops.Ddl.resetForTest()
+      if (spark.catalog.tableExists("legacy_p")) spark.catalog.dropTempView("legacy_p")
+      assert(rows("SELECT * FROM graft.legacy_p") == want)
+      val snap = ops.Ddl.lookup("legacy_p").get.muts(1).b
+      assert(snap.nonEmpty && java.nio.file.Files.exists(java.nio.file.Paths.get(snap)))
+      // persisted: a restart reads the snapshot, not the (now deleted) CSV
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(csv))
+      ops.Ddl.resetForTest()
+      assert(ops.Ddl.lookup("legacy_p").get.muts(1).b == snap)
+      spark.sql("DESCRIBE legacy_p").collect() // registers the bare view
+      assert(rows("SELECT * FROM legacy_p") == want)
+      assert(rows("SELECT * FROM graft.legacy_p VERSION AS OF 2") ==
+        rows(s"SELECT r_regionkey, r_name, k2 FROM graft.legacy_p"))
+      spark.sql("DROP TABLE legacy_p")
+    } finally {
+      prev match {
+        case Some(v) => sys.props("graft.catalog.path") = v
+        case None    => sys.props.remove("graft.catalog.path")
+      }
+      ops.Ddl.resetForTest()
+    }
+  }
+
   test("ANALYZE stats persist across a restart and route through spark.sql") {
     if (ops.Ddl.lookup("an_t").isDefined) spark.sql("DROP TABLE an_t")
     spark.sql(

@@ -300,4 +300,114 @@ class PropertySpec extends SparkSpec {
       spark.sql(s"DROP TABLE graft.cmprop.t$seq")
     }
   }
+
+  test("keyed tables: the live view, graft.t, VERSION AS OF and asOf agree after every step") {
+    // a single-part table's view takes each statement's step on top of the
+    // live view; graft.t, VERSION AS OF, asOf and a qualified twin's view
+    // replay the whole mutation log. A seeded walk over every logged
+    // statement kind checks, after EVERY step, that all of them hold the
+    // same schema and the same multiset of rows
+    val dir = java.nio.file.Files.createTempDirectory("graft_replay_prop")
+    val base = dir.resolve("base").toString
+    spark.range(6).selectExpr("CAST(id AS INT) AS k", "CAST(id * 10 AS INT) AS v",
+      "concat('s', id) AS s").write.parquet(base)
+    val prev = sys.props.get("graft.catalog.path")
+    sys.props("graft.catalog.path") = dir.resolve("graft_catalog.json").toString
+    val r = new scala.util.Random(11)
+    def state(df: org.apache.spark.sql.DataFrame) =
+      (df.schema.map(f => (f.name, f.dataType)),
+        df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq)
+    try {
+      ops.Ddl.resetForTest()
+      // every statement kind once, plus one drawn again: two walks of six
+      val kinds = r.shuffle((0 until 11).toVector :+ r.nextInt(11))
+      kinds.grouped(6).zipWithIndex.foreach { case (walk, w) =>
+        val tables = Seq(s"replay_p$w", s"replaydb.replay_q$w")
+        tables.foreach(t => spark.sql(s"CREATE TABLE $t MAPPED BY '$base' KEYS (k)"))
+        var cols = Vector("v" -> "INT", "s" -> "STRING") // non-key, in order
+        var fresh = 100 // never-used keys and column suffixes
+        def next(): Int = { fresh += 1; fresh }
+        def value(tpe: String) =
+          if (tpe == "STRING") s"'x${r.nextInt(50)}'" else r.nextInt(1000).toString
+        def row(k: Int) = (k.toString +: cols.map(c => value(c._2))).mkString(", ")
+        walk.foreach { kind =>
+          val ints = cols.filter(_._2 != "STRING").map(_._1)
+          // a kind with nothing to act on inserts instead
+          val stmt: String => String = kind match {
+            case 1 if ints.nonEmpty =>
+              val c = ints(r.nextInt(ints.length)); val n = r.nextInt(9); val m = r.nextInt(2)
+              t => s"UPDATE $t SET $c = $c + $n WHERE k % 2 = $m"
+            case 2 =>
+              val m = r.nextInt(5)
+              t => s"DELETE FROM $t WHERE k % 5 = $m"
+            case 3 =>
+              val named = ("k" -> "INT") +: cols
+              def sel(k: Int) = (k.toString +: cols.map(c => value(c._2)))
+                .zip(named).map { case (v, (c, _)) => s"$v AS `$c`" }.mkString(", ")
+              val src = s"SELECT ${sel(r.nextInt(6))} UNION ALL SELECT ${sel(next())}"
+              t => s"MERGE INTO $t USING ($src) s ON s.k = k " +
+                "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+            case 4 =>
+              val src = s"SELECT ${r.nextInt(6)} AS k, ${r.nextInt(1000)} AS n " +
+                s"UNION ALL SELECT ${next()}, ${r.nextInt(1000)}"
+              val m = r.nextInt(7)
+              val clauses =
+                if (ints.isEmpty) "WHEN MATCHED THEN DELETE " +
+                  "WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k)"
+                else s"WHEN MATCHED THEN UPDATE SET ${ints.head} = s.n " +
+                  s"WHEN NOT MATCHED THEN INSERT (k, ${ints.head}) VALUES (s.k, s.n)"
+              t => s"MERGE INTO $t USING ($src) s ON s.k = k $clauses " +
+                s"WHEN NOT MATCHED BY SOURCE AND k % 7 = $m THEN DELETE"
+            case 5 =>
+              val c = s"a${next()}"; val n = r.nextInt(9)
+              cols :+= c -> "INT"
+              t => s"ALTER TABLE $t ADD COLUMN $c AS k * 2 + $n"
+            case 6 =>
+              val c = s"d${next()}"; val n = r.nextInt(9)
+              cols :+= c -> "INT"
+              t => s"ALTER TABLE $t ADD COLUMN $c DEFAULT $n"
+            case 7 if cols.length > 1 =>
+              val c = cols(r.nextInt(cols.length))
+              cols = cols.filterNot(_ == c)
+              t => s"ALTER TABLE $t DROP COLUMN ${c._1}"
+            case 8 if cols.nonEmpty =>
+              val i = r.nextInt(cols.length); val (c, tpe) = cols(i); val to = s"r${next()}"
+              cols = cols.updated(i, to -> tpe)
+              t => s"ALTER TABLE $t RENAME COLUMN $c TO $to"
+            case 9 if cols.exists(_._2 == "INT") =>
+              val i = cols.indexWhere(_._2 == "INT"); val c = cols(i)._1
+              cols = cols.updated(i, c -> "BIGINT")
+              t => s"ALTER TABLE $t ALTER COLUMN $c TYPE BIGINT"
+            case 10 =>
+              // header-aligned: the CSV lists the columns in reverse order
+              val csv = dir.resolve(s"csv_${next()}").toString
+              val names = "k" +: cols.map(_._1)
+              spark.sql(s"SELECT ${row(next())} UNION ALL SELECT ${row(next())}")
+                .toDF(names: _*).select(names.reverse.map(org.apache.spark.sql.functions.col): _*)
+                .write.option("header", "true").csv(csv)
+              t => s"LOAD DATA INPATH '$csv' INTO TABLE $t"
+            case _ =>
+              val vals = s"(${row(next())}), (${row(next())})"
+              t => s"INSERT INTO $t VALUES $vals"
+          }
+          val states = tables.flatMap { t =>
+            spark.sql(stmt(t))
+            val n = ops.Ddl.lookup(t).get.muts.length
+            Seq(spark.table(t), spark.sql(s"SELECT * FROM graft.$t"),
+              spark.sql(s"SELECT * FROM graft.$t VERSION AS OF $n"),
+              ops.Ddl.asOf(spark, t, n)).map(state)
+          }
+          assert(states.distinct.size == 1,
+            s"walk $w diverged after '${stmt(tables.head)}': $states")
+        }
+        tables.foreach(t => spark.sql(s"DROP TABLE $t"))
+      }
+    } finally {
+      prev match {
+        case Some(v) => sys.props("graft.catalog.path") = v
+        case None    => sys.props.remove("graft.catalog.path")
+      }
+      ops.Ddl.resetForTest()
+    }
+  }
 }

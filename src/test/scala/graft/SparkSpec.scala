@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (mirrors the harness config:
-  * UTC, nanosAsLong for the events table, small shuffle parallelism). */
+/** Shared local session for all suites: the mains' own session
+  * ([[GraftSession]]) on 4 cores. */
 trait SparkSpec extends AnyFunSuite {
   // force the companion's catalog-path isolation at suite CONSTRUCTION: a
   // test whose first statement touches ops.Ddl (lookup/execute guards)
@@ -29,19 +29,7 @@ object SparkSpec {
   val init: Unit = ()
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // Deployment-shaped session: custom functions + the MAPPED BY SQL
-      // parser installed the way a cluster job would (spark.sql.extensions).
-      .withExtensions(new graft.functions.GraftExtensions)
-      // Multipart-identifier resolution for graft-managed tables/views
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
