@@ -15,10 +15,13 @@ import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, IntegerType, 
   * sound [ref*: …/hbase/HBaseSQLParser.scala, HBaseCatalog.scala — mount
   * empty, public-knowledge citation per SURVEY.md §0].
   *
-  * Spark-native equivalent: a registered parquet-backed view plus key-column
-  * metadata, and a generic composite-key range predicate builder that emits
-  * the same Or-tree `keyrange_scan` writes by hand — fully pushable to the
-  * parquet scan (PushedFilters), which is what stands in for region pruning.
+  * Spark-native equivalent: each MAPPED BY table is stored in graft_kv —
+  * one internal kv catalog table (`graft.__keyed.<name>`, merge-on-read,
+  * an epoch per commit, rows clustered by the keys) bulk-loaded from the
+  * base parquet — plus key-column metadata and a generic composite-key
+  * range predicate builder that emits the same Or-tree `keyrange_scan`
+  * writes by hand, pushed into the kv scan's manifest pruning (the stand-in
+  * for region pruning).
   *
   * Grammar (the reference's A8 statement set, re-expressed):
   *   CREATE TABLE <name> MAPPED BY '<path>' KEYS (<k1>[, <k2> ...])
@@ -35,55 +38,61 @@ import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, IntegerType, 
   *   UPDATE <name> SET <col> = <expr> WHERE <pred>
   *   ANALYZE TABLE <name> COMPUTE STATISTICS [FOR [ALL] COLUMNS [a, b]]
   *   SHOW STATS <name>
-  * ONE REPLAY: each logged mutation means exactly one SQL step
-  * ([[stepSql]]: a SELECT over the previous state). The full replay
-  * ([[rebuildSql]]) folds those steps over the base parquet; it is
-  * self-contained SQL, so it serves `graft.t`, `VERSION`/`TIMESTAMP AS OF`,
-  * [[asOf]], restart replay and the catalog plugin's views alike. A
-  * statement goes through one funnel ([[commit]]): a single-part table's
-  * temp view takes the new step on top of its live view (one step per
-  * statement, not a replay of the whole history), while a qualified table
-  * (`db.t`, one qualifier; temp views cannot hold multipart names)
-  * re-registers its PERSISTENT session-catalog view from the full replay,
-  * which must not reference temp state. The graft catalog keys on the
-  * lowercased full name; the database is created on demand. Rows a
-  * statement brings in (INSERT, LOAD DATA's header-aligned CSV, MERGE
-  * sources) are written to managed parquet snapshots under the warehouse
-  * at statement time, so every replay reads parquet only.
+  * ONE TABLE ENGINE: every statement keeps its grammar and validation here
+  * and then runs as one ordinary Spark statement on the store (an append,
+  * DELETE/UPDATE/MERGE, a kv ALTER), and is logged with the kv epoch it
+  * ended at. Version n is the state after the n-th logged statement: it
+  * reads the store `VERSION AS OF` that epoch, with the columns the log
+  * says version n had ([[readSql]]), which serves `graft.t`,
+  * `VERSION`/`TIMESTAMP AS OF`, [[asOf]] and the catalog plugin's views
+  * alike. A single-part table's bare name is a temp view over the current
+  * version; a qualified table (`db.t`, one qualifier; temp views cannot
+  * hold multipart names) is a PERSISTENT session-catalog view with the
+  * same body. The graft catalog keys on the lowercased full name; the
+  * database is created on demand.
   *
   * PERSISTENCE: Astro's catalog survived process restart (table metadata
   * lived in an HBase metadata table [ref*: …/hbase/HBaseCatalog.scala —
   * mount empty]). Graft mirrors that: every DDL mutation serializes the
-  * catalog — base path, key columns, and the CHRONOLOGICAL mutation log
-  * (ALTER, LOAD, DML) — to `spark-warehouse/graft_catalog.json`
-  * (override: -Dgraft.catalog.path). A new JVM lazily reloads the file and
-  * re-registers each table's view on first touch by REPLAYING the
-  * mutation log over the base parquet, so a restarted session sees the same
-  * schema and data the old one did, computed columns and loaded CSVs
-  * included. The file is tiny (metadata only — no data is copied), so the
-  * write-per-mutation is driver-side O(tables), never a Spark job.
+  * catalog — base path, key columns, store directory and the
+  * CHRONOLOGICAL mutation log (ALTER, LOAD, DML) — to
+  * `spark-warehouse/graft_catalog.json` (override: -Dgraft.catalog.path);
+  * the rows live in the store beside it. A new JVM lazily reloads the
+  * file and re-registers each table's view on first touch. The file is
+  * tiny (metadata only), so the write-per-mutation is driver-side
+  * O(tables), never a Spark job.
   */
 object Ddl {
 
-  /** One replayable mutation: op ∈ add (col, expr) | drop (col, -) |
-    * load (csv path, snapshot) | insert (-, snapshot) |
-    * delete (pred, -) | update (col, frozen CASE expr). Kept as strings so
-    * the catalog file stays a flat JSON list and replay is exactly the
-    * statement the user ran. */
-  /** `ts`: wall-clock millis stamped when the mutation was logged —
-    * strictly monotonic per table (max(now, prior+1)), the same commit
-    * clock the kv manifest records per epoch, so `TIMESTAMP AS OF`
-    * resolves on keyed tables by the identical prefix rule. 0 = logged
-    * before commit clocks existed (legacy catalogs): such histories
-    * refuse timestamp reads rather than inventing an instant. */
-  final case class Mut(op: String, a: String, b: String, ts: Long = 0L)
+  /** One logged statement: op ∈ add (col, expr) | default (col, expr) |
+    * drop (col, -) | rename (from, to) | widen (col, type) | load (csv
+    * path, -) | insert | delete (pred, -) | update (col, frozen CASE
+    * expr) | merge / merge2 (ON condition, -) | viscol (col, -); squash
+    * entries survive only in migrated histories. Kept as strings so the
+    * catalog file stays a flat JSON list and SHOW VERSIONS shows the
+    * statement the user ran. `ts`: wall-clock millis stamped when the
+    * mutation was logged — strictly monotonic per table (max(now,
+    * prior+1)), the same commit clock the kv manifest records per epoch,
+    * so `TIMESTAMP AS OF` resolves on keyed tables by the identical prefix
+    * rule. 0 = logged before commit clocks existed (legacy catalogs): such
+    * histories refuse timestamp reads rather than inventing an instant.
+    * `epoch`: the kv epoch the table's store was at when the entry was
+    * logged, i.e. the boundary state `VERSION AS OF` this version reads. */
+  final case class Mut(op: String, a: String, b: String, ts: Long = 0L,
+      epoch: Long = -1L)
 
   final case class KeyedTable(name: String, path: String, keys: Seq[String],
       muts: Seq[Mut] = Nil, stats: Seq[(String, String)] = Nil,
       // CREATE-time commit clock (version 0 = base): a TIMESTAMP AS OF
       // before this instant names a state that never existed — refuse,
       // exactly the kv pre-first-commit rule. 0 = legacy (unknown).
-      createdTs: Long = 0L)
+      createdTs: Long = 0L,
+      // data directory of the graft_kv table holding the rows; "" = an
+      // entry written before keyed tables were stored in kv, migrated on
+      // first touch ([[migrateLegacy]])
+      store: String = "",
+      // kv epoch of version 0, the bulk-loaded base (-1: no rows)
+      baseEpoch: Long = -1L)
 
   /** A DSv2 connector table registered in the graft TableCatalog plugin
     * (sources.GraftCatalog): multipart name under the `graft` catalog →
@@ -108,7 +117,20 @@ object Ddl {
   private val indexDefs = TrieMap.empty[String, graft.plans.IndexDef]
   @volatile private var loadedFromDisk = false
   @volatile private var mvViewsReplayed = false
-  @volatile private var legacyLoadsSnapshotted = false
+  @volatile private var legacyMigrated = false
+  /** The thread running [[migrateLegacy]]: its statements re-enter the
+    * parser, and so the migration, which must then return at once. */
+  @volatile private var migratingThread: Thread = null
+  /** Legacy keyed tables whose migration into a kv store failed in this
+    * process: name → cause. */
+  private val migrationFailures = TrieMap.empty[String, String]
+  /** Index and MV definitions written before keyed tables were stored in
+    * kv (no `kvVersion`; their rows came from a keyed table's replay),
+    * keyed `index:<name>` / `mv:<name>`. Never registered for rewriting:
+    * [[migrateLegacy]] re-creates each over its table's store, and
+    * [[persist]] writes them back unchanged until then. */
+  private val legacyDefs =
+    TrieMap.empty[String, com.fasterxml.jackson.databind.JsonNode]
   /** Sequence number of the catalog file as last read/written by THIS
     * process. persist() refuses to overwrite a file whose seq has moved
     * past it (another JVM wrote since we loaded) — last-writer-wins across
@@ -187,12 +209,19 @@ object Ddl {
       m.put("keys", t.keys.asJava)
       val ms = new java.util.ArrayList[java.util.Map[String, String]]()
       t.muts.foreach { mu =>
-        val base = Map("op" -> mu.op, "a" -> mu.a, "b" -> mu.b)
-        ms.add((if (mu.ts > 0L) base + ("ts" -> mu.ts.toString) else base).asJava)
+        val e = new java.util.LinkedHashMap[String, String]()
+        e.put("op", mu.op); e.put("a", mu.a); e.put("b", mu.b)
+        if (mu.ts > 0L) e.put("ts", mu.ts.toString)
+        if (mu.epoch >= 0L) e.put("epoch", mu.epoch.toString)
+        ms.add(e)
       }
       m.put("muts", ms)
       if (t.createdTs > 0L)
         m.put("created", java.lang.Long.valueOf(t.createdTs))
+      if (t.store.nonEmpty) {
+        m.put("store", t.store)
+        m.put("baseEpoch", java.lang.Long.valueOf(t.baseEpoch))
+      }
       val st = new java.util.ArrayList[java.util.Map[String, String]]()
       t.stats.foreach { case (k, v) => st.add(Map("stat" -> k, "value" -> v).asJava) }
       m.put("stats", st)
@@ -214,7 +243,6 @@ object Ddl {
       mv.sums.toSeq.sortBy(_._1).foreach { case (k, v) => sm.put(k, v) }
       m.put("sums", sm)
       m.put("dectype", mv.decType.sql)
-      if (mv.coveredPaths.nonEmpty) m.put("covered", mv.coveredPaths.asJava)
       if (mv.table.nonEmpty) m.put("table", mv.table)
       if (mv.kvVersion >= 0L) {
         m.put("kvVersion", java.lang.Long.valueOf(mv.kvVersion))
@@ -244,16 +272,17 @@ object Ddl {
       m.put("col", ix.col)
       m.put("index", ix.indexPath)
       m.put("keys", ix.keyCols.asJava)
-      m.put("builtAt", Integer.valueOf(ix.builtAtMuts))
-      if (ix.coveredPaths.nonEmpty) m.put("covered", ix.coveredPaths.asJava)
       if (ix.table.nonEmpty) m.put("table", ix.table)
-      if (ix.kvVersion >= 0L)
-        m.put("kvVersion", java.lang.Long.valueOf(ix.kvVersion))
+      m.put("kvVersion", java.lang.Long.valueOf(ix.kvVersion))
       if (ix.kvHead >= 0L) {
         m.put("kvHead", java.lang.Long.valueOf(ix.kvHead))
         m.put("kvHeadTs", java.lang.Long.valueOf(ix.kvHeadTs))
       }
       idxs.add(m)
+    }
+    legacyDefs.toSeq.sortBy(_._1).foreach { case (k, n) =>
+      (if (k.startsWith("mv:")) mvs else idxs)
+        .add(mapper.convertValue(n, classOf[java.util.Map[String, Object]]))
     }
     val root = new java.util.LinkedHashMap[String, Object]()
     val nextSeq = math.max(diskSeq, 0L) + 1L
@@ -310,18 +339,23 @@ object Ddl {
             val keys = n.get("keys").elements().asScala.map(_.asText).toSeq
             val muts = n.get("muts").elements().asScala.map { m =>
               Mut(m.get("op").asText, m.get("a").asText, m.get("b").asText,
-                Option(m.get("ts")).map(_.asText.toLong).getOrElse(0L))
+                Option(m.get("ts")).map(_.asText.toLong).getOrElse(0L),
+                Option(m.get("epoch")).map(_.asText.toLong).getOrElse(-1L))
             }.toSeq
             // "stats" is absent in pre-stats catalog files — tolerate both.
             val stats = Option(n.get("stats")).toSeq
               .flatMap(_.elements().asScala)
               .map(m => (m.get("stat").asText, m.get("value").asText))
             val t = KeyedTable(name, n.get("path").asText, keys, muts, stats,
-              Option(n.get("created")).map(_.asLong).getOrElse(0L))
+              Option(n.get("created")).map(_.asLong).getOrElse(0L),
+              Option(n.get("store")).map(_.asText).getOrElse(""),
+              Option(n.get("baseEpoch")).map(_.asLong).getOrElse(-1L))
             catalog.putIfAbsent(t.name.toLowerCase, t)
           }
           mvNodes.foreach { n =>
             val name = n.get("name").asText
+            if (n.get("kvVersion") == null) legacyDefs.putIfAbsent(s"mv:$name", n)
+            else {
             val sums = Option(n.get("sums")).map { s =>
               s.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
             }.getOrElse(Map.empty)
@@ -330,8 +364,6 @@ object Ddl {
               n.get("groups").elements().asScala.map(_.asText).toSeq,
               n.get("cnt").asText, sums,
               DataType.fromDDL(n.get("dectype").asText),
-              Option(n.get("covered")).toSeq
-                .flatMap(_.elements().asScala.map(_.asText)),
               Option(n.get("table")).map(_.asText).getOrElse(""),
               Option(n.get("kvVersion")).map(_.asLong).getOrElse(-1L),
               Option(n.get("kvHead")).map(_.asLong).getOrElse(-1L),
@@ -339,6 +371,7 @@ object Ddl {
             if (mvDefs.putIfAbsent(name, mv).isEmpty &&
                 graft.plans.MvCatalog.named(name).isEmpty)
               graft.plans.MvCatalog.register(name, mv)
+            }
           }
           // dsv2 connector tables (absent in older files)
           Option(if (root.isArray) null else root.get("dsv2")).toSeq
@@ -353,13 +386,13 @@ object Ddl {
           // secondary indexes (absent in older files)
           Option(if (root.isArray) null else root.get("indexes")).toSeq
             .flatMap(_.elements().asScala).foreach { n =>
+              if (n.get("kvVersion") == null)
+                legacyDefs.putIfAbsent(s"index:${n.get("name").asText}", n)
+              else {
               val ix = graft.plans.IndexDef(n.get("name").asText,
                 n.get("source").asText, n.get("col").asText,
                 n.get("index").asText,
                 n.get("keys").elements().asScala.map(_.asText).toSeq,
-                Option(n.get("builtAt")).map(_.asInt).getOrElse(0),
-                Option(n.get("covered")).toSeq
-                  .flatMap(_.elements().asScala.map(_.asText)),
                 Option(n.get("table")).map(_.asText).getOrElse(""),
                 Option(n.get("kvVersion")).map(_.asLong).getOrElse(-1L),
                 Option(n.get("kvHead")).map(_.asLong).getOrElse(-1L),
@@ -367,6 +400,7 @@ object Ddl {
               if (indexDefs.putIfAbsent(ix.name.toLowerCase, ix).isEmpty &&
                   graft.plans.IndexCatalog.named(ix.name).isEmpty)
                 graft.plans.IndexCatalog.register(ix)
+              }
             }
         } catch {
           case e: Exception =>
@@ -389,7 +423,9 @@ object Ddl {
     visAuths = Seq.empty // session state: a fresh process has no auths
     loadedFromDisk = false
     mvViewsReplayed = false
-    legacyLoadsSnapshotted = false
+    legacyMigrated = false
+    migrationFailures.clear()
+    legacyDefs.clear()
     diskSeq = 0L
   }
 
@@ -415,18 +451,18 @@ object Ddl {
     if (removed) persist()
     removed
   }
-  /** Keyed tables for the catalog plugin's view half: self-contained SQL
-    * (base parquet + replayed mutation log) for a registered table. */
+  /** Keyed tables for the catalog plugin's view half: the current
+    * version's read of the table's kv store. */
   def viewSqlFor(spark: SparkSession, name: String): Option[String] =
-    replayable(spark, name).map(rebuildSql(spark, _))
-  /** Self-contained SQL for a keyed table AT A LOG VERSION (version counts
-    * applied mutations; 0 = base): what [[asOf]] runs and what the injected
-    * parser expands `graft.t VERSION AS OF n` to. */
+    current(spark, name).map(t => readSql(t, t.muts.length))
+  /** A keyed table AT A LOG VERSION (version counts applied mutations;
+    * 0 = base): what [[asOf]] runs and what the injected parser expands
+    * `graft.t VERSION AS OF n` to. */
   def viewSqlAsOf(spark: SparkSession, name: String, version: Int): Option[String] =
-    replayable(spark, name).map { t =>
+    current(spark, name).map { t =>
       require(version >= 0 && version <= t.muts.length,
         s"version $version out of range 0..${t.muts.length} for ${t.name}")
-      rebuildSql(spark, t.copy(muts = t.muts.take(version)))
+      readSql(t, version)
     }
   /** `TIMESTAMP AS OF` on a keyed table: resolve the wall clock to the
     * longest mutation-log prefix whose stamps are <= the instant (the
@@ -436,18 +472,22 @@ object Ddl {
     * the table was created (no state existed to read). */
   def viewSqlAsOfTimestamp(spark: SparkSession, name: String,
       ms: Long): Option[String] =
-    replayable(spark, name).map { t =>
-      require(t.createdTs > 0L && t.muts.forall(_.ts > 0L),
-        s"${t.name}: history predates commit clocks — use VERSION AS OF " +
-          "(SHOW VERSIONS lists the log)")
-      require(ms >= t.createdTs,
-        s"timestamp $ms is before ${t.name} was created (${t.createdTs}) — " +
-          "no state existed at that instant")
-      // stamps are strictly monotonic, so the filter IS a prefix
-      rebuildSql(spark, t.copy(muts = t.muts.filter(_.ts <= ms)))
-    }
+    current(spark, name).map(t => readSql(t, versionAt(t, ms)))
+  /** The log version a wall-clock instant names (see
+    * [[viewSqlAsOfTimestamp]]); stamps are strictly monotonic, so the
+    * count of entries at or before the instant IS the prefix length. */
+  private def versionAt(t: KeyedTable, ms: Long): Int = {
+    require(t.createdTs > 0L && t.muts.forall(_.ts > 0L),
+      s"${t.name}: history predates commit clocks — use VERSION AS OF " +
+        "(SHOW VERSIONS lists the log)")
+    require(ms >= t.createdTs,
+      s"timestamp $ms is before ${t.name} was created (${t.createdTs}) — " +
+        "no state existed at that instant")
+    t.muts.count(_.ts <= ms)
+  }
   /** Self-contained view SQL for ANY graft-managed object — keyed table
-    * (mutation log replayed) or materialized view (snapshot scan). The one
+    * (its kv store at the current version) or materialized view
+    * (snapshot scan). The one
     * resolution both SQL read paths share (the injected parser's reference
     * expansion and the TableCatalog plugin's view half), so MV/table
     * resolution semantics can never diverge between them. */
@@ -512,15 +552,14 @@ object Ddl {
     s"""(?i)\\s*ALTER\\s+TABLE\\s+($Id)\\s+ADD\\s+COLUMN\\s+(\\w+)\\s+DEFAULT\\s+(.+?)\\s*""".r
   private val AlterDropRe =
     s"""(?i)\\s*ALTER\\s+TABLE\\s+($Id)\\s+DROP\\s+COLUMN\\s+(\\w+)\\s*""".r
-  // keyed RENAME COLUMN: a mutation-log entry replayed as an aliasing
-  // projection — same zero-copy story as the kv world's column mapping
-  // (there positions are the column identity, here the log position is)
+  // keyed RENAME COLUMN: a kv column-mapping rename of the store; earlier
+  // versions read the column back under its old name
   private val AlterRenameRe =
     s"""(?i)\\s*ALTER\\s+TABLE\\s+($Id)\\s+RENAME\\s+COLUMN\\s+(\\w+)\\s+TO\\s+(\\w+)\\s*""".r
-  // keyed ALTER COLUMN TYPE (widen): a mutation-log entry replayed as an
-  // in-place CAST projection — the keyed mirror of the kv world's
-  // metadata type promotion; only lossless up-casts admit (Spark's own
-  // canUpCast matrix), so committed values re-read exactly
+  // keyed ALTER COLUMN TYPE (widen): only lossless up-casts admit (Spark's
+  // own canUpCast matrix), so committed values re-read exactly; the store
+  // column is hidden and re-added at the new type, so earlier versions
+  // still read the prior one
   private val AlterKeyedTypeRe =
     (s"""(?i)\\s*ALTER\\s+TABLE\\s+($Id)\\s+ALTER\\s+COLUMN\\s+(\\w+)""" +
       """\s+TYPE\s+([\w]+(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)\s*""").r
@@ -562,8 +601,7 @@ object Ddl {
   private val InsertSelectRe =
     s"""(?is)\\s*INSERT\\s+INTO\\s+($Id)\\s+(SELECT\\s+.+)""".r
   // DELETE FROM <t> WHERE <pred> / UPDATE <t> SET <col> = <expr> WHERE
-  // <pred> — both replay as pure-SQL rewrites over the table's own columns
-  // (a filter; a CASE projection), so the mutation log stays self-contained
+  // <pred> — both run as Spark's row-level DML on the store
   private val DeleteRe =
     s"""(?is)\\s*DELETE\\s+FROM\\s+($Id)\\s+WHERE\\s+(.+)""".r
   private val UpdateRe =
@@ -571,11 +609,10 @@ object Ddl {
   // CREATE MATERIALIZED VIEW <mv> ON <t> GROUP BY (c, ...) SUMS (x, ...)
   // — materialize the rollup (count + exact-decimal sums) to a managed
   // parquet snapshot and register it with the transparent rewrite rule
-  // (plans.MvRewriteRule): matching aggregates over the table's BASE
-  // parquet are redirected to the snapshot. REFRESH rebuilds the snapshot;
-  // DROP unregisters. MVs are session-scoped (like CREATE VIEW here) and
-  // only allowed on UNMUTATED tables — a mutated table's reads no longer
-  // match the base-relation pattern, so a stale rewrite cannot fire.
+  // (plans.MvRewriteRule): matching aggregates over the kv table (for a
+  // keyed table, its store) are redirected to the snapshot while the
+  // table's manifest version is the one the MV was built at. REFRESH
+  // re-pins (incrementally where it can); DROP unregisters.
   private val CreateMvRe =
     """(?is)\s*CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+ON\s+((?:\w+\.){0,2}\w+)\s+GROUP\s+BY\s+\(([^)]+)\)\s+SUMS\s+\(([^)]+)\)\s*""".r
   private val RefreshMvRe =
@@ -598,10 +635,10 @@ object Ddl {
 
   // CREATE INDEX <n> ON <t> (<col>) builds a value-sorted (col, keys…)
   // parquet beside the catalog and registers the transparent rewrite
-  // (plans.IndexRewriteRule); unmutated keyed tables only, like MVs.
-  // 3-part names reach kv CATALOG tables (graft.ns.t); the optional KEY
-  // clause names the unique join key a kv index needs (keyed tables
-  // already declare theirs via MAPPED BY ... KEYS)
+  // (plans.IndexRewriteRule) on the kv table — for a keyed table, its
+  // store. 3-part names reach kv CATALOG tables (graft.ns.t); the
+  // optional KEY clause names the unique join key a kv index needs (keyed
+  // tables already declare theirs via MAPPED BY ... KEYS)
   private val CreateIndexRe =
     """(?is)\s*CREATE\s+INDEX\s+(\w+)\s+ON\s+((?:\w+\.){0,2}\w+)\s*\(\s*(\w+)\s*\)\s*(?:KEY\s*\(([^)]*)\)\s*)?""".r
   private val RefreshIndexRe =
@@ -611,10 +648,8 @@ object Ddl {
   private val ShowIndexesRe =
     """(?is)\s*SHOW\s+INDEXES\s*""".r
   // SHOW VERSIONS <t> lists the mutation history (version 0 = base);
-  // RESTORE TABLE <t> TO VERSION <n> truncates the log back to n applied
-  // mutations — the catalog is metadata-only, so restore never touches
-  // data files and later snapshots stay on disk (a second RESTORE forward
-  // is impossible by design: the log IS the state).
+  // RESTORE TABLE <t> TO VERSION <n> brings the store back to version n
+  // and truncates the log back to n applied mutations (see [[restoreTo]]).
   private val ShowVersionsRe = s"""(?is)\\s*SHOW\\s+VERSIONS\\s+($Id)\\s*""".r
   // kv catalog tables are referenced catalog-qualified (graft.ns.t) — up
   // to two dots, wider than $Id
@@ -928,9 +963,8 @@ object Ddl {
   //   WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE | UPDATE SET c = e, …
   // First matching clause per group wins (standard MERGE semantics). The ON
   // clause keeps the star form's discipline: exactly the PRIMARY KEY
-  // equality conjunction, source-to-target. Replays as mutation op
-  // "merge2": a = dropped-keys snapshot, b = output-rows snapshot, so the
-  // pure-SQL rebuild stays self-contained regardless of clause complexity.
+  // equality conjunction, source-to-target. Runs as Spark's own MERGE on
+  // the store, logged as op "merge2".
   // USING accepts a parenthesized subquery or a bare table/view name (the
   // daily-driver `MERGE INTO t USING staging s ON …` form)
   private val MergeGenRe =
@@ -1088,163 +1122,343 @@ object Ddl {
   private def isQualified(name: String): Boolean = name.contains('.')
   private def quoted(name: String): String =
     name.split('.').map(p => s"`$p`").mkString(".")
+  private def shortName(t: KeyedTable): String = t.name.split('.').last
 
-  /** One logged mutation as one SELECT over `from` (a quoted view name or a
-    * parenthesized replay body) whose columns are `cols`; returns the SELECT
-    * and the column list after the step. The only definition of what each
-    * op means: [[rebuildSql]] folds it over the base parquet, [[commit]]
-    * applies it once on top of a single-part table's live view. Only
-    * column NAMES are tracked (DROP/RENAME/UPDATE/WIDEN expand to explicit
-    * projections); types stay wherever Catalyst infers them. */
-  private def stepSql(t: KeyedTable, m: Mut, cols: Seq[String],
-      from: String): (String, Seq[String]) = {
-    def names(cs: Seq[String]) = cs.map(quotedCol).mkString(", ")
-    // every column projected in place, column m.a rewritten by `f`
-    def rewrite(f: String => String) = s"SELECT ${cols.map(c =>
-      if (c.equalsIgnoreCase(m.a)) f(quotedCol(c)) else quotedCol(c))
-      .mkString(", ")} FROM $from"
-    // whole-row upsert: the `rows` snapshot first, then the prior rows whose
-    // key is absent from the `dropped` snapshot (a correlated NOT EXISTS —
-    // Catalyst plans it as a left-anti join)
-    def upsert(rows: String, dropped: String) = {
-      val keyPred = t.keys.map(k => s"s.`$k` = b.`$k`").mkString(" AND ")
-      s"SELECT ${names(cols)} FROM parquet.`$rows` UNION ALL " +
-        s"SELECT ${cols.map(c => s"b.`$c`").mkString(", ")} FROM $from b " +
-        s"WHERE NOT EXISTS (SELECT 1 FROM parquet.`$dropped` s WHERE $keyPred)"
+  // --- the kv store behind a keyed table ----------------------------------
+  // A keyed table is one graft_kv catalog table, `graft.__keyed.<name>`,
+  // plus its mutation log. The store has fixed options — merge-on-read
+  // row-level DML, an epoch per commit, rows clustered by the keys — and
+  // every statement runs as one ordinary Spark statement on it. The log
+  // keeps what kv does not: the statement each version came from, its
+  // commit clock, the kv epoch it ended at, and enough of every schema
+  // change to map each version's columns onto the store's current ones
+  // (kv time travel reads the CURRENT schema).
+
+  /** The store's graft catalog key, and its quoted SQL name. */
+  private def storeKey(t: KeyedTable): String = s"__keyed.${t.name.toLowerCase}"
+  private def storeRef(t: KeyedTable): String = quoted(s"graft.${storeKey(t)}")
+
+  /** A managed directory beside the catalog file (spark-warehouse by
+    * default), so every process reading the same catalog finds it. */
+  private def managedDir(kind: String): java.nio.file.Path =
+    catalogPath.toAbsolutePath.normalize.getParent.resolve(kind)
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete(): Unit
+  }
+
+  /** The epoch of the store's newest commit (-1: no rows committed yet;
+    * the CREATE-time bulk load publishes the manifest even when empty). */
+  private def headEpoch(dir: String): Long =
+    graft.sources.GraftKvSink.appendedSince(dir, -1L, -1L)._2
+
+  /** The store epoch version `v` reads. */
+  private def epochAt(t: KeyedTable, v: Int): Long =
+    if (v == 0) t.baseEpoch else t.muts(v - 1).epoch
+
+  /** The hidden kv column a column moves to when DROP COLUMN or ALTER
+    * COLUMN TYPE retires it, so versions before the change still read it;
+    * `i` is the change's log position. */
+  private def droppedCol(i: Int): String = s"__graft_dropped_$i"
+  private val DroppedPrefix = droppedCol(0).dropRight(1)
+
+  /** A keyed table's column at some version: its name and type then, and
+    * the store column holding it now. */
+  private final case class KCol(name: String, phys: String, tpe: DataType)
+
+  /** The store's columns now, from its catalog entry (no file read). A
+    * table without a store (a legacy entry whose migration failed) refuses
+    * here, so no read or statement sees it as empty. */
+  private def storeSchema(t: KeyedTable): StructType = {
+    if (t.store.isEmpty) throw new IllegalStateException(
+      s"keyed table ${t.name} has no kv store" + migrationFailures.get(
+        t.name.toLowerCase).fold("")(c => s": its migration failed ($c)"))
+    dsv2Get(storeKey(t)).map(d =>
+      DataType.fromJson(d.schemaJson).asInstanceOf[StructType]).getOrElse(
+      throw new IllegalStateException(s"keyed table ${t.name} lost its store"))
+  }
+
+  /** The columns version `v` reads, in order: the store's visible columns
+    * with the log undone back to `v` — an ADD removes its column, a DROP
+    * brings its hidden column back under the old name, a RENAME restores
+    * the old name, a widen the hidden column holding the prior type. A
+    * column sits where the first store column of its lineage sits (ADD
+    * appends, DROP, RENAME and widen keep positions), so the walk runs to
+    * version 0 to find each lineage's first column. */
+  private def columnsAt(t: KeyedTable, v: Int, phys: StructType): Seq[KCol] = {
+    // each column keyed by its lineage: the store column it first had
+    val first = scala.collection.mutable.Map.empty[String, String]
+    var cols = phys.fields.toSeq.collect {
+      case f if !f.name.startsWith(DroppedPrefix) =>
+        first(f.name) = f.name
+        f.name -> KCol(f.name, f.name, f.dataType)
     }
+    var atV = cols
+    t.muts.indices.reverse.foreach { i =>
+      val m = t.muts(i)
+      cols = m.op match {
+        case "add" | "default" => cols.filterNot(_._2.name.equalsIgnoreCase(m.a))
+        case "drop" =>
+          first(droppedCol(i)) = droppedCol(i)
+          cols :+ (droppedCol(i) -> KCol(m.a, droppedCol(i), phys(droppedCol(i)).dataType))
+        case "rename" => cols.map { case (id, c) =>
+          id -> (if (c.name.equalsIgnoreCase(m.b)) c.copy(name = m.a) else c) }
+        case "widen" => cols.map {
+          case (id, c) if c.name.equalsIgnoreCase(m.a) =>
+            first(id) = droppedCol(i)
+            id -> c.copy(phys = droppedCol(i), tpe = phys(droppedCol(i)).dataType)
+          case other => other
+        }
+        case _ => cols
+      }
+      if (i == v) atV = cols
+    }
+    val pos = phys.fieldNames.zipWithIndex.toMap
+    atV.sortBy { case (id, _) => pos(first(id)) }.map(_._2)
+  }
+
+  /** The current version's schema. */
+  private def schemaOf(t: KeyedTable): StructType =
+    StructType(columnsAt(t, t.muts.length, storeSchema(t))
+      .map(c => org.apache.spark.sql.types.StructField(c.name, c.tpe)))
+
+  /** Version `v` as one SELECT over the store: that version's columns,
+    * pinned to its epoch unless `v` is current, under the visibility gate
+    * from the VISIBILITY COLUMN statement on. A version before any row was
+    * committed reads as an empty relation of the right schema. */
+  private def readSql(t: KeyedTable, v: Int): String = {
+    val phys = storeSchema(t)
+    val cols = columnsAt(t, v, phys)
+    val e = epochAt(t, v)
+    if (e < 0L)
+      return cols.map(c => s"CAST(NULL AS ${c.tpe.sql}) AS ${quotedCol(c.name)}")
+        .mkString("SELECT ", ", ", " WHERE FALSE")
+    val sel = cols.map { c =>
+      if (c.phys != c.name) s"${quotedCol(c.phys)} AS ${quotedCol(c.name)}"
+      else quotedCol(c.phys)
+    }.mkString(", ")
+    val pin = if (v == t.muts.length) "" else s" VERSION AS OF $e"
+    val gate = t.muts.take(v).collectFirst {
+      case m if m.op == "viscol" => s" WHERE ${visPredicateSql(m.a, visAuths)}"
+    }
+    s"SELECT $sel FROM ${storeRef(t)}$pin${gate.getOrElse("")}"
+  }
+
+  private def alterStore(spark: SparkSession, t: KeyedTable, change: String): Unit =
+    spark.sql(s"ALTER TABLE ${storeRef(t)} $change"): Unit
+
+  /** Appends `rows` (named by the current version's columns) to the store:
+    * every store column from the row column naming it now, cast to its
+    * store type; hidden columns are NULL. */
+  private def appendRows(t: KeyedTable, rows: DataFrame): Unit = {
+    val phys = storeSchema(t)
+    val names = columnsAt(t, t.muts.length, phys).map(c => c.phys -> c.name).toMap
+    rows.select(phys.fields.toSeq.map { f =>
+      names.get(f.name).fold(lit(null))(n => col(quotedCol(n)))
+        .cast(f.dataType).as(f.name)
+    }: _*).writeTo(storeRef(t)).append()
+  }
+
+  /** Adds store column `c` of type `dt` and fills it with `value` in one
+    * UPDATE. A failing UPDATE (a runtime error in `value`) drops the column
+    * again and runs `undo` before rethrowing, so the store's schema is as
+    * it was. */
+  private def addFilled(spark: SparkSession, t: KeyedTable, c: String,
+      dt: DataType, value: String)(undo: => Unit): Unit = {
+    alterStore(spark, t, s"ADD COLUMN ${quotedCol(c)} ${dt.sql}")
+    try spark.sql(s"UPDATE ${storeRef(t)} SET ${quotedCol(c)} = CAST(($value) AS ${dt.sql})")
+    catch { case e: Exception =>
+      alterStore(spark, t, s"DROP COLUMN ${quotedCol(c)}")
+      undo
+      throw e
+    }
+  }
+
+  /** The store side of a schema-changing entry: ADD (and DEFAULT) add a
+    * kv column, an `AS expr` column filled by one UPDATE; DROP hides the
+    * column under [[droppedCol]]; RENAME renames; a widen (Spark's
+    * lossless up-casts) hides the column the same way and adds it back at
+    * the new type, filled from the hidden one. */
+  private def alterColumns(spark: SparkSession, t: KeyedTable, m: Mut): Unit =
     m.op match {
-      case "add" => (s"SELECT *, (${m.b}) AS `${m.a}` FROM $from", cols :+ m.a)
-      // history reads NULL, TYPED as the default expression; the default
-      // itself applies only to later INSERT snapshots, which carry the
-      // spliced value materialized at statement time
+      case "add" =>
+        val dt = spark.sql(s"SELECT (${m.b}) AS c FROM (${readSql(t, t.muts.length)})")
+          .schema.head.dataType
+        addFilled(spark, t, m.a, dt, m.b)(())
       case "default" =>
-        (s"SELECT *, IF(FALSE, (${m.b}), NULL) AS `${m.a}` FROM $from", cols :+ m.a)
+        val dt = spark.sql(s"SELECT (${m.b}) AS c").schema.head.dataType
+        alterStore(spark, t, s"ADD COLUMN ${quotedCol(m.a)} ${dt.sql}")
       case "drop" =>
-        val kept = cols.filterNot(_.equalsIgnoreCase(m.a))
-        (s"SELECT ${names(kept)} FROM $from", kept)
-      case "rename" => (rewrite(c => s"$c AS `${m.b}`"),
-        cols.map(c => if (c.equalsIgnoreCase(m.a)) m.b else c))
-      // in-place lossless CAST: position and name keep, type widens —
-      // history rows and later INSERT snapshots both read through it
-      case "widen" => (rewrite(c => s"CAST($c AS ${m.b}) AS $c"), cols)
-      // b = the managed parquet snapshot (header-aligned CSV for LOAD,
-      // evaluated rows for INSERT), written at statement time with the
-      // schema the table had then, which is `cols` here; selecting by name
-      // keeps the union order-independent
-      case "load" | "insert" =>
-        (s"SELECT * FROM $from UNION ALL SELECT ${names(cols)} FROM parquet.`${m.b}`",
-          cols)
-      // DELETE keeps rows where the predicate is false OR NULL (SQL DELETE
-      // removes only where it is TRUE)
-      case "delete" =>
-        (s"SELECT * FROM $from WHERE NOT coalesce((${m.a}), false)", cols)
-      // b = the CASE projection frozen at statement time
-      case "update" => (rewrite(c => s"(${m.b}) AS $c"), cols)
-      // star MERGE: b = the aligned source rows, which also name the
-      // replaced keys
-      case "merge" => (upsert(m.b, m.b), cols)
-      // generalized MERGE: b = output rows (updates + inserts), a = the
-      // dropped-keys snapshot (replaced or deleted)
-      case "merge2" => (upsert(m.b, m.a), cols)
-      // visibility gate under the CURRENT session auth set (SET VISIBILITY
-      // re-registers every labeled table)
-      case "viscol" =>
-        (s"SELECT * FROM $from WHERE ${visPredicateSql(m.a, visAuths)}", cols)
+        alterStore(spark, t,
+          s"RENAME COLUMN ${quotedCol(m.a)} TO ${droppedCol(t.muts.length)}")
+      case "rename" =>
+        alterStore(spark, t, s"RENAME COLUMN ${quotedCol(m.a)} TO ${quotedCol(m.b)}")
+      case "widen" =>
+        val from = schemaOf(t).find(_.name.equalsIgnoreCase(m.a)).getOrElse(
+          throw new IllegalArgumentException(s"column '${m.a}' not in ${t.name}")).dataType
+        val to = DataType.fromDDL(m.b)
+        require(org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, to) &&
+            from != to,
+          s"cannot ALTER COLUMN '${m.a}' TYPE ${to.simpleString} from " +
+            s"${from.simpleString} — only lossless widening promotions are " +
+            "supported (committed values must re-read exactly)")
+        val hidden = droppedCol(t.muts.length)
+        alterStore(spark, t, s"RENAME COLUMN ${quotedCol(m.a)} TO $hidden")
+        addFilled(spark, t, m.a, to, hidden)(
+          alterStore(spark, t, s"RENAME COLUMN $hidden TO ${quotedCol(m.a)}"))
       case other =>
-        throw new IllegalStateException(s"bad catalog mutation '$other' on ${t.name}")
+        throw new IllegalStateException(s"not a schema change: $other")
+    }
+
+  /** A keyed table's base parquet, its key columns checked. */
+  private def baseOf(spark: SparkSession, path: String, keys: Seq[String]): DataFrame = {
+    val base = spark.read.parquet(path)
+    keys.foreach(k => require(hasColumn(base.columns, k),
+      s"key column '$k' not in $path schema"))
+    base
+  }
+
+  /** A fresh store for a keyed table: the kv catalog table, bulk-loaded
+    * from the base parquet as version 0. */
+  private def createStore(spark: SparkSession, name: String, path: String,
+      base: DataFrame, keys: Seq[String], createdTs: Long): KeyedTable = {
+    val t0 = KeyedTable(name, path, keys, createdTs = createdTs,
+      store = managedDir("graft_keyed").resolve(s"${name.toLowerCase}-$createdTs").toString)
+    val schema = StructType(base.schema.map(f =>
+      org.apache.spark.sql.types.StructField(f.name, f.dataType)))
+    spark.sql(s"CREATE TABLE ${storeRef(t0)} (${schema.toDDL}) USING graft_kv " +
+      s"OPTIONS (path '${t0.store}', mor 'true', epochs 'true', " +
+      s"sortBy '${keys.mkString(",")}')")
+    try {
+      base.writeTo(storeRef(t0)).append()
+      t0.copy(baseEpoch = headEpoch(t0.store))
+    } catch { case e: Exception => dropStore(t0); throw e }
+  }
+
+  private def dropStore(t: KeyedTable): Unit = {
+    dsv2Drop(storeKey(t))
+    rmTree(new java.io.File(t.store))
+  }
+
+  /** Catalogs written before keyed tables were stored in kv hold tables
+    * without a store. The first touch in a process re-runs each such
+    * table's log, entry by entry, into a fresh store: every entry keeps
+    * its op, detail and commit clock and gains the epoch it ends at. The
+    * rows of an INSERT, LOAD or MERGE come from the parquet snapshots the
+    * entry names (a LOAD logged without one re-reads its CSV); `squash`
+    * and `viscol` change no rows. A table whose migration fails loses its
+    * half-built store, keeps its legacy entry (a later process retries)
+    * and refuses every read with the cause ([[storeSchema]]); the other
+    * tables migrate regardless. The catalog is persisted afterwards. */
+  private def migrateLegacy(spark: SparkSession): Unit = {
+    if (legacyMigrated || (migratingThread eq Thread.currentThread)) return
+    synchronized {
+      if (legacyMigrated) return
+      migratingThread = Thread.currentThread
+      try {
+        ensureLoaded()
+        val legacy = catalog.values.toSeq.filter(_.store.isEmpty)
+        legacy.foreach { old =>
+          try migrateTable(spark, old)
+          catch { case e: Exception =>
+            migrationFailures.put(old.name.toLowerCase, String.valueOf(e.getMessage))
+            System.err.println(s"[graft] keyed table ${old.name} could not be " +
+              s"migrated into a kv store: ${e.getMessage}")
+          }
+        }
+        migrateLegacyDefs(spark)
+        if (legacy.nonEmpty || legacyDefs.nonEmpty) persist()
+        legacyMigrated = true
+      } finally migratingThread = null
     }
   }
 
-  /** Where a replay starts: the newest squash snapshot (which materialized
-    * every earlier mutation) or the base parquet, and the mutations after
-    * it. */
-  private def replayRoot(t: KeyedTable): (String, Seq[Mut]) = {
-    val last = t.muts.lastIndexWhere(_.op == "squash")
-    if (last < 0) (t.path, t.muts) else (t.muts(last).b, t.muts.drop(last + 1))
+  /** Re-creates each legacy index and MV as a kv index / MV over the store
+    * of the keyed table it was created on (its `table`, else the one table
+    * mapping its source parquet). One whose table is gone, or whose
+    * re-creation fails, is dropped with a notice; one whose table failed
+    * to migrate waits for a later process. */
+  private def migrateLegacyDefs(spark: SparkSession): Unit =
+    legacyDefs.toSeq.sortBy(_._1).foreach { case (k, n) =>
+      val name = n.get("name").asText
+      def text(f: String) = Option(n.get(f)).map(_.asText).filter(_.nonEmpty)
+      val owner = text("table").flatMap(lookup).orElse(
+        text("source").map(normPath).flatMap(src =>
+          catalog.values.toSeq.filter(t => normPath(t.path) == src) match {
+            case Seq(t) => Some(t)
+            case _ => None
+          }))
+      def csv(f: String) = n.get(f) match {
+        case null => ""
+        case a if a.isArray => a.elements().asScala.map(_.asText).mkString(",")
+        case o => o.fieldNames().asScala.mkString(",")
+      }
+      if (!owner.exists(_.store.isEmpty)) {
+        legacyDefs.remove(k)
+        try owner match {
+          case Some(t) if k.startsWith("mv:") =>
+            createKvMv(spark, name, s"graft.${storeKey(t)}", csv("groups"), csv("sums"))
+          case Some(t) =>
+            createKvIndex(spark, name, s"graft.${storeKey(t)}", text("col").get,
+              Some(t.keys.mkString(",")))
+          case None => throw new IllegalStateException("its keyed table is gone")
+        } catch { case e: Exception =>
+          System.err.println(s"[graft] dropped ${k.takeWhile(_ != ':')} '$name', " +
+            s"built before keyed tables were stored in kv: ${e.getMessage}")
+        }
+      }
+    }
+
+  /** One legacy table into a fresh store (see [[migrateLegacy]]); on any
+    * failure the store is dropped again and the error rethrown. */
+  private def migrateTable(spark: SparkSession, old: KeyedTable): Unit = {
+    // a store left by a process that died mid-migration is an orphan
+    dsv2Get(storeKey(old)).foreach(d => dropStore(old.copy(store = d.options("path"))))
+    var t = createStore(spark, old.name, old.path,
+      baseOf(spark, old.path, old.keys), old.keys, old.createdTs)
+      .copy(stats = old.stats)
+    try old.muts.foreach { m =>
+      val store = storeRef(t)
+      def keysIn(snap: String) = {
+        val ks = t.keys.map(quotedCol).mkString(", ")
+        s"($ks) IN (SELECT $ks FROM parquet.`$snap`)"
+      }
+      m.op match {
+        case "add" | "default" | "drop" | "rename" | "widen" => alterColumns(spark, t, m)
+        case "load" if m.b.isEmpty =>
+          appendRows(t, readCsvAligned(spark, schemaOf(t), m.a))
+        case "load" | "insert" => appendRows(t, spark.read.parquet(m.b))
+        case "delete" => spark.sql(s"DELETE FROM $store WHERE ${m.a}")
+        case "update" => spark.sql(s"UPDATE $store SET ${quotedCol(m.a)} = ${m.b}")
+        // an upsert: the rows keyed in the dropped-keys snapshot go,
+        // the output snapshot's rows come in
+        case "merge" | "merge2" =>
+          spark.sql(s"DELETE FROM $store WHERE ${keysIn(if (m.op == "merge") m.b else m.a)}")
+          appendRows(t, spark.read.parquet(m.b))
+        case _ => ()
+      }
+      t = t.copy(muts = t.muts :+ m.copy(epoch = headEpoch(t.store)))
+    } catch { case e: Exception => dropStore(t); throw e }
+    catalog.put(t.name.toLowerCase, t)
+    migrationFailures.remove(t.name.toLowerCase)
+    register(spark, t)
   }
 
-  /** A keyed table's full replay as self-contained SQL: [[stepSql]] folded
-    * over the replay root. It references no temp state, so it is both a
-    * qualified table's persistent view body and what `graft.t`, time
-    * travel and restart replay read. */
-  private def rebuildSql(spark: SparkSession, t: KeyedTable): String = {
-    val (root, tail) = replayRoot(t)
-    val scan = s"SELECT * FROM parquet.`$root`"
-    // the root's column names cost a schema read (a Spark job): only a
-    // replay with steps needs them
-    if (tail.isEmpty) scan
-    else tail.foldLeft((scan, spark.read.parquet(root).schema.fieldNames.toSeq)) {
-      case ((sql, cols), m) => stepSql(t, m, cols, s"( $sql )")
-    }._1
-  }
-
-  /** [[lookup]] for paths that replay a table. */
-  private def replayable(spark: SparkSession, name: String): Option[KeyedTable] = {
-    snapshotLegacyLoads(spark)
+  /** [[lookup]] for read paths: legacy entries are migrated first. */
+  private def current(spark: SparkSession, name: String): Option[KeyedTable] = {
+    migrateLegacy(spark)
     lookup(name)
   }
 
-  /** Catalogs written before single-part LOAD snapshotted its rows can hold
-    * `load` entries without a snapshot, whose replay re-read the CSV. The
-    * first replay in a process writes each such snapshot — the CSV aligned
-    * to the schema the table had just before the LOAD — and persists the
-    * catalog, so every replay after that reads parquet only. */
-  private def snapshotLegacyLoads(spark: SparkSession): Unit = {
-    if (legacyLoadsSnapshotted) return
-    synchronized {
-      if (legacyLoadsSnapshotted) return
-      ensureLoaded()
-      val legacy = catalog.values.toSeq
-        .filter(_.muts.exists(m => m.op == "load" && m.b.isEmpty))
-      legacy.foreach { t =>
-        val muts = t.muts.indices.foldLeft(t.muts) { (ms, i) => ms(i) match {
-          case m @ Mut("load", csv, "", _) =>
-            val before = t.copy(muts = ms.take(i))
-            val snap = loadSnapshotPath(before)
-            readCsvAligned(spark, spark.sql(rebuildSql(spark, before)).schema, csv)
-              .write.mode(SaveMode.Overwrite).parquet(snap)
-            ms.updated(i, m.copy(b = snap))
-          case _ => ms
-        } }
-        catalog.put(t.name.toLowerCase, t.copy(muts = muts))
-      }
-      if (legacy.nonEmpty) persist()
-      legacyLoadsSnapshotted = true
-    }
-  }
-
-  /** Managed snapshot location for a qualified LOAD: lives beside the
-    * catalog file (spark-warehouse by default) so the view SQL that
-    * references it stays valid for any process reading the same catalog.
-    * Indexed by the mutation's position so repeated LOADs never collide. */
-  private def loadSnapshotPath(t: KeyedTable): String = {
-    val base = Option(catalogPath.getParent)
-      .getOrElse(java.nio.file.Paths.get("."))
-    base.resolve("graft_loads")
-      .resolve(s"${t.name.toLowerCase.replace('.', '_')}_${t.muts.length}")
-      .toString
-  }
-
-  /** Managed snapshot location for a named materialized view (beside the
-    * catalog file, like [[loadSnapshotPath]]). */
-  private def mvSnapshotPath(name: String): String = {
-    val base = Option(catalogPath.getParent)
-      .getOrElse(java.nio.file.Paths.get("."))
-    base.resolve("graft_mvs").resolve(name.toLowerCase).toString
-  }
+  /** Managed snapshot location for a named materialized view. */
+  private def mvSnapshotPath(name: String): String =
+    managedDir("graft_mvs").resolve(name.toLowerCase).toString
 
   /** Managed storage location for a named secondary index. */
-  private def indexStorePath(name: String): String = {
-    val base = Option(catalogPath.getParent)
-      .getOrElse(java.nio.file.Paths.get("."))
-    base.resolve("graft_indexes").resolve(name.toLowerCase).toString
-  }
+  private def indexStorePath(name: String): String =
+    managedDir("graft_indexes").resolve(name.toLowerCase).toString
 
-  /** (Re)build a secondary index from `from` (the base parquet, or a squash
-    * snapshot of the table's current replay): the slim (col, keys…)
-    * projection written range-clustered + sorted on the indexed value so
-    * probe predicates prune via parquet min/max stats, after validating the
-    * key-uniqueness contract the semi-join rewrite is only sound under. */
   /** CREATE INDEX on a kv CATALOG table: the user names the unique join
     * key (`KEY (cols)` — keyed tables carry theirs in MAPPED BY, kv tables
     * declare none), the index parquet is built from the table's CURRENT
@@ -1283,59 +1497,10 @@ object Ddl {
       graft.sources.GraftKvSink.appendedSince(path, -1L, -1L)
     val ix = graft.plans.IndexDef(idxName, path, colName.toLowerCase,
       indexStorePath(idxName), keys, table = full,
-      coveredPaths = Seq(path),
       kvVersion = ver, kvHead = head, kvHeadTs = headTs)
     buildIndexFrom(base, ix)
     graft.plans.IndexCatalog.register(ix)
     indexDefs.put(idxName.toLowerCase, ix)
-    persist()
-  }
-
-  private def buildIndex(spark: SparkSession, ix: graft.plans.IndexDef,
-      from: Option[String] = None): Unit =
-    buildIndexFrom(spark.read.parquet(from.getOrElse(ix.sourcePath)), ix)
-
-  /** REFRESH INDEX for a KEYED-table index. DELTA refresh for a history
-    * that is append-only since the covered root: index only the
-    * not-yet-covered INSERT/LOAD snapshots and append them to the index
-    * parquet (each delta file is value-sorted itself, so parquet min/max
-    * pruning still holds per file) — O(delta), not O(table). A NON-APPEND
-    * history first SQUASHES the table and rebuilds the index from the
-    * squash snapshot: the view then reads exactly that snapshot, so the
-    * transparent rewrite FIRES on table reads again instead of only on
-    * direct base scans. Re-pin the build position in all paths so the
-    * stale flag clears. */
-  private def refreshKeyedIndex(spark: SparkSession, name: String,
-      ix0: graft.plans.IndexDef): Unit = {
-    val ixT = indexTable(ix0)
-    val ixCov0 = ix0.covered.map(normPath).toSet
-    val ix = ixT match {
-      case Some(t0) if t0.muts.nonEmpty =>
-        appendState(t0) match {
-          case Some((root, snaps)) if ixCov0.contains(normPath(root)) =>
-            val newPaths = snaps.filterNot(p => ixCov0.contains(normPath(p)))
-            if (newPaths.nonEmpty) deltaIndexAppend(spark, ix0, newPaths)
-            ix0.copy(coveredPaths = ix0.covered ++ newPaths,
-              builtAtMuts = t0.muts.length)
-          case st =>
-            val t = if (st.isDefined) t0 else squashTable(spark, t0)
-            val (root, snaps) = appendState(t).get
-            val full = ix0.copy(coveredPaths = Seq(root),
-              builtAtMuts = t.muts.length)
-            buildIndex(spark, full, from = Some(root))
-            if (snaps.nonEmpty) {
-              deltaIndexAppend(spark, full, snaps)
-              full.copy(coveredPaths = root +: snaps)
-            } else full
-        }
-      case _ =>
-        val full = ix0.copy(coveredPaths = Nil,
-          builtAtMuts = ixT.map(_.muts.length).getOrElse(0))
-        buildIndex(spark, full)
-        full
-    }
-    graft.plans.IndexCatalog.register(ix)
-    indexDefs.put(ix.name.toLowerCase, ix)
     persist()
   }
 
@@ -1361,16 +1526,12 @@ object Ddl {
       .write.mode(SaveMode.Overwrite).parquet(ix.indexPath)
   }
 
-  /** Append-only DELTA index build: index just `newPaths` (INSERT/LOAD
-    * snapshots) and append to the index parquet, after re-validating the
-    * CREATE-time contract against the delta — NULL keys rejected, and the
-    * delta's keys must be unique both internally and against every key
-    * already indexed (the semi-join's uniqueness requirement spans the
-    * whole covered set). */
-  private def deltaIndexAppend(spark: SparkSession,
-      ix: graft.plans.IndexDef, newPaths: Seq[String]): Unit =
-    deltaIndexAppendFrom(spark.read.parquet(newPaths: _*), ix)
-
+  /** Append-only DELTA index build: index just the `delta` rows (new
+    * epochs' files) and append to the index parquet, after re-validating
+    * the CREATE-time contract against the delta — NULL keys rejected, and
+    * the delta's keys must be unique both internally and against every
+    * key already indexed (the semi-join's uniqueness requirement spans
+    * the whole covered set). */
   private def deltaIndexAppendFrom(delta: DataFrame,
       ix: graft.plans.IndexDef): Unit = {
     val spark = delta.sparkSession
@@ -1394,14 +1555,6 @@ object Ddl {
       .sortWithinPartitions(col(ix.col))
       .write.mode(SaveMode.Append).parquet(ix.indexPath)
   }
-
-  /** (Re)build an MV's rollup snapshot from `from` (the source's base
-    * parquet, or a squash snapshot of the table's current replay): count
-    * partial + one exact-decimal sum per registered column — the
-    * decomposable shape plans.MvRewriteRule knows how to re-combine. */
-  private def buildMvSnapshot(spark: SparkSession, mv: graft.plans.MvDef,
-      from: Option[String] = None): Unit =
-    buildMvSnapshotFrom(spark.read.parquet(from.getOrElse(mv.sourcePath)), mv)
 
   /** CREATE MATERIALIZED VIEW column validation, shared by the keyed and
     * kv handlers: parses the GROUP BY / SUMS lists, checks membership,
@@ -1507,10 +1660,6 @@ object Ddl {
         .parquet(mv.snapshotPath)
       // the stage was transport only — reclaim it (O(MV) disk otherwise
       // leaks per refresh and outlives DROP MATERIALIZED VIEW)
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(): Unit
-      }
       rmTree(new java.io.File(stage))
     }
     true
@@ -1537,7 +1686,7 @@ object Ddl {
       graft.sources.GraftKvSink.appendedSince(path, -1L, -1L)
     val mv = graft.plans.MvDef(path, mvSnapshotPath(mvName), groups, "cnt",
       sumCols.map(c => c.toLowerCase -> s"sum_${c.toLowerCase}").toMap, M,
-      table = full, coveredPaths = Seq(path),
+      table = full,
       kvVersion = ver, kvHead = head, kvHeadTs = headTs)
     buildMvSnapshotFrom(base, mv)
     graft.plans.MvCatalog.register(mvName, mv)
@@ -1546,120 +1695,68 @@ object Ddl {
     persist()
   }
 
-  /** The INSERT/LOAD snapshot paths of a pure append-only history (length
-    * == muts.length iff every mutation was an append). */
-  private def appendOnlySnaps(muts: Seq[Mut]): Seq[String] = muts.collect {
-    case Mut("insert", _, b, _) if b.nonEmpty => b
-    case Mut("load", _, b, _) if b.nonEmpty   => b
-  }
-
-  /** The table's replay decomposed as (root, appendSnaps) when its history
-    * is append-only SINCE THE LAST SQUASH: root = newest squash snapshot
-    * (which materialized every earlier mutation) or the base parquet,
-    * appendSnaps = the INSERT/LOAD snapshots after it. None when any later
-    * mutation is not an append — index/MV maintenance must then squash
-    * again before it can cover the replay with plain parquet paths. */
-  private def appendState(t: KeyedTable): Option[(String, Seq[String])] = {
-    val (root, tail) = replayRoot(t)
-    val snaps = appendOnlySnaps(tail)
-    if (snaps.length == tail.length) Some((root, snaps)) else None
-  }
-
-  /** Managed snapshot location for a squash (beside the catalog file, like
-    * [[loadSnapshotPath]]); indexed by the log position so successive
-    * squashes never collide. */
-  private def squashSnapshotPath(t: KeyedTable): String = {
-    val base = Option(catalogPath.getParent)
-      .getOrElse(java.nio.file.Paths.get("."))
-    base.resolve("graft_squash")
-      .resolve(s"${t.name.toLowerCase.replace('.', '_')}_${t.muts.length}")
-      .toString
-  }
-
-  /** SQUASH: materialize the table's CURRENT replay state into one managed
-    * parquet snapshot and append a `squash` mutation that restarts the
-    * replay from it. Semantically invisible (read(snapshot) == replay by
-    * construction; earlier versions still reconstruct from the log prefix,
-    * and RESTORE before the squash drops it), but it gives non-append
-    * histories a plain single-parquet read again — which is exactly what
-    * the index/MV transparent rewrites key on. The Delta OPTIMIZE analogue
-    * for the mutation log. Refuses visibility-gated histories: their
-    * replay is session-dependent, and a squash would bake the current
-    * authorizations into the data. */
-  private def squashTable(spark: SparkSession, t0: KeyedTable): KeyedTable = {
-    require(!t0.muts.exists(_.op == "viscol"),
-      s"cannot materialize ${t0.name}: a visibility-gated history replays " +
-        "per-session; a squash would freeze the current authorizations")
-    val out = squashSnapshotPath(t0)
-    spark.sql(rebuildSql(spark, t0)).write.mode(SaveMode.Overwrite).parquet(out)
-    val t = t0.copy(muts = t0.muts :+ Mut("squash", "", out, nextMutTs(t0)))
-    catalog.put(t.name.toLowerCase, t)
-    persist()
-    register(spark, t)
-    t
-  }
-
-  /** The table an MV tracks: by recorded NAME when present, by path for
-    * pre-r13 catalogs. */
-  private def mvTable(mv: graft.plans.MvDef): Option[KeyedTable] =
-    if (mv.table.nonEmpty) { ensureLoaded(); lookup(mv.table) }
-    else tableByPath(mv.sourcePath)
-
-  /** INCREMENTAL view maintenance for append-only histories: aggregate the
-    * delta snapshots at the MV's granularity, union with the existing
-    * partials, and re-combine (counts add; decimal partial sums add
-    * exactly, cast back to the stored precision). The merged snapshot is
-    * written to a NEW versioned path — the old one cannot be overwritten
-    * while it feeds the merge, and the swap stays a single registry/
-    * catalog update. Returns the updated definition. */
-  private def incrementMvSnapshot(spark: SparkSession,
-      mv: graft.plans.MvDef, newPaths: Seq[String]): graft.plans.MvDef = {
-    val old = spark.read.parquet(mv.snapshotPath)
-    val sums = mv.sums.toSeq.sortBy(_._1).map { case (src, partial) =>
-      sum(col(src).cast(M)).as(partial)
+  /** Spark's own MERGE on the store: `MERGE INTO` it `AS tAlias` from
+    * `(srcSql) AS alias`, ON the key equality (the statement's own ON clause
+    * was checked to be exactly that), then the clauses in the statement's
+    * order (first match wins within each group, as in Spark). Every
+    * assignment is cast to its column's type in `schema` (the current
+    * version's), and an INSERT names every column, unlisted ones NULL. */
+  private def mergeIntoStore(spark: SparkSession, t: KeyedTable, tAlias: String,
+      srcSql: String, alias: String, schema: StructType,
+      clauses: Seq[MergeClause]): Unit = {
+    val fields = schema.fields.toSeq
+    def cast(e: String, f: org.apache.spark.sql.types.StructField) =
+      s"CAST(($e) AS ${f.dataType.sql})"
+    def fromSrc(f: org.apache.spark.sql.types.StructField) =
+      cast(s"`$alias`.${quotedCol(f.name)}", f)
+    def when(kind: String, c: MergeClause) =
+      s"WHEN $kind${c.cond.fold("")(x => s" AND $x")} THEN "
+    def set(star: Boolean, sets: Seq[(Option[String], String, String)]) =
+      "UPDATE SET " + (if (star) fields.map(f => s"${quotedCol(f.name)} = ${fromSrc(f)}")
+      else sets.map { case (_, c, e) =>
+        val f = fields.find(_.name.equalsIgnoreCase(c)).get
+        s"${quotedCol(f.name)} = ${cast(e, f)}"
+      }).mkString(", ")
+    val actions = clauses.map {
+      case c @ MatchedUpdate(_, star, sets) => when("MATCHED", c) + set(star, sets)
+      case c: MatchedDelete => when("MATCHED", c) + "DELETE"
+      case c @ InsertRow(_, star, cols0, vals) =>
+        when("NOT MATCHED", c) +
+          s"INSERT (${fields.map(f => quotedCol(f.name)).mkString(", ")}) " +
+          fields.map { f =>
+            if (star) fromSrc(f)
+            else cols0.indexWhere(_.equalsIgnoreCase(f.name)) match {
+              case -1 => s"CAST(NULL AS ${f.dataType.sql})"
+              case j  => cast(vals(j), f)
+            }
+          }.mkString("VALUES (", ", ", ")")
+      case c: BySourceDelete => when("NOT MATCHED BY SOURCE", c) + "DELETE"
+      case c @ BySourceUpdate(_, sets) =>
+        when("NOT MATCHED BY SOURCE", c) + set(star = false, sets)
     }
-    val delta = spark.read.parquet(newPaths: _*)
-      .groupBy(mv.groupCols.map(c => col(c)): _*)
-      .agg(count(lit(1)).as(mv.cntCol), sums: _*)
-    val merged = old.unionByName(delta)
-      .groupBy(mv.groupCols.map(c => col(c)): _*)
-      .agg(sum(col(mv.cntCol)).cast(LongType).as(mv.cntCol),
-        mv.sums.values.toSeq.sorted.map { p =>
-          sum(col(p)).cast(old.schema(p).dataType).as(p)
-        }: _*)
-      .select(old.columns.map(c => col(quotedCol(c))).toIndexedSeq: _*)
-    val covered = mv.covered
-    val out = mv.snapshotPath.replaceAll("_v\\d+$", "") +
-      s"_v${covered.length + newPaths.length}"
-    merged.write.mode(SaveMode.Overwrite).parquet(out)
-    mv.copy(snapshotPath = out, coveredPaths = covered ++ newPaths)
+    val on = t.keys.map(k => s"`$tAlias`.${quotedCol(k)} = `$alias`.${quotedCol(k)}")
+      .mkString(" AND ")
+    spark.sql(s"MERGE INTO ${storeRef(t)} AS `$tAlias` USING ($srcSql) AS " +
+      s"`$alias` ON $on ${actions.mkString(" ")}"): Unit
   }
 
-  /** The registration funnel. A qualified table's PERSISTENT view is the
-    * full replay (a persistent view cannot reference temp state), its
-    * database created on demand. A single-part table's temp view is
-    * `step` applied on top of its live view — each statement costs one
-    * step, never a replay of the whole history — or, with no step, the full
-    * replay. A CACHE'd table stays cached: the old plan is uncached first
-    * (else its data leaks in the cache manager, unreachable by any later
-    * UNCACHE) and whichever plan is registered afterwards is re-cached. */
-  private def register(spark: SparkSession, t: KeyedTable,
-      step: Option[Mut] = None): Unit = {
+  /** The registration funnel: the bare name is a temp view over the
+    * current version's read; a qualified table (`db.t`; temp views cannot
+    * hold multipart names) is a PERSISTENT view with the same body, its
+    * database created on demand. A CACHE'd table stays cached: the old
+    * plan is uncached first (else its data leaks in the cache manager,
+    * unreachable by any later UNCACHE) and the new one re-cached. */
+  private def register(spark: SparkSession, t: KeyedTable): Unit = {
     val wasCached =
       try spark.catalog.tableExists(t.name) && spark.catalog.isCached(t.name)
       catch { case _: Exception => false } // missing database on a fresh JVM
     if (wasCached) spark.catalog.uncacheTable(t.name)
     try {
+      val sql = readSql(t, t.muts.length)
       if (isQualified(t.name)) {
         spark.sql(s"CREATE DATABASE IF NOT EXISTS `${t.name.split('.').head}`")
-        spark.sql(s"CREATE OR REPLACE VIEW ${quoted(t.name)} AS " +
-          rebuildSql(spark, t.copy(muts = t.muts ++ step)))
-      } else {
-        val df = spark.sql(step.fold(rebuildSql(spark, t))(m =>
-          stepSql(t, m, spark.table(t.name).columns.toSeq, quoted(t.name))._1))
-        tagBase(df, t)
-        df.createOrReplaceTempView(t.name)
-      }
+        spark.sql(s"CREATE OR REPLACE VIEW ${quoted(t.name)} AS $sql")
+      } else spark.sql(sql).createOrReplaceTempView(t.name)
     } finally if (wasCached) spark.catalog.cacheTable(t.name)
   }
 
@@ -1667,34 +1764,82 @@ object Ddl {
     if (isQualified(t.name)) spark.sql(s"DROP VIEW IF EXISTS ${quoted(t.name)}")
     else spark.catalog.dropTempView(t.name): Unit
 
-  /** Every statement that logs a mutation ends here: the new state is
-    * registered (analyzing it, so a bad expression fails before anything
-    * is logged), then the mutation is logged. */
-  private def commit(spark: SparkSession, t: KeyedTable, m: Mut): Unit = {
-    register(spark, t, Some(m))
-    logMut(t, m)
+  /** Every logged statement ends here, after its store statement ran: the
+    * entry is logged at the store's head epoch and the views re-register. */
+  private def commit(spark: SparkSession, t: KeyedTable, m: Mut): Unit =
+    register(spark, logMut(t, m.copy(epoch = headEpoch(t.store))))
+
+  /** A keyed ALTER: the store side ([[alterColumns]]), then the log entry. */
+  private def commitAlter(spark: SparkSession, t: KeyedTable, m: Mut): Unit = {
+    alterColumns(spark, t, m)
+    commit(spark, t, m)
   }
 
-  /** Executes the DDL: registers the parquet file as a temp view and records
-    * the key columns for range-scan building. Returns the catalog entry. */
+  /** Executes the DDL: creates the table's kv store from the base parquet,
+    * registers its view and records the key columns for range-scan
+    * building. A CREATE over an existing name replaces that table. Returns
+    * the catalog entry. */
   def create(spark: SparkSession, ddl: String): KeyedTable = ddl match {
     case CreateRe(name, path, keyList) =>
+      migrateLegacy(spark)
       val keys = keyList.split(",").map(_.trim).toSeq
-      val t = KeyedTable(name, path, keys,
-        createdTs = System.currentTimeMillis())
-      // the keys are checked against the registered view, so the parquet
-      // schema is read once; a bad key list leaves no view behind
-      register(spark, t)
-      val cols = spark.table(name).columns
-      try keys.foreach { k =>
-        require(cols.exists(_.equalsIgnoreCase(k)), s"key column '$k' not in $path schema")
-      } catch { case e: IllegalArgumentException => unregister(spark, t); throw e }
+      val base = baseOf(spark, path, keys) // a bad key list changes nothing
+      lookup(name).foreach(dropTable(spark, _))
+      val t = createStore(spark, name, path, base, keys, System.currentTimeMillis())
       catalog.put(name.toLowerCase, t)
       persist()
+      register(spark, t)
       t
     case _ =>
       throw new IllegalArgumentException(
         s"cannot parse DDL (expected CREATE TABLE <n> MAPPED BY '<path>' KEYS (...)): $ddl")
+  }
+
+  /** DROP TABLE: the views, the catalog entry and the store. */
+  private def dropTable(spark: SparkSession, t: KeyedTable): Unit = {
+    unregister(spark, t)
+    catalog.remove(t.name.toLowerCase)
+    persist()
+    if (t.store.nonEmpty) dropStore(t)
+  }
+
+  /** RESTORE TABLE t TO VERSION v. A kv RESTORE cannot cross row-level
+    * DML, so the store is brought back by statements instead: the schema
+    * changes after `v` are undone on the store (newest first), the current
+    * rows are deleted and version v's rows re-inserted from the store's
+    * own `VERSION AS OF epoch(v)`, and the log is truncated to `v`. The
+    * kept entries keep their epochs, so every version up to `v` still
+    * reads the state it read before. */
+  private def restoreTo(spark: SparkSession, t: KeyedTable, v: Int): Unit = {
+    require(v >= 0 && v <= t.muts.length,
+      s"version $v out of range 0..${t.muts.length} for ${t.name}")
+    t.muts.zipWithIndex.drop(v).reverse.foreach { case (m, i) => m.op match {
+      case "add" | "default" => alterStore(spark, t, s"DROP COLUMN ${quotedCol(m.a)}")
+      case "rename" =>
+        alterStore(spark, t, s"RENAME COLUMN ${quotedCol(m.b)} TO ${quotedCol(m.a)}")
+      case "drop" =>
+        alterStore(spark, t, s"RENAME COLUMN ${droppedCol(i)} TO ${quotedCol(m.a)}")
+      case "widen" =>
+        alterStore(spark, t, s"DROP COLUMN ${quotedCol(m.a)}")
+        alterStore(spark, t, s"RENAME COLUMN ${droppedCol(i)} TO ${quotedCol(m.a)}")
+      case _ => ()
+    } }
+    val e = epochAt(t, v)
+    val head = headEpoch(t.store)
+    if (head != e) {
+      val k = quotedCol(t.keys.head)
+      if (head >= 0L)
+        spark.sql(s"DELETE FROM ${storeRef(t)} WHERE $k IS NULL OR $k IS NOT NULL")
+      if (e >= 0L) {
+        val all = storeSchema(t).fieldNames.map(quotedCol).mkString(", ")
+        spark.sql(s"INSERT INTO ${storeRef(t)} SELECT $all FROM ${storeRef(t)} " +
+          s"VERSION AS OF $e")
+      }
+    }
+    val restored = t.copy(muts = t.muts.take(v))
+    catalog.put(restored.name.toLowerCase, restored)
+    persist()
+    register(spark, restored)
   }
 
   def lookup(name: String): Option[KeyedTable] = {
@@ -1735,14 +1880,13 @@ object Ddl {
 
   /** VERSION time travel over the mutation log — the Spark analogue of
     * HBase's cell-version reads (the reference's storage model keeps prior
-    * cell versions; here the catalog keeps the whole mutation history, so
-    * any prefix is reconstructible). `version` counts applied mutations:
-    * 0 = the base parquet, muts.length = the current table. Read-only —
-    * nothing is materialized or changed. */
-  def asOf(spark: SparkSession, name: String, version: Int): DataFrame = {
-    lookupOrThrow(name)
-    spark.sql(viewSqlAsOf(spark, name, version).get)
-  }
+    * cell versions; here the store keeps every epoch and the log maps each
+    * version to one). `version` counts applied mutations: 0 = the base
+    * parquet's rows, muts.length = the current table. Read-only — nothing
+    * is materialized or changed. */
+  def asOf(spark: SparkSession, name: String, version: Int): DataFrame =
+    spark.sql(viewSqlAsOf(spark, name, version).getOrElse(
+      throw new IllegalArgumentException(s"unknown keyed table: $name")))
 
   /** CDC CHANGEFEED between two versions of a keyed table: the row-level
     * diff (op ∈ insert | delete | update) computed as one full-outer join
@@ -1751,11 +1895,9 @@ object Ddl {
     * after-image for inserts/updates and the before-image for deletes
     * (an update that sets a column to NULL still reports the after-image:
     * presence is decided by the key side, never by value coalescing).
-    * Scale shape: one key-equality join between two snapshots; with both
-    * sides produced by the same mutation-log replay over one base scan,
-    * Catalyst reuses the base relation, and at cluster scale the join
-    * shuffles on the table's own key — the partitioning every other keyed
-    * op already uses. */
+    * Scale shape: one key-equality join between two version reads of the
+    * store; at cluster scale the join shuffles on the table's own key —
+    * the partitioning every other keyed op already uses. */
   def changefeed(spark: SparkSession, name: String, fromV: Int,
       toV: Int): DataFrame = {
     val t = lookupOrThrow(name)
@@ -1972,20 +2114,16 @@ object Ddl {
   /** A6 via the SQL entry point — Astro's INSERT INTO … VALUES / SELECT
     * (the HBase Put path). The rows are evaluated NOW, aligned to the
     * table's current schema POSITIONALLY (standard INSERT-without-column-
-    * list semantics) with casts to the table's types, and materialized to a
-    * managed parquet snapshot that the mutation log unions in — always
-    * snapshotted, even for single-part tables, because a SELECT tail can
-    * reference session state (temp views) that will not exist at restart
-    * replay, while the snapshot always will. */
+    * list semantics) with casts to the table's types, and appended to the
+    * store. */
   private def insertInto(spark: SparkSession, name: String,
       rowsSql: String): String = {
-    val t = lookupOrThrow(name)
-    ensureView(spark, t)
-    val schema = spark.table(t.name).schema
+    val t = keyed(spark, name)
+    val schema = schemaOf(t)
     val raw = spark.sql(rowsSql)
     // trailing columns added by ADD COLUMN ... DEFAULT may be omitted
     // (the SQL positional rule); their defaults splice in at write time,
-    // so the snapshot carries the value the INSERT-time default defined
+    // so the stored rows carry the value the INSERT-time default defined
     val defaults: Map[String, String] =
       t.muts.foldLeft(Map.empty[String, String]) { (acc, m) => m.op match {
         case "default" => acc + (m.a.toLowerCase -> m.b)
@@ -2007,46 +2145,12 @@ object Ddl {
         col(quotedCol(f.name)).cast(f.dataType).as(f.name)) ++
         schema.fields.drop(n).toSeq.map(f =>
           expr(defaults(f.name.toLowerCase)).cast(f.dataType).as(f.name)): _*)
-    val snap = loadSnapshotPath(t)
-    rows.write.mode(SaveMode.Overwrite).parquet(snap)
-    commit(spark, t, Mut("insert", "", snap))
+    appendRows(t, rows)
+    commit(spark, t, Mut("insert", "", ""))
     t.name
   }
 
   private def quotedCol(name: String): String = s"`$name`"
-
-  /** Fresh registration nonce per (table, registered view): the CBO
-    * annotation rule (plans.AnalyzeStatsRule) annotates ONLY subtrees whose
-    * base relation carries the table's CURRENT nonce — positively
-    * identifying "this is the registered view's replay". Frames that merely
-    * read the same files never qualify: an independent
-    * `spark.read.parquet(samePath)` is untagged (different dataset — the
-    * pre-mutation file), and `graft.t`/asOf/time-travel frames run the
-    * replay SQL outside the registration funnel, so they stay untagged
-    * too. */
-  private val viewNonce = TrieMap.empty[String, String]
-  def currentViewNonce(name: String): Option[String] =
-    viewNonce.get(name.toLowerCase)
-  private def tagBase(df: DataFrame, t: KeyedTable): Unit = {
-    // the replay root: the base parquet, or the newest squash snapshot
-    // once a REFRESH materialized the log prefix
-    val base = normPath(replayRoot(t)._1)
-    val nonce = s"${t.name.toLowerCase}#${java.util.UUID.randomUUID()}"
-    var found = false
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-              if fs.location.rootPaths.exists(p =>
-                normPath(p.toUri.getPath) == base) =>
-            lr.setTagValue(graft.plans.StatsAnnotation.KeyedTableTag, nonce)
-            found = true
-          case _ => ()
-        }
-      case _ => ()
-    }
-    if (found) viewNonce.put(t.name.toLowerCase, nonce): Unit
-  }
 
   /** Session visibility authorizations (HBase `setAuths` analogue);
     * process-scoped like the rest of the session surface here, never
@@ -2057,8 +2161,7 @@ object Ddl {
   /** Row visible under `auths`? DNF over the label column: some
     * '|'-alternative has all its '&'-atoms authorized; blank/NULL label =
     * public. Higher-order SQL functions — codegen, no UDF — and
-    * self-contained, so qualified view bodies survive replay from the
-    * catalog file alone. */
+    * self-contained, so qualified view bodies need no session state. */
   private def visPredicateSql(labelCol: String, auths: Seq[String]): String = {
     val arr =
       if (auths.isEmpty) "CAST(array() AS ARRAY<STRING>)"
@@ -2066,6 +2169,14 @@ object Ddl {
     s"(`$labelCol` IS NULL OR trim(`$labelCol`) = '' OR " +
       s"exists(split(`$labelCol`, '\\\\|'), t -> " +
       s"forall(split(t, '&'), a -> array_contains($arr, trim(a)))))"
+  }
+
+  /** The table a statement names, with its view registered in this
+    * session. */
+  private def keyed(spark: SparkSession, name: String): KeyedTable = {
+    val t = lookupOrThrow(name)
+    ensureView(spark, t)
+    t
   }
 
   /** Register the view for a catalog entry if this session does not have
@@ -2077,31 +2188,10 @@ object Ddl {
     if (!exists) register(spark, t)
   }
 
-  private def normPath(p: String): String =
+  private[graft] def normPath(p: String): String =
     java.nio.file.Paths.get(p.stripPrefix("file:"))
       .toAbsolutePath.normalize.toString
 
-  /** The keyed table whose base parquet is `path`, if registered. Several
-    * tables may map the same parquet — use [[indexTable]] when the index's
-    * recorded table name can disambiguate. */
-  private def tableByPath(path: String): Option[KeyedTable] = {
-    ensureLoaded()
-    val n = normPath(path)
-    catalog.values.find(t => normPath(t.path) == n)
-  }
-
-  /** The table an index tracks: by recorded NAME when present (several
-    * tables can share a base parquet), by path for pre-r13 catalogs. */
-  private def indexTable(ix: graft.plans.IndexDef): Option[KeyedTable] =
-    if (ix.table.nonEmpty) { ensureLoaded(); lookup(ix.table) }
-    else tableByPath(ix.sourcePath)
-
-  /** Record a mutation on a table: update the catalog entry and persist.
-    * If the table backs secondary indexes or materialized views, say so in
-    * one line — the structural veto already keeps their transparent
-    * rewrites sound (the replay view no longer matches the base-relation
-    * pattern), but silence left users to discover the de-optimization via
-    * EXPLAIN. SHOW INDEXES / SHOW STATS carry the same flag durably. */
   /** Next monotonic commit stamp for a table's mutation log — the kv
     * manifest's max(now, prior+1) rule, so equal-millisecond mutations
     * still order and TIMESTAMP AS OF prefixes stay well-defined. */
@@ -2109,25 +2199,28 @@ object Ddl {
     math.max(System.currentTimeMillis(),
       math.max(t.createdTs, t.muts.map(_.ts).maxOption.getOrElse(0L)) + 1L)
 
-  private def logMut(t: KeyedTable, m: Mut): Unit = {
-    catalog.put(t.name.toLowerCase,
-      t.copy(muts = t.muts :+ m.copy(ts = nextMutTs(t))))
+  /** Record a mutation on a table: update the catalog entry and persist.
+    * If the table's store backs secondary indexes or materialized views,
+    * say so in one line — their transparent rewrites stand down on the
+    * changed manifest version until REFRESH, but silence left users to
+    * discover the de-optimization via EXPLAIN. SHOW INDEXES carries the
+    * same flag durably. Returns the updated entry. */
+  private def logMut(t: KeyedTable, m: Mut): KeyedTable = {
+    val t2 = t.copy(muts = t.muts :+ m.copy(ts = nextMutTs(t)))
+    catalog.put(t.name.toLowerCase, t2)
     persist()
-    val p = normPath(t.path)
+    val p = normPath(t.store)
     val idx = graft.plans.IndexCatalog.all()
-      .filter(ix => if (ix.table.nonEmpty) ix.table.equalsIgnoreCase(t.name)
-                    else normPath(ix.sourcePath) == p)
-      .map(ix => s"INDEX ${ix.name}")
+      .filter(ix => normPath(ix.sourcePath) == p).map(ix => s"INDEX ${ix.name}")
     val mvs = mvEntries().collect {
-      case (name, mv) if (if (mv.table.nonEmpty) mv.table.equalsIgnoreCase(t.name)
-                          else normPath(mv.sourcePath) == p) =>
-        s"MATERIALIZED VIEW $name"
+      case (name, mv) if normPath(mv.sourcePath) == p => s"MATERIALIZED VIEW $name"
     }
     val stale = idx ++ mvs
     if (stale.nonEmpty)
       System.err.println(s"[graft] ${m.op.toUpperCase} on ${t.name} staled " +
         s"${stale.mkString(", ")} — their transparent rewrites stay vetoed " +
         s"until ${stale.map(s => s"REFRESH $s").mkString("; ")}")
+    t2
   }
 
   /** Single DDL entry point — dispatches the full A8 statement set. Returns
@@ -2147,7 +2240,7 @@ object Ddl {
   def execute(spark: SparkSession, ddl: String): DataFrame = {
     import spark.implicits._
     ensureMvLoaded(spark) // restart path: re-register persisted MVs + views
-    snapshotLegacyLoads(spark)
+    migrateLegacy(spark)
     def status(op: String, table: String): DataFrame =
       spark.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row(op, table)),
@@ -2158,9 +2251,7 @@ object Ddl {
       case DropRe(ifExists, name) =>
         lookup(name) match {
           case Some(t) =>
-            unregister(spark, t)
-            catalog.remove(t.name.toLowerCase)
-            persist()
+            dropTable(spark, t)
             status("DROP", t.name)
           case None if ifExists != null =>
             // IF EXISTS semantics: a missing table is a no-op, not an error
@@ -2169,28 +2260,23 @@ object Ddl {
             throw new IllegalArgumentException(s"unknown keyed table: $name")
         }
       case AlterDefaultRe(name, colName, sqlExpr) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         require(!hasColumn(spark.table(t.name).columns, colName),
           s"column '$colName' already exists in ${t.name}")
-        // the default must resolve WITHOUT the table's columns (it is
+        // the default resolves WITHOUT the table's columns (it is
         // re-evaluated at INSERT time, where no prior row exists)
-        spark.sql(s"SELECT ($sqlExpr) AS `$colName`").schema
-        commit(spark, t, Mut("default", colName, sqlExpr))
+        commitAlter(spark, t, Mut("default", colName, sqlExpr))
         status("ALTER_ADD_DEFAULT", t.name)
       case AlterAddRe(name, colName, sqlExpr) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         require(!hasColumn(spark.table(t.name).columns, colName),
           s"column '$colName' already exists in ${t.name}")
-        // a qualified table analyzes the expression in its SELF-CONTAINED
-        // replay (CREATE VIEW refuses temp views/functions), so one that
-        // only resolves through session state fails here, not at restart
-        commit(spark, t, Mut("add", colName, sqlExpr))
+        // the expression is evaluated once, over the rows the table holds
+        // now, and stored; later INSERTs supply the column like any other
+        commitAlter(spark, t, Mut("add", colName, sqlExpr))
         status("ALTER_ADD", t.name)
       case AlterVisRe(name, colName) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         require(hasColumn(spark.table(t.name).columns, colName),
           s"column '$colName' not in ${t.name}")
         require(!t.muts.exists(_.op == "viscol"),
@@ -2210,20 +2296,19 @@ object Ddl {
         status("SET_VISIBILITY",
           if (visAuths.isEmpty) "none" else visAuths.mkString(","))
       case AlterDropRe(name, colName) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         require(!t.keys.exists(_.equalsIgnoreCase(colName)),
           s"cannot drop key column '$colName' of ${t.name}")
         require(!t.muts.exists(m => m.op == "viscol" && m.a.equalsIgnoreCase(colName)),
           s"cannot drop visibility column '$colName' of ${t.name}")
-        require(hasColumn(spark.table(t.name).columns, colName),
-          s"column '$colName' not in ${t.name}")
-        commit(spark, t, Mut("drop", colName, ""))
+        val dropped = spark.table(t.name).columns.find(_.equalsIgnoreCase(colName))
+          .getOrElse(throw new IllegalArgumentException(
+            s"column '$colName' not in ${t.name}"))
+        commitAlter(spark, t, Mut("drop", dropped, ""))
         status("ALTER_DROP", t.name)
       case AlterKeyedTypeRe(name, colName, typeStr)
           if lookup(name).isDefined =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         require(!t.keys.exists(_.equalsIgnoreCase(colName)),
           s"cannot change the type of key column '$colName' of ${t.name} " +
             "(keys are the rowkey mapping — the encoding would change)")
@@ -2233,18 +2318,11 @@ object Ddl {
         val wf = spark.table(t.name).schema.fields.find(_.name.equalsIgnoreCase(colName))
           .getOrElse(throw new IllegalArgumentException(
             s"column '$colName' not in ${t.name}"))
-        val toType = org.apache.spark.sql.types.DataType.fromDDL(typeStr)
-        require(org.apache.spark.sql.catalyst.expressions.Cast
-            .canUpCast(wf.dataType, toType) && wf.dataType != toType,
-          s"cannot ALTER COLUMN '$colName' TYPE ${toType.simpleString} " +
-            s"from ${wf.dataType.simpleString} — only lossless widening " +
-            "promotions are supported (committed values must re-read " +
-            "exactly)")
-        commit(spark, t, Mut("widen", wf.name, typeStr.trim))
-        status("ALTER_TYPE", s"${t.name} ($colName -> ${toType.simpleString})")
+        commitAlter(spark, t, Mut("widen", wf.name, typeStr.trim))
+        status("ALTER_TYPE", s"${t.name} ($colName -> " +
+          s"${DataType.fromDDL(typeStr).simpleString})")
       case AlterRenameRe(name, from, to) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         require(!t.keys.exists(_.equalsIgnoreCase(from)),
           s"cannot rename key column '$from' of ${t.name} (keys are the " +
             "rowkey mapping)")
@@ -2252,33 +2330,28 @@ object Ddl {
             m.op == "viscol" && m.a.equalsIgnoreCase(from)),
           s"cannot rename visibility column '$from' of ${t.name}")
         val cols = spark.table(t.name).columns
-        require(hasColumn(cols, from), s"column '$from' not in ${t.name}")
+        val renamed = cols.find(_.equalsIgnoreCase(from)).getOrElse(
+          throw new IllegalArgumentException(s"column '$from' not in ${t.name}"))
         require(!hasColumn(cols, to), s"column '$to' already exists in ${t.name}")
-        commit(spark, t, Mut("rename", from, to))
+        commitAlter(spark, t, Mut("rename", renamed, to))
         status("ALTER_RENAME", t.name)
       case CacheRe(name) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         spark.catalog.cacheTable(t.name)
         status("CACHE", t.name)
       case UncacheRe(name) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         spark.catalog.uncacheTable(t.name)
         status("UNCACHE", t.name)
       case LoadRe(path, name) =>
         // Astro's bulk-load statement (LOAD DATA INPATH ... INTO TABLE t
         // [ref*: per SURVEY.md §2 A7 — mount empty]): CSV rows appended to
         // the keyed table under its CURRENT schema, columns matched by
-        // header NAME (readCsvAligned). The aligned rows are written to a
-        // managed parquet snapshot now, as INSERT does, so every replay
-        // (restart, `graft.t`, time travel) reads parquet, never the CSV.
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
-        val snap = loadSnapshotPath(t)
-        readCsvAligned(spark, spark.table(t.name).schema, path)
-          .write.mode(SaveMode.Overwrite).parquet(snap)
-        commit(spark, t, Mut("load", path, snap))
+        // header NAME (readCsvAligned), and appended to the store now, so
+        // a CSV changed or deleted after the LOAD never changes the table.
+        val t = keyed(spark, name)
+        appendRows(t, readCsvAligned(spark, schemaOf(t), path))
+        commit(spark, t, Mut("load", path, ""))
         status("LOAD", t.name)
       case InsertValuesRe(name, valuesTail) =>
         // `VALUES (...), (...)` is a bare inline table in Spark SQL
@@ -2286,33 +2359,33 @@ object Ddl {
       case InsertSelectRe(name, selectTail) =>
         status("INSERT", insertInto(spark, name, selectTail))
       case DeleteRe(name, pred) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
+        spark.sql(s"DELETE FROM ${storeRef(t)} AS ${quotedCol(shortName(t))} " +
+          s"WHERE $pred")
         commit(spark, t, Mut("delete", pred, ""))
         status("DELETE", t.name)
       case UpdateRe(name, colName, valueExpr, pred) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         val field = spark.table(t.name).schema.fields
           .find(_.name.equalsIgnoreCase(colName)).getOrElse(
             throw new IllegalArgumentException(s"column '$colName' not in ${t.name}"))
         require(!t.keys.exists(_.equalsIgnoreCase(colName)),
           s"cannot update key column '$colName' of ${t.name}")
-        // freeze the rewrite at statement time: CAST pins the column's
-        // current type so the CASE branches can never silently widen it
-        val caseExpr = s"CASE WHEN ($pred) THEN CAST(($valueExpr) AS " +
-          s"${field.dataType.sql}) ELSE `$colName` END"
-        commit(spark, t, Mut("update", colName, caseExpr))
+        // CAST pins the column's current type so the value can never
+        // silently widen it; the log shows the update as the CASE it is
+        val value = s"CAST(($valueExpr) AS ${field.dataType.sql})"
+        spark.sql(s"UPDATE ${storeRef(t)} AS ${quotedCol(shortName(t))} " +
+          s"SET ${quotedCol(field.name)} = $value WHERE $pred")
+        commit(spark, t, Mut("update", colName,
+          s"CASE WHEN ($pred) THEN $value ELSE `$colName` END"))
         status("UPDATE", t.name)
       case ShowIndexesRe(_*) =>
         ensureLoaded()
         graft.plans.IndexCatalog.all()
+          // stale on ANY manifest publish since the build
           .map(ix => (ix.name, ix.sourcePath, ix.col,
-            if (ix.kvVersion >= 0L)
-              // kv-backed: stale on ANY manifest publish since the build
-              !scala.util.Try(graft.sources.GraftKvSink
-                .manifestVersion(ix.sourcePath)).toOption.contains(ix.kvVersion)
-            else indexTable(ix).exists(_.muts.length > ix.builtAtMuts)))
+            !scala.util.Try(graft.sources.GraftKvSink
+              .manifestVersion(ix.sourcePath)).toOption.contains(ix.kvVersion)))
           .toDF("index", "source", "col", "stale")
       case ShowVersionsRe(name) =>
         val t = lookupOrThrow(name)
@@ -2507,18 +2580,9 @@ object Ddl {
         // keyed-table wall-clock restore (r16): the mutation log's commit
         // clocks resolve the instant to a log prefix by the same rule
         // TIMESTAMP AS OF reads use, then the VERSION restore path runs
-        val t = lookupOrThrow(name)
-        require(t.createdTs > 0L && t.muts.forall(_.ts > 0L),
-          s"${t.name}: history predates commit clocks — use TO VERSION n " +
-            "(SHOW VERSIONS lists the log)")
-        val ms = graft.sources.GraftKvSink.parseTsMillis(tsStr)
-        require(ms >= t.createdTs,
-          s"timestamp $ms is before ${t.name} was created (${t.createdTs})")
-        val v = t.muts.count(_.ts <= ms)
-        val restored = t.copy(muts = t.muts.take(v))
-        catalog.put(restored.name.toLowerCase, restored)
-        persist()
-        register(spark, restored)
+        val t = keyed(spark, name)
+        val v = versionAt(t, graft.sources.GraftKvSink.parseTsMillis(tsStr))
+        restoreTo(spark, t, v)
         status("RESTORE", s"${t.name} (timestamp -> version $v)")
       case CloneRe(tgt, src, verStr, refStr, loc) =>
         // zero-copy branch: one manifest write references the source's
@@ -2552,50 +2616,19 @@ object Ddl {
         val e = graft.sources.GraftKvSink.restore(kvPathFor(name), verStr.toLong)
         status("RESTORE", s"$name (restore commit epoch $e)")
       case RestoreRe(name, verStr) =>
-        val t = lookupOrThrow(name)
-        val v = verStr.toInt
-        require(v >= 0 && v <= t.muts.length,
-          s"version $v out of range 0..${t.muts.length} for ${t.name}")
-        val restored = t.copy(muts = t.muts.take(v))
-        catalog.put(restored.name.toLowerCase, restored)
-        persist()
-        register(spark, restored)
+        val t = keyed(spark, name)
+        restoreTo(spark, t, verStr.toInt)
         status("RESTORE", t.name)
       case CreateMvRe(mvName, tName, groupsCsv, sumsCsv)
           if lookup(tName).isEmpty && kvTableFor(tName).isDefined =>
         createKvMv(spark, mvName, tName, groupsCsv, sumsCsv)
         status("CREATE_MV", mvName)
       case CreateMvRe(mvName, tName, groupsCsv, sumsCsv) =>
-        val t = lookupOrThrow(tName)
-        val (mvRoot, mvSnaps) = appendState(t).getOrElse(
-          throw new IllegalArgumentException(
-            s"materialized view requires an unmutated or append-only table; " +
-              s"${t.name} has non-append mutation(s) — the rewrite keys on " +
-              "base + snapshot scans only (REFRESH INDEX/MATERIALIZED VIEW " +
-              "squashes such a history first)"))
-        require(lookup(mvName).isEmpty && graft.plans.MvCatalog.named(mvName).isEmpty,
-          s"'$mvName' already names a table or materialized view")
-        ensureView(spark, t)
-        val (groups, sumCols) = validateMvColumns(
-          spark.table(t.name).schema, t.name, groupsCsv, sumsCsv)
-        val mv0 = graft.plans.MvDef(t.path, mvSnapshotPath(mvName), groups, "cnt",
-          sumCols.map(c => c.toLowerCase -> s"sum_${c.toLowerCase}").toMap, M,
-          table = t.name,
-          coveredPaths = if (mvRoot == t.path) Nil else Seq(mvRoot))
-        buildMvSnapshot(spark, mv0, from = Some(mvRoot))
-        // an append-only history folds in immediately (incremental build),
-        // so the MV serves the table's CURRENT view
-        val mv = if (mvSnaps.nonEmpty) incrementMvSnapshot(spark, mv0, mvSnaps)
-                 else mv0
-        graft.plans.MvCatalog.register(mvName, mv)
-        // the MV is also directly queryable under its own name
-        spark.read.parquet(mv.snapshotPath).createOrReplaceTempView(mvName)
-        // persist the definition: without this, a restart leaves the
-        // snapshot orphaned on disk and the rewrite silently stops firing
-        mvDefs.put(mvName.toLowerCase, mv)
-        persist()
+        // a keyed table's MV is a kv MV over its store
+        createKvMv(spark, mvName, s"graft.${storeKey(lookupOrThrow(tName))}",
+          groupsCsv, sumsCsv)
         status("CREATE_MV", mvName)
-      case RefreshMvRe(name) if mvNamed(name).exists(_.kvVersion >= 0L) =>
+      case RefreshMvRe(name) =>
         // kv-backed MV: O(DELTA) when the since-build history is pure
         // epoch-stamped appends — aggregate ONLY the new epochs' files
         // and APPEND the partial rows (the rewrite re-folds partials at
@@ -2603,7 +2636,8 @@ object Ddl {
         // fully. Stamp from the SAME manifest read the plan came from,
         // before any scan (mid-refresh commits leave it stale → rewrite
         // stands down, never serves missed rows).
-        val mv0 = mvNamed(name).get
+        val mv0 = mvNamed(name).getOrElse(
+          throw new IllegalArgumentException(s"unknown materialized view '$name'"))
         val (ver, head, headTs, deltaFiles) = graft.sources.GraftKvSink
           .appendedSince(mv0.sourcePath, mv0.kvHead, mv0.kvHeadTs)
         // NO-OP refresh short-circuits BEFORE any scan: with the MV still
@@ -2639,46 +2673,6 @@ object Ddl {
           spark.read.parquet(mv0.snapshotPath).createOrReplaceTempView(name)
         }
         status("REFRESH_MV", name)
-      case RefreshMvRe(name) =>
-        val mv0 = graft.plans.MvCatalog.named(name).getOrElse(
-          throw new IllegalArgumentException(s"unknown materialized view '$name'"))
-        val mvT = mvTable(mv0)
-        val mvCov0 = mv0.covered.map(normPath).toSet
-        // INCREMENTAL refresh for a history that is append-only since the
-        // covered root: aggregate ONLY the uncovered snapshots and fold
-        // them into the existing partials (counts and exact-decimal sums
-        // recombine losslessly) — O(delta), the classic decomposable-
-        // rollup view maintenance. A NON-APPEND history first SQUASHES the
-        // table (materializing its current replay) and rebuilds from that
-        // snapshot — never from the base parquet, whose pre-DML rows the
-        // old fallback silently served to direct MV reads.
-        val mv = mvT match {
-          case Some(t0) if t0.muts.nonEmpty =>
-            appendState(t0) match {
-              case Some((root, snaps)) if mvCov0.contains(normPath(root)) =>
-                val newPaths = snaps.filterNot(p => mvCov0.contains(normPath(p)))
-                if (newPaths.nonEmpty) incrementMvSnapshot(spark, mv0, newPaths)
-                else mv0
-              case st =>
-                val t = if (st.isDefined) t0 else squashTable(spark, t0)
-                val (root, snaps) = appendState(t).get
-                val mvR = mv0.copy(snapshotPath = mvSnapshotPath(name),
-                  coveredPaths = Seq(root))
-                buildMvSnapshot(spark, mvR, from = Some(root))
-                if (snaps.nonEmpty) incrementMvSnapshot(spark, mvR, snaps)
-                else mvR
-            }
-          case _ =>
-            // unmutated or untracked source: plain rebuild from the base
-            buildMvSnapshot(spark, mv0.copy(snapshotPath =
-              mvSnapshotPath(name)))
-            mv0.copy(snapshotPath = mvSnapshotPath(name), coveredPaths = Nil)
-        }
-        graft.plans.MvCatalog.register(name, mv)
-        mvDefs.put(name.toLowerCase, mv)
-        persist()
-        spark.read.parquet(mv.snapshotPath).createOrReplaceTempView(name)
-        status("REFRESH_MV", name)
       case DropMvRe(name) =>
         graft.plans.MvCatalog.unregister(name).getOrElse(
           throw new IllegalArgumentException(s"unknown materialized view '$name'"))
@@ -2693,70 +2687,46 @@ object Ddl {
         require(keyClause == null,
           s"CREATE INDEX ... KEY (...) is for kv catalog tables; keyed " +
             s"table '$tName' already declares its keys via MAPPED BY")
+        // a keyed table's index is a kv index over its store, keyed by the
+        // table's keys
         val t = lookupOrThrow(tName)
-        val (ixRoot, createSnaps) = appendState(t).getOrElse(
-          throw new IllegalArgumentException(
-            s"CREATE INDEX requires an unmutated or append-only table; " +
-              s"${t.name} has non-append mutation(s) — the rewrite keys on " +
-              "base + snapshot scans only (REFRESH INDEX/MATERIALIZED VIEW " +
-              "squashes such a history first)"))
-        require(graft.plans.IndexCatalog.named(idxName).isEmpty,
-          s"index '$idxName' already exists")
-        ensureView(spark, t)
-        val schema = spark.table(t.name).schema
-        require(hasColumn(schema.fieldNames, colName),
-          s"column '$colName' not in ${t.name}")
         require(!t.keys.exists(_.equalsIgnoreCase(colName)),
           s"'$colName' is a key column of ${t.name} — key predicates already " +
             "prune at the scan; an index would add nothing")
-        val ix0 = graft.plans.IndexDef(idxName, t.path, colName.toLowerCase,
-          indexStorePath(idxName), t.keys, builtAtMuts = t.muts.length,
-          table = t.name,
-          coveredPaths = if (ixRoot == t.path) Nil else Seq(ixRoot))
-        buildIndex(spark, ix0, from = Some(ixRoot))
-        // an append-only history is covered immediately (delta build per
-        // snapshot), so the index serves the table's CURRENT view
-        val ix = if (createSnaps.nonEmpty) {
-          deltaIndexAppend(spark, ix0, createSnaps)
-          ix0.copy(coveredPaths = ixRoot +: createSnaps)
-        } else ix0
-        graft.plans.IndexCatalog.register(ix)
-        indexDefs.put(idxName.toLowerCase, ix)
-        persist()
+        createKvIndex(spark, idxName, s"graft.${storeKey(t)}", colName,
+          Some(t.keys.mkString(",")))
         status("CREATE_INDEX", idxName)
       case RefreshIndexRe(name) =>
         val ix0 = idxNamed(name).getOrElse(
           throw new IllegalArgumentException(s"unknown index '$name'"))
-        if (ix0.kvVersion >= 0L) {
-          // kv-backed. O(DELTA) when the since-build history is pure
-          // epoch-stamped appends: index ONLY the new epochs' files (a
-          // file-targeted onlyFiles read — the changefeed's read shape)
-          // and append to the index parquet; anything else (DML,
-          // truncate, out-of-order publish) rebuilds fully from the
-          // table's current state. Stamp from the SAME manifest read the
-          // plan came from, captured before any scan — a commit landing
-          // mid-refresh leaves the recorded version behind the live one
-          // and the rewrite stands down (safe) rather than serving rows
-          // the index missed.
-          val (ver, head, headTs, deltaFiles) = graft.sources.GraftKvSink
-            .appendedSince(ix0.sourcePath, ix0.kvHead, ix0.kvHeadTs)
-          if (ver != ix0.kvVersion) { // no-op refresh: skip the O(table) rebuild
-            val fresh =
-              ix0.copy(kvVersion = ver, kvHead = head, kvHeadTs = headTs)
-            deltaFiles match {
-              case Some(names) =>
-                if (names.nonEmpty) deltaIndexAppendFrom(
-                  spark.read.format("graft.sources.GraftKvSink")
-                    .option("path", ix0.sourcePath)
-                    .option("onlyFiles", names.mkString(",")).load(),
-                  ix0)
-              case None => buildIndexFrom(spark.table(ix0.table), ix0)
-            }
-            graft.plans.IndexCatalog.register(fresh)
-            indexDefs.put(fresh.name.toLowerCase, fresh)
-            persist()
+        // kv-backed. O(DELTA) when the since-build history is pure
+        // epoch-stamped appends: index ONLY the new epochs' files (a
+        // file-targeted onlyFiles read — the changefeed's read shape)
+        // and append to the index parquet; anything else (DML,
+        // truncate, out-of-order publish) rebuilds fully from the
+        // table's current state. Stamp from the SAME manifest read the
+        // plan came from, captured before any scan — a commit landing
+        // mid-refresh leaves the recorded version behind the live one
+        // and the rewrite stands down (safe) rather than serving rows
+        // the index missed.
+        val (ver, head, headTs, deltaFiles) = graft.sources.GraftKvSink
+          .appendedSince(ix0.sourcePath, ix0.kvHead, ix0.kvHeadTs)
+        if (ver != ix0.kvVersion) { // no-op refresh: skip the O(table) rebuild
+          val fresh =
+            ix0.copy(kvVersion = ver, kvHead = head, kvHeadTs = headTs)
+          deltaFiles match {
+            case Some(names) =>
+              if (names.nonEmpty) deltaIndexAppendFrom(
+                spark.read.format("graft.sources.GraftKvSink")
+                  .option("path", ix0.sourcePath)
+                  .option("onlyFiles", names.mkString(",")).load(),
+                ix0)
+            case None => buildIndexFrom(spark.table(ix0.table), ix0)
           }
-        } else refreshKeyedIndex(spark, name, ix0)
+          graft.plans.IndexCatalog.register(fresh)
+          indexDefs.put(fresh.name.toLowerCase, fresh)
+          persist()
+        }
         status("REFRESH_INDEX", name)
       case DropIndexRe(name) =>
         graft.plans.IndexCatalog.unregister(name).getOrElse(
@@ -2764,8 +2734,7 @@ object Ddl {
         if (indexDefs.remove(name.toLowerCase).isDefined) persist()
         status("DROP_INDEX", name)
       case MergeRe(name, srcSql, alias, onCond) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         val cur = spark.table(t.name)
         require(alias != null,
           s"MERGE INTO ${t.name} requires an alias on the USING source " +
@@ -2793,36 +2762,31 @@ object Ddl {
           s"MERGE ON must cover exactly PRIMARY KEY (${t.keys.mkString(", ")})" +
             s" of ${t.name}; got (${onKeys.mkString(", ")})")
         // whole-row upsert (UPDATE SET * / INSERT *): the source must carry
-        // the table's full column set; align BY NAME with casts, then
-        // snapshot — a SELECT tail may reference session state that will
-        // not exist at restart replay, the snapshot always will
+        // the table's full column set, matched BY NAME with casts
         val src = spark.sql(srcSql)
         require(src.columns.map(_.toLowerCase).toSet ==
           cur.columns.map(_.toLowerCase).toSet,
           s"MERGE source columns (${src.columns.mkString(", ")}) must match " +
             s"${t.name} (${cur.columns.mkString(", ")})")
-        val aligned = src.select(cur.schema.fields.toSeq.map(f =>
-          col(quotedCol(f.name)).cast(f.dataType).as(f.name)): _*)
         // standard MERGE raises when the source matches a target row more
         // than once; silently keeping duplicate-key source rows would make
         // the "upsert" emit duplicates under the table's own PRIMARY KEY
-        val dupKeys = aligned.groupBy(t.keys.map(k => col(k)): _*)
+        val dupKeys = src.groupBy(t.keys.map(k => col(quotedCol(k))): _*)
           .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
           .limit(1).collect()
         require(dupKeys.isEmpty,
           s"MERGE source has duplicate PRIMARY KEY rows for ${t.name} " +
             s"(e.g. ${t.keys.zipWithIndex.map { case (k, i) =>
               s"$k=${dupKeys.head.get(i)}" }.mkString(", ")})")
-        val snap = loadSnapshotPath(t)
-        aligned.write.mode(SaveMode.Overwrite).parquet(snap)
-        commit(spark, t, Mut("merge", onCond, snap))
+        mergeIntoStore(spark, t, "__t", srcSql, alias, cur.schema,
+          Seq(MatchedUpdate(None, star = true, Nil), InsertRow(None, star = true, Nil, Nil)))
+        commit(spark, t, Mut("merge", onCond, ""))
         status("MERGE", t.name)
       case MergeGenRe(name, tgtAliasOpt, srcSqlParen, srcTable, alias, onCond,
           clausesText) =>
         val srcSql =
           if (srcSqlParen != null) srcSqlParen else s"SELECT * FROM $srcTable"
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         val cur = spark.table(t.name)
         require(alias != null,
           s"MERGE INTO ${t.name} requires an alias on the USING source " +
@@ -2910,95 +2874,8 @@ object Ddl {
           s"MERGE source has duplicate PRIMARY KEY rows for ${t.name} " +
             s"(e.g. ${t.keys.zipWithIndex.map { case (k, i) =>
               s"$k=${dup.head.get(i)}" }.mkString(", ")})")
-        val tj = cur.alias(tAlias)
-        val sj = src0.alias(alias)
-        def tcol(c: String) = col(s"$tAlias.${quotedCol(c)}")
-        def scol(c: String) = col(s"$alias.${quotedCol(c)}")
-        val keyEq = t.keys.map(k => tcol(k) === scol(k)).reduce(_ && _)
-        // first matching clause wins: CASE over the clause conditions
-        def clauseNum(cs: Seq[MergeClause]): Column =
-          cs.zipWithIndex.foldLeft(when(lit(false), 0)) { case (acc, (c, i)) =>
-            acc.when(c.cond.map(expr).getOrElse(lit(true)), i + 1)
-          }.otherwise(0)
-        // target row with assigned columns replaced (expressions see both
-        // aliases on matched rows, target only on by-source rows)
-        def updProjection(star: Boolean,
-            sets: Seq[(Option[String], String, String)]): Seq[Column] =
-          cur.schema.fields.toSeq.map { f =>
-            val assigned =
-              if (star) Some(s"$alias.${quotedCol(f.name)}")
-              else sets.find(_._2.equalsIgnoreCase(f.name)).map(_._3)
-            assigned match {
-              case Some(e) => expr(e).cast(f.dataType).as(f.name)
-              case None    => tcol(f.name).as(f.name)
-            }
-          }
-        val emptyOut = cur.limit(0)
-        val keyCols = t.keys.map(k => tcol(k).as(k))
-        val (updOut, touchedKeys) =
-          if (mClauses.isEmpty) (Nil, emptyOut.select(t.keys.map(k => col(quotedCol(k))): _*))
-          else {
-            val mNum = tj.join(sj, keyEq, "inner")
-              .withColumn("__mc", clauseNum(mClauses))
-            val outs = mClauses.zipWithIndex.collect {
-              case (MatchedUpdate(_, star, sets), i) =>
-                mNum.filter(col("__mc") === i + 1)
-                  .select(updProjection(star, sets): _*)
-            }
-            (outs, mNum.filter(col("__mc") =!= 0).select(keyCols: _*))
-          }
-        val insOut =
-          if (iClauses.isEmpty) Nil
-          else {
-            val tgtKeys = cur.select(t.keys.map(k => col(quotedCol(k))): _*).alias("__gt")
-            val antiEq = t.keys.map(k =>
-              scol(k) === col(s"__gt.${quotedCol(k)}")).reduce(_ && _)
-            val iNum = sj.join(tgtKeys, antiEq, "left_anti")
-              .withColumn("__ic", clauseNum(iClauses))
-            iClauses.zipWithIndex.map { case (InsertRow(_, star, cols0, vals), i) =>
-              val rows = iNum.filter(col("__ic") === i + 1)
-              val proj = cur.schema.fields.toSeq.map { f =>
-                if (star) scol(f.name).cast(f.dataType).as(f.name)
-                else cols0.indexWhere(_.equalsIgnoreCase(f.name)) match {
-                  case -1 => lit(null).cast(f.dataType).as(f.name)
-                  case j  => expr(vals(j)).cast(f.dataType).as(f.name)
-                }
-              }
-              rows.select(proj: _*)
-            }
-          }
-        val (bsOut, bsTouched) =
-          if (sClauses.isEmpty) (Nil, emptyOut.select(t.keys.map(k => col(quotedCol(k))): _*))
-          else {
-            // by-source clauses identify touched rows BY KEY (the drop set
-            // is a key anti-join): a NULL-key target row has no key
-            // identity, so an update would duplicate it and a delete would
-            // silently miss it — reject loudly, like NULL source keys
-            require(cur.filter(t.keys.map(k => col(quotedCol(k)).isNull)
-                .reduce(_ || _)).limit(1).collect().isEmpty,
-              s"MERGE with NOT MATCHED BY SOURCE clauses requires non-NULL " +
-                s"PRIMARY KEY values in ${t.name} (key identity drives the " +
-                "replay)")
-            val srcK = src0.select(t.keys.map(k => col(quotedCol(k))): _*).alias("__gs")
-            val antiEq = t.keys.map(k =>
-              tcol(k) === col(s"__gs.${quotedCol(k)}")).reduce(_ && _)
-            val sNum = tj.join(srcK, antiEq, "left_anti")
-              .withColumn("__sc", clauseNum(sClauses))
-            val outs = sClauses.zipWithIndex.collect {
-              case (BySourceUpdate(_, sets), i) =>
-                sNum.filter(col("__sc") === i + 1)
-                  .select(updProjection(star = false, sets): _*)
-            }
-            (outs, sNum.filter(col("__sc") =!= 0).select(keyCols: _*))
-          }
-        val outDf = (updOut ++ bsOut ++ insOut)
-          .reduceOption(_ unionByName _).getOrElse(emptyOut)
-        val dropDf = touchedKeys.unionByName(bsTouched)
-        val snapOut = loadSnapshotPath(t)
-        val snapDrop = snapOut + "_dropkeys"
-        outDf.write.mode(SaveMode.Overwrite).parquet(snapOut)
-        dropDf.write.mode(SaveMode.Overwrite).parquet(snapDrop)
-        commit(spark, t, Mut("merge2", snapDrop, snapOut))
+        mergeIntoStore(spark, t, tAlias, srcSql, alias, cur.schema, clauses)
+        commit(spark, t, Mut("merge2", onCond, ""))
         status("MERGE", t.name)
       case ViewRe(name, sql) =>
         require(lookup(name).isEmpty,
@@ -3011,8 +2888,7 @@ object Ddl {
           .map(t => (t.name, t.path, t.keys.mkString(",")))
           .toDF("table", "path", "keys")
       case DescRe(name) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         spark.table(t.name).schema.fields.toSeq
           .map(f => (f.name, f.dataType.simpleString,
             t.keys.exists(_.equalsIgnoreCase(f.name))))
@@ -3024,8 +2900,7 @@ object Ddl {
         // (a single global aggregate — the only driver action is the 1-row
         // result) and persisted with the catalog entry so a fresh process
         // can read them without touching the data.
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         val aggs = count(lit(1)).cast(StringType).as("n_rows") +:
           t.keys.flatMap(k => Seq(
             min(col(k)).cast(StringType).as(s"${k}_min"),
@@ -3070,8 +2945,7 @@ object Ddl {
             "need spark.sql.statistics.histogram.enabled)")
         }
       case AnalyzeColsRe(name, colList) =>
-        val t = lookupOrThrow(name)
-        ensureView(spark, t)
+        val t = keyed(spark, name)
         val df = spark.table(t.name)
         // optional column list: analyze only the named columns (and keep
         // every other column's previously recorded stats — Spark's partial
@@ -3217,12 +3091,6 @@ object Ddl {
       .toDF("stat", "value").orderBy(col("stat"))
   }
 
-  /** Fresh ANALYZE'd statistics for the CBO annotation rule
-    * (plans.AnalyzeStatsRule): the absolute path set a MUTATED table's
-    * replay reads (base parquet + every referenced snapshot) → its
-    * analyzed row count. Stats recorded before the newest mutation are
-    * stale and excluded; unmutated tables are excluded because their
-    * single parquet scan's file-size estimate is already sound. */
   /** ANALYZE'd per-column catalyst statistics (fresh only — recorded at
     * the CURRENT mutation-log position): NDV/nullCount always, min/max
     * parsed back under the recorded column type for the numeric types the
@@ -3277,37 +3145,24 @@ object Ddl {
     }.toMap
   }
 
-  def cboStats(): Seq[(String, Seq[String], Long,
+  /** Fresh ANALYZE'd statistics for the CBO annotation rule
+    * (plans.AnalyzeStatsRule): a MUTATED table's store directory → its
+    * analyzed row count and column statistics. Stats recorded before the
+    * newest mutation are stale and excluded; unmutated tables are
+    * excluded because their store scan reports sound statistics itself. */
+  def cboStats(): Map[String, (Long,
       Map[String, org.apache.spark.sql.catalyst.plans.logical.ColumnStat])] = {
     ensureLoaded()
     catalog.values.toSeq.flatMap { t =>
       val at = t.stats.find(_._1 == "__analyzed_at_muts__").map(_._2.toInt)
       val rows = t.stats.find(_._1 == "n_rows").map(_._2.toLong)
       (at, rows) match {
-        case (Some(a), Some(n)) if a == t.muts.length && t.muts.nonEmpty =>
-          val snaps = t.muts.foldLeft(List(t.path)) { (acc, m) => m match {
-            case Mut("load", _, b, _) if b.nonEmpty => acc :+ b
-            case Mut("insert", _, b, _)             => acc :+ b
-            // star-merge replay reads its snapshot TWICE (union branch +
-            // the NOT-EXISTS/anti-join probe side), so the leaf multiset
-            // must list it twice or the exact-multiset check never matches
-            case Mut("merge", _, b, _)              => acc :+ b :+ b
-            case Mut("merge2", a0, b, _)            => acc :+ a0 :+ b
-            // squash resets the replay to read only its snapshot
-            case Mut("squash", _, b, _)             => List(b)
-            case _                               => acc
-          }}
-          // sorted path MULTISET: the annotation requires the subtree to
-          // read the table's full replay — every path exactly once — so an
-          // asOf prefix, a self-union, or a bare base read never matches
-          val paths = snaps.map(p =>
-            java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString)
-            .sorted
-          viewNonce.get(t.name.toLowerCase)
-            .map(nonce => (nonce, paths, n, colStatsOf(t)))
+        case (Some(a), Some(n)) if a == t.muts.length && t.muts.nonEmpty &&
+            t.store.nonEmpty =>
+          Some(normPath(t.store) -> (n, colStatsOf(t)))
         case _ => None
       }
-    }
+    }.toMap
   }
 
   /** A8 judged round trip: exercises the full statement set end to end —
@@ -3410,9 +3265,9 @@ object Ddl {
 
   /** A8 judged TIME-TRAVEL round trip: CREATE → INSERT → DELETE, then one
     * frame holding (version, n_rows, key_sum) for every log version 0..2
-    * via [[asOf]] — the HBase cell-version analogue made relational: the
-    * mutation log IS the version history, so any prefix reconstructs a
-    * past state with zero data copies. The oracle replays each statement
+    * via [[asOf]] — the HBase cell-version analogue made relational: each
+    * logged version names the store epoch it ended at, so every past
+    * state reads back without a data copy. The oracle replays each statement
     * prefix relationally, so all three versions are hash-gated at once. */
   def ddlTimetravel(s: SparkSession, d: String): DataFrame = {
     if (lookup("tt_rt").isDefined) execute(s, "DROP TABLE tt_rt")
@@ -3429,8 +3284,8 @@ object Ddl {
   /** A8 judged SQL-surface time travel on a KEYED table: the same
     * mutation-log versioning as [[ddlTimetravel]], but reached through
     * plain `SELECT … FROM graft.t VERSION AS OF n` — the injected parser
-    * expands each reference to the replay SQL of that log prefix (zero
-    * copies), so version reads compose with any SQL (here a 4-way UNION
+    * expands each reference to a read of the store at that version's
+    * epoch, so version reads compose with any SQL (here a 4-way UNION
     * over three boundary states plus the current table in ONE statement).
     * Out-of-range versions refuse loudly (pinned in DdlSpec); the
     * wall-clock spelling is [[sqlTimestampAsof]]. */
@@ -3500,7 +3355,8 @@ object Ddl {
     * 'pii&emea' stays hidden, 'pii' and 'pub|pii' show) and none (only
     * unlabeled rows show). Dataset analysis is eager, so each section
     * binds the view as registered under ITS auth set; the oracle replays
-    * the expected label algebra explicitly. */
+    * the expected label algebra explicitly. The result is collected
+    * before the table is dropped, since it reads the table's store. */
   def ddlVisibility(s: SparkSession, d: String): DataFrame = {
     if (lookup("vis_rt").isDefined) execute(s, "DROP TABLE vis_rt")
     execute(s, s"CREATE TABLE vis_rt MAPPED BY '$d/nation.parquet' KEYS (n_nationkey)")
@@ -3519,8 +3375,9 @@ object Ddl {
       val underPii = section("pii")
       execute(s, "SET VISIBILITY NONE")
       val underNone = section("none")
-      underPii.unionByName(underNone)
+      val out = underPii.unionByName(underNone)
         .orderBy(col("auths"), col("n_regionkey"))
+      s.createDataFrame(out.collectAsList(), out.schema)
     } finally {
       execute(s, "SET VISIBILITY NONE")
       execute(s, "DROP TABLE vis_rt")
@@ -3538,7 +3395,7 @@ object Ddl {
   }
 
   /** A8/CBO judged: `ANALYZE … FOR COLUMNS` feeds per-column NDV/min/max/
-    * null counts into the replay annotation, so Spark's JoinEstimation can
+    * null counts into the store-scan annotation, so Spark's JoinEstimation can
     * size a keyed-⋈-keyed JOIN OUTPUT (row counts alone cannot — the
     * estimator needs the join keys' NDV) and broadcast it into a wide
     * fact with no hints. Both plan arms are asserted (the size-only
@@ -3660,10 +3517,10 @@ object Ddl {
 
   /** A8/A9 judged: DEFAULT columns for keyed MAPPED-BY tables — the same
     * CURRENT_DEFAULT-only contract the kv catalog enforces (kv_defaults),
-    * now in the mutation-log world: ADD COLUMN ... DEFAULT leaves every
-    * existing row NULL (history is immutable; the replay splices a TYPED
-    * NULL), an INSERT omitting the trailing column gets the default
-    * spliced into its snapshot at write time, and a full-width INSERT
+    * now for keyed tables: ADD COLUMN ... DEFAULT leaves every existing
+    * row NULL (the store column is added empty), an INSERT omitting the
+    * trailing column gets the default spliced into its rows at write
+    * time, and a full-width INSERT
     * overrides it. The oracle replays all three populations relationally,
     * so a default leaking into history — or an omitted column NOT getting
     * the default — hash-mismatches. */
@@ -3986,7 +3843,7 @@ object Ddl {
     * hand-written per query. Bounds may cover a prefix of the key columns. */
   def keyRangeScan(spark: SparkSession, table: String,
       lower: Seq[Any], upper: Seq[Any]): DataFrame = {
-    val t = replayable(spark, table).getOrElse(
+    val t = current(spark, table).getOrElse(
       throw new IllegalArgumentException(s"unknown keyed table: $table"))
     ensureView(spark, t)
     require(lower.length <= t.keys.length && upper.length <= t.keys.length,

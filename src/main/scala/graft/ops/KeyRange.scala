@@ -3058,10 +3058,10 @@ object KeyRange {
 
   /** A10 (transparent half): the SECONDARY-INDEX REWRITE exercised through
     * pure DDL + a PLAIN query — `CREATE INDEX` through the SQL surface,
-    * then an ordinary `filter(o_custkey IN …)` over the raw parquet that
+    * then an ordinary `filter(o_custkey IN …)` over the keyed table that
     * the optimizer (plans.IndexRewriteRule) redirects to index probe +
-    * broadcast key semi-join, with the residual price predicate staying a
-    * plain filter. The oracle computes the same predicate full-scan, so a
+    * broadcast key semi-join on the table's kv store, with the residual
+    * price predicate staying a plain filter. The oracle computes the same predicate full-scan, so a
     * hash match proves the index path reproduced full-scan semantics; the
     * `secondary_index` query beside it is the hand-written plan this rule
     * derives automatically. Same registration hygiene as mv_rewrite:
@@ -3074,7 +3074,7 @@ object KeyRange {
     Ddl.execute(s,
       s"CREATE TABLE idxr_t MAPPED BY '$d/orders.parquet' KEYS (o_orderkey)")
     Ddl.execute(s, "CREATE INDEX idxr_ck ON idxr_t (o_custkey)")
-    try indexRewriteFrame(s, d).write.mode(SaveMode.Overwrite).parquet(out)
+    try indexRewriteFrame(s, "idxr_t").write.mode(SaveMode.Overwrite).parquet(out)
     finally {
       Ddl.execute(s, "DROP INDEX idxr_ck")
       Ddl.execute(s, "DROP TABLE idxr_t")
@@ -3083,14 +3083,13 @@ object KeyRange {
   }
 
   /** A10 × A6 judged: INDEX MAINTENANCE UNDER NON-APPEND DML — CREATE
-    * INDEX, then a DELETE (which stales the index and structurally vetoes
-    * the rewrite), then REFRESH INDEX. The refresh SQUASHES the table's
-    * replay into a materialized snapshot and rebuilds the index from it,
-    * so the view becomes a single-parquet read the transparent rewrite
-    * fires on again — the function asserts the semi-join is back in the
-    * optimized plan of a TABLE read (not a direct base scan). The oracle
-    * recomputes the predicate over the post-DELETE state full-scan,
-    * hash-gating that squash + rebuilt index reproduce exact semantics. */
+    * INDEX, then a DELETE (which moves the table's kv manifest past the
+    * version the index was built at, so the rewrite stands down), then
+    * REFRESH INDEX, which rebuilds the index from the table's current
+    * state — the function asserts the semi-join is back in the optimized
+    * plan of a TABLE read. The oracle recomputes the predicate over the
+    * post-DELETE state full-scan, hash-gating that the rebuilt index
+    * reproduces exact semantics. */
   def indexRewriteDml(s: SparkSession, d: String): DataFrame = {
     val out = s"$scratch/index_rewrite_dml_out"
     if (Ddl.lookup("idxd_t").isDefined) Ddl.execute(s, "DROP TABLE idxd_t")
@@ -3174,11 +3173,12 @@ object KeyRange {
     s.read.parquet(out).orderBy(col("o_orderkey"))
   }
 
-  /** The lazy rewritten frame with its index registration LIVE — split out
-    * so PlanSpec can assert the semi-join + index scan in the optimized
-    * plan. Callers must drop the index afterwards (indexRewrite does). */
-  def indexRewriteFrame(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/orders.parquet")
+  /** The lazy rewritten frame over keyed table `table` (orders, indexed on
+    * o_custkey) with its index registration LIVE — split out so PlanSpec
+    * can assert the semi-join + index scan in the optimized plan. Callers
+    * must drop the index afterwards (indexRewrite does). */
+  def indexRewriteFrame(s: SparkSession, table: String): DataFrame =
+    s.table(table)
       .filter(col("o_custkey").isin(11L, 57L, 123L) &&
         col("o_totalprice") > 1000.0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),

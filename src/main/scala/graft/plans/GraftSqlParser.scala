@@ -70,17 +70,16 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     // top level
     else plan.transformUpWithSubqueries {
       // SQL time travel on KEYED tables: `graft.t VERSION AS OF n` expands
-      // to the replay SQL of the first n mutations — the mutation log IS
-      // the version history, so any prefix is a zero-copy past state
-      // (connector tables fall through: their catalog resolves versions).
+      // to a read of the table's kv store at the epoch the n-th logged
+      // mutation ended at, with the columns version n had (connector
+      // tables fall through: their catalog resolves versions).
       case tt @ org.apache.spark.sql.catalyst.analysis.RelationTimeTravel(
             u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation,
             ts, version)
           if u.multipartIdentifier.length >= 2 &&
             u.multipartIdentifier.head.equalsIgnoreCase("graft") &&
             Ddl.dsv2Get(u.multipartIdentifier.tail.mkString(".")).isEmpty &&
-            // existence only — building the replay SQL here would do the
-            // full rebuild (incl. a parquet footer read) twice per ref
+            // existence only — the read's SQL is built once, below
             Ddl.lookup(u.multipartIdentifier.tail.mkString(".")).isDefined =>
         val rest = u.multipartIdentifier.tail.mkString(".")
         // TIMESTAMP AS OF: resolve the wall clock against the mutation

@@ -16,39 +16,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * non-unique key would admit rows whose indexed value never matched. */
 case class IndexDef(name: String, sourcePath: String, col: String,
     indexPath: String, keyCols: Seq[String],
-    // mutation-log length of the backing keyed table when this index was
-    // (re)built — later DML makes the index stale (SHOW INDEXES flags it,
-    // DML prints a one-line notice; the structural veto already keeps the
-    // rewrite itself sound)
-    builtAtMuts: Int = 0,
-    // every parquet path whose rows the index contains: the base alone
-    // after a full build, base + INSERT/LOAD snapshots after a delta
-    // REFRESH on an append-only table. The rewrite fires on any scan whose
-    // path set is a SUBSET of this (a superset index is sound for the
-    // semi-join: probe keys absent from the scanned side simply never
-    // match). Empty = just sourcePath (pre-delta catalogs).
-    coveredPaths: Seq[String] = Nil,
-    // the keyed table this index was created on — several tables may map
-    // the same base parquet, so staleness/delta tracking must follow the
-    // table by NAME, not by path. Empty = pre-r13 catalogs (path fallback).
+    // the kv catalog table the index was created on (`graft.<name>`; a
+    // keyed table's store for keyed tables) — what a full REFRESH reads
     table: String = "",
-    // kv CATALOG tables: the manifest's optimistic-concurrency version
-    // this index was built at. >= 0 marks a kv-backed index; the rewrite
-    // re-checks the live manifest version and stands down on ANY
-    // divergence (append, DML, compaction — all bump it), so a stale
-    // index can never serve a read. -1 = keyed-table index (mutation-log
-    // staleness applies instead).
+    // the manifest's optimistic-concurrency version this index was built
+    // at; the rewrite re-checks the live manifest version and stands down
+    // on ANY divergence (append, DML, compaction — all bump it), so a
+    // stale index can never serve a read
     kvVersion: Long = -1L,
     // the newest epoch (and its commit ts) the index covers — the anchor
     // REFRESH INDEX uses to plan an O(delta) append of just the epochs
     // committed since, when the interim history was pure appends. -1 =
-    // keyed-table index, or a kv history where delta refresh is unsound
-    // (epoch-less files / pre-timestamp manifest) -> full rebuild.
+    // a kv history where delta refresh is unsound (epoch-less files /
+    // pre-timestamp manifest) -> full rebuild.
     kvHead: Long = -1L,
-    kvHeadTs: Long = -1L) {
-  def covered: Seq[String] =
-    if (coveredPaths.isEmpty) Seq(sourcePath) else coveredPaths
-}
+    kvHeadTs: Long = -1L)
 
 /** Process-global index registry, path-keyed for rewrite lookups and
   * name-keyed for the DDL surface — same shape as [[MvCatalog]]. */
@@ -81,32 +63,13 @@ object IndexCatalog {
   def clear(): Unit = { byPath.clear(); byName.clear() }
   def isEmpty: Boolean = byPath.isEmpty
   def all(): Seq[IndexDef] = byName.values.toSeq.sortBy(_.name)
-  /** Indexes usable for a scan reading exactly `paths`: every scanned path
-    * must be COVERED by the index (rows the index has never seen could
-    * match the predicate but be dropped by the semi-join — unsound), while
-    * the index covering MORE paths than the scan is safe (extra probe keys
-    * never match). Single-path scans keep the fast byPath lookup; the
-    * subset rule additionally serves append-only replay shapes, where the
-    * filter lands on each Union branch (base, snapshot) separately. */
-  def forPaths(paths: Seq[String]): Map[String, IndexDef] = {
-    val ps = paths.map(norm).toSet
-    if (ps.isEmpty) Map.empty
-    else {
-      // the source-path fast lookup must still pass the covered-subset
-      // rule: after a squash-rebuild the index covers the SQUASH snapshot
-      // only, so a bare read of the original source path (whose deleted
-      // rows the index no longer lists) must NOT be redirected
-      val direct =
-        if (ps.sizeIs == 1)
-          byPath.getOrElse(ps.head, Map.empty)
-            .filter { case (_, ix) => ps.subsetOf(ix.covered.map(norm).toSet) }
-        else Map.empty[String, IndexDef]
-      val viaCover = byName.values
-        .filter(ix => ps.subsetOf(ix.covered.map(norm).toSet))
-        .map(ix => ix.col.toLowerCase -> ix).toMap
-      viaCover ++ direct
+  /** Indexes usable for a scan reading exactly `paths`: those on its one
+    * source (a multi-path scan reads rows no index has seen). */
+  def forPaths(paths: Seq[String]): Map[String, IndexDef] =
+    paths.map(norm).distinct match {
+      case Seq(p) => byPath.getOrElse(p, Map.empty)
+      case _      => Map.empty
     }
-  }
 }
 
 /** Transparent SECONDARY-INDEX rewrite — the optimizer half of the A10 row:
@@ -129,8 +92,9 @@ object IndexCatalog {
   * Like [[MvRewriteRule]]: a no-op unless the registry has entries AND the
   * scan path matches; idempotent (the rewritten Filter no longer carries
   * the indexed conjunct), so it is safe under the optimizer's fixed-point
-  * user batch. Index freshness is the CREATE/REFRESH INDEX contract —
-  * indexes attach to unmutated keyed tables only, mirroring the MV rule. */
+  * user batch. Index freshness is the CREATE/REFRESH INDEX contract — the
+  * rule stands down once the source's manifest moves past the build,
+  * mirroring the MV rule. */
 class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
   with PredicateHelper {
 
@@ -167,15 +131,13 @@ class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       indexablePred(c).flatMap(a => idxs.get(a.name.toLowerCase).map((c, a, _)))
     }.nextOption().getOrElse(return None)
     val (pred, attr, idx) = hit
-    // kv-backed index freshness: ANY manifest publish since the build
-    // (append, DML, compaction, truncate) bumps the version, and a stale
-    // index would drop rows the semi-join never saw — stand down; SHOW
-    // INDEXES flags it and REFRESH INDEX rebuilds at the live version.
-    if (idx.kvVersion >= 0L) {
-      val live = scala.util.Try(
-        graft.sources.GraftKvSink.manifestVersion(idx.sourcePath)).toOption
-      if (!live.contains(idx.kvVersion)) return None
-    }
+    // freshness: ANY manifest publish since the build (append, DML,
+    // compaction, truncate) bumps the version, and a stale index would
+    // drop rows the semi-join never saw — stand down; SHOW INDEXES flags
+    // it and REFRESH INDEX rebuilds at the live version.
+    val live = scala.util.Try(
+      graft.sources.GraftKvSink.manifestVersion(idx.sourcePath)).toOption
+    if (!live.contains(idx.kvVersion)) return None
     // every key column must survive in the child's output to join on
     val keyAttrs = idx.keyCols.map { k =>
       child.output.find(_.name.equalsIgnoreCase(k)).getOrElse(return None)

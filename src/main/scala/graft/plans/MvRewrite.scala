@@ -23,25 +23,17 @@ import org.apache.spark.sql.types.{DataType, LongType}
 case class MvDef(sourcePath: String, snapshotPath: String,
     groupCols: Seq[String], cntCol: String, sums: Map[String, String],
     decType: DataType,
-    // every parquet path whose rows the snapshot aggregates: base alone
-    // after a full build, base + INSERT/LOAD snapshots after an
-    // INCREMENTAL refresh. Unlike the index's subset rule, an aggregate
-    // rewrite demands the scanned path multiset EQUAL this exactly — a
-    // subset scan would fold rows it never read, a superset would miss
-    // some. Empty = just sourcePath (pre-r13 catalogs).
-    coveredPaths: Seq[String] = Nil,
-    // owning keyed table by NAME (several tables may map one parquet)
+    // the kv catalog table the MV aggregates (`graft.<name>`; a keyed
+    // table's store for keyed tables) — what a full REFRESH reads
     table: String = "",
     // kv CATALOG tables (same contract as IndexDef): the manifest version
     // this MV was built at — the rewrite stands down on any divergence;
     // (kvHead, kvHeadTs) anchor O(delta) incremental refresh when the
-    // since-build history is pure appends. -1 = keyed-table MV.
+    // since-build history is pure appends. -1 = a parquet source
+    // (name-less registrations), which is never checked.
     kvVersion: Long = -1L,
     kvHead: Long = -1L,
-    kvHeadTs: Long = -1L) {
-  def covered: Seq[String] =
-    if (coveredPaths.isEmpty) Seq(sourcePath) else coveredPaths
-}
+    kvHeadTs: Long = -1L)
 
 /** Process-global MV registry: rewrite lookups key on the normalized
   * source path; the DDL surface (CREATE/REFRESH/DROP MATERIALIZED VIEW)
@@ -73,19 +65,11 @@ object MvCatalog {
   def unregisterPath(path: String): Option[MvDef] = mvs.remove(norm(path))
   def clear(): Unit = { mvs.clear(); byName.clear() }
   def isEmpty: Boolean = mvs.isEmpty
-  /** Rewrite only when the scanned path MULTISET equals the MV's covered
-    * set exactly: a read that includes an uncovered path would miss its
-    * rows in the snapshot, a read of a covered subset (or a duplicated
-    * path) would fold rows it never scanned. */
-  def forPaths(paths: Seq[String]): Option[MvDef] = {
-    val ps = paths.map(norm).sorted
-    val direct = if (ps.sizeIs == 1) mvs.get(ps.head) else None
-    // the source-path fast lookup must still verify the covered multiset:
-    // after a squash-rebuild the MV covers the SQUASH snapshot, so a bare
-    // read of the original source path no longer matches it
-    direct.filter(_.covered.map(norm).sorted == ps).orElse(
-      (mvs.values ++ direct).find(mv => mv.covered.map(norm).sorted == ps))
-  }
+  /** Rewrite only a read of exactly the MV's source, once: a read that
+    * includes another path would miss its rows in the snapshot, a read
+    * of the source twice would fold the snapshot once. */
+  def forPaths(paths: Seq[String]): Option[MvDef] =
+    if (paths.sizeIs == 1) mvs.get(norm(paths.head)) else None
 }
 
 /** The A6 read half — transparent materialized-view REWRITE, the Calcite

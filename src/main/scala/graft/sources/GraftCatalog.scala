@@ -36,10 +36,11 @@ import graft.ops.Ddl
   *    CREATE schema bootstraps the first write).
   *  - **Keyed tables and materialized views** (ViewCatalog half):
   *    `SELECT * FROM graft.t` (or graft.db.t) resolves the MAPPED BY
-  *    table as a catalog VIEW whose body is the same self-contained SQL
-  *    the persistent-view path replays (base parquet + mutation log), so
-  *    reads through the catalog see exactly the mutated table and keep
-  *    parquet pushdown. MV names resolve to their snapshot parquet.
+  *    table as a catalog VIEW whose body reads the table's kv store
+  *    (`graft.__keyed.t`, itself a connector table of this catalog) — the
+  *    same body as the table's session view, so reads through the catalog
+  *    see exactly the mutated table with full kv pushdown. MV names
+  *    resolve to their snapshot parquet.
   *
   * DDL through this catalog is deliberately minimal: createTable/
   * dropTable manage connector-table METADATA only (dropping never
@@ -934,8 +935,9 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
   // ----------------------------------------------------------------- views
 
   /** Keyed tables and MV snapshots surface as catalog views: the body is
-    * self-contained SQL (parquet path + replayed mutation log), so the
-    * analyzer expands them to plain parquet scans with full pushdown. */
+    * self-contained SQL (a read of the table's kv store, or the MV's
+    * snapshot parquet), so the analyzer expands them to plain scans with
+    * full pushdown. */
   private def viewSql(ident: Identifier): Option[String] =
     Ddl.objectSqlFor(session, key(ident))
 

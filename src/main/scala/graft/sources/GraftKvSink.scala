@@ -996,6 +996,35 @@ object GraftKvSink {
     }
   }
 
+  /** [[withCommitLock]] for a commit that may run outside Spark's own V2
+    * write commands (RESTORE, a path-route or streaming write): once the
+    * lock is released, every cached plan reading a catalog table over
+    * `dir` is re-cached. Spark refreshes its cache only around its own
+    * commands, and loads of one kv table compare equal, so a cached plan
+    * would otherwise keep serving the rows from before the commit. */
+  private[graft] def committing[T](dir: String)(f: => T): T = {
+    val r = withCommitLock(dir)(f)
+    // the commit is published: a failed re-cache must not report it failed
+    try recacheDir(dir)
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[graft] re-caching plans over $dir failed: $e")
+    }
+    r
+  }
+
+  private def recacheDir(dir: String): Unit =
+    org.apache.spark.sql.SparkSession.getActiveSession.foreach { active =>
+      val s = active.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val cm = s.sharedState.cacheManager
+      if (!cm.isEmpty) {
+        def norm(p: String) = Paths.get(p.stripPrefix("file:")).toAbsolutePath.normalize
+        val p = norm(dir)
+        graft.ops.Ddl.dsv2List().filter(d =>
+          d.provider == "graft_kv" && d.options.get("path").exists(norm(_) == p))
+          .foreach(d => cm.recacheTableOrView(s, "graft" +: d.name.split('.').toSeq))
+      }
+    }
+
   /** Tiny hand-rolled JSON (schema via StructType.json, files as a flat
     * list) — same zero-dependency approach as the DDL catalog. */
   private[sources] def writeManifest(dir: String, schema: StructType,
@@ -2398,7 +2427,7 @@ object GraftKvSink {
     * any retraction (rewrittenUpTo); readers are unaffected mid-flight
     * (single atomic visibility switch). Returns the restore commit's
     * epoch, or the current head unchanged when already at the boundary. */
-  def restore(dir: String, epoch: Long): Long = withCommitLock(dir) {
+  def restore(dir: String, epoch: Long): Long = committing(dir) {
     val mfp = manifestPath(dir)
     require(Files.exists(mfp), s"graft_kv: no manifest at $dir")
     val m = readManifest(mfp)
@@ -3833,6 +3862,17 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
   private[graft] def path: String = dir
   private[graft] def pinned: Option[Long] = pinnedEpoch
 
+  /** Two loads of one table at one version are the same table: Spark
+    * re-resolves a view's V2 tables on every access, and the cache manager
+    * matches a cached plan by relation equality, so without this a view
+    * over a kv table could never be found cached (CACHE TABLE). */
+  override def equals(o: Any): Boolean = o match {
+    case k: GraftKvTable =>
+      k.path == dir && k.pinned == pinnedEpoch && k.schema == tableSchema
+    case _ => false
+  }
+  override def hashCode: Int = (dir, pinnedEpoch, tableSchema).hashCode
+
   /** `_file` / `_pos` metadata columns (the Iceberg `_metadata.file_name` /
     * `_metadata.row_index` analogues): which manifest-listed file holds the
     * row, and the row's line ordinal within it. Queryable directly;
@@ -4895,7 +4935,7 @@ final class GraftKvStreamingWrite(dir: String, schema: StructType,
     }
   }
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = GraftKvSink.withCommitLock(dir) {
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = GraftKvSink.committing(dir) {
     // same empty-file suppression as the batch path
     val committed0 = GraftKvCommit.flatten(messages)
       .filter { m =>
@@ -5325,7 +5365,7 @@ final class GraftKvBatchWrite(dir: String, schema: StructType, replace: Boolean,
   /** Driver-side finalize: only files named by successful task attempts
     * become visible; stray temp files from failed/speculative attempts are
     * swept; the manifest publish is the single visibility switch. */
-  override def commit(messages: Array[WriterCommitMessage]): Unit = GraftKvSink.withCommitLock(dir) {
+  override def commit(messages: Array[WriterCommitMessage]): Unit = GraftKvSink.committing(dir) {
     // conflict gate FIRST (under the lock): refuse before moving any task
     // file if a concurrent commit made this write unmergeable
     // ONE manifest parse per commit (the per-file stats/bloom maps make

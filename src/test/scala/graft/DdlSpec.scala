@@ -420,14 +420,18 @@ class DdlSpec extends SparkSpec {
         .head().getString(0) == "REFRESH_MV")
       assert(spark.sql("DROP MATERIALIZED VIEW mv_status")
         .head().getString(0) == "DROP_MV")
-      assert(scanPaths(spark.table("mv_src").groupBy(col("o_orderstatus")).count())
-        .exists(_.contains("orders.parquet")))
-      // a mutated table refuses an MV (rewrite keys on the base parquet)
-      spark.sql("DELETE FROM mv_src WHERE o_orderkey < 0")
-      intercept[IllegalArgumentException] {
-        ops.Ddl.execute(spark,
-          "CREATE MATERIALIZED VIEW mv2 ON mv_src GROUP BY (o_orderstatus) SUMS (o_totalprice)")
-      }
+      assert(!scanPaths(spark.table("mv_src").groupBy(col("o_orderstatus")).count())
+        .exists(_.contains("graft_mvs")))
+      // a mutated table takes an MV over its current state, and the
+      // rewrite serves the table read with the post-DML counts
+      spark.sql("DELETE FROM mv_src WHERE o_orderstatus = 'F'")
+      ops.Ddl.execute(spark,
+        "CREATE MATERIALIZED VIEW mv2 ON mv_src GROUP BY (o_orderstatus) SUMS (o_totalprice)")
+      val q2 = spark.table("mv_src").groupBy(col("o_orderstatus")).agg(count(lit(1)).as("cnt"))
+      assert(scanPaths(q2).exists(_.contains("graft_mvs")), scanPaths(q2).mkString(";"))
+      assert(q2.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        direct - "F")
+      spark.sql("DROP MATERIALIZED VIEW mv2")
       spark.sql("DROP TABLE mv_src")
     } finally graft.plans.MvCatalog.clear()
   }
@@ -656,27 +660,28 @@ class DdlSpec extends SparkSpec {
           sum(col("n_nationkey").cast("decimal(18,6)")).as("s"))
         .orderBy(col("n_regionkey")).collect().toSeq
       def snapPath = graft.plans.MvCatalog.named("imv_mv").get.snapshotPath
+      def snapRows = spark.read.parquet(snapPath).count()
+      def kvVersion = graft.plans.MvCatalog.named("imv_mv").get.kvVersion
       val before = direct
+      val rows0 = snapRows
       ops.Ddl.execute(spark, "INSERT INTO imv_t VALUES (90, 'inc-a', 7)")
       ops.Ddl.execute(spark, "INSERT INTO imv_t VALUES (91, 'inc-b', 1)")
-      val p0 = snapPath
       ops.Ddl.execute(spark, "REFRESH MATERIALIZED VIEW imv_mv")
-      // the refresh was INCREMENTAL: a new versioned snapshot, covering
-      // base + both insert snapshots
-      assert(snapPath != p0, snapPath)
-      assert(graft.plans.MvCatalog.named("imv_mv").get.covered.length == 3)
+      // the refresh was INCREMENTAL: one partial row per inserted group
+      // appended to the snapshot, no rebuild
+      assert(snapRows == rows0 + 2, snapRows)
       // the snapshot's partials fold to exactly the direct aggregation
       // over the CURRENT view (group 7 gained a row, group 1 gained a row)
       val after = direct
       assert(after != before)
-      val fromMv = spark.read.parquet(snapPath)
+      def fromMv = spark.read.parquet(snapPath)
         .groupBy(col("n_regionkey"))
         .agg(sum(col("cnt")).cast("long").as("cnt"),
           sum(col("sum_n_nationkey")).cast("decimal(28,6)").as("s"))
         .orderBy(col("n_regionkey")).collect().toSeq
       assert(fromMv == after, s"$fromMv vs $after")
-      // the transparent rewrite fires on the VIEW's union read: the
-      // aggregate redirects to the snapshot parquet
+      // the transparent rewrite fires on the table read: the aggregate
+      // redirects to the snapshot parquet
       val agg = spark.table("imv_t").groupBy(col("n_regionkey"))
         .agg(sum(col("n_nationkey").cast("decimal(18,6)")).as("s"))
       val leaves = agg.queryExecution.optimizedPlan.collect {
@@ -688,15 +693,15 @@ class DdlSpec extends SparkSpec {
           }
       }.flatten
       assert(leaves.exists(_.contains("graft_mvs")), leaves.mkString(";"))
-      // a second refresh with nothing new is a no-op (same snapshot)
-      val p1 = snapPath
+      // a second refresh with nothing new is a no-op (same build version)
+      val v1 = kvVersion
       ops.Ddl.execute(spark, "REFRESH MATERIALIZED VIEW imv_mv")
-      assert(snapPath == p1)
-      // a non-append mutation falls back to the full base rebuild and the
-      // union read is no longer redirected (shape veto), staying correct
+      assert(kvVersion == v1)
+      // a non-append mutation is maintained from the changed files: the
+      // partials still fold to the table's current aggregation
       ops.Ddl.execute(spark, "DELETE FROM imv_t WHERE n_nationkey = 91")
       ops.Ddl.execute(spark, "REFRESH MATERIALIZED VIEW imv_mv")
-      assert(graft.plans.MvCatalog.named("imv_mv").get.covered.length == 1)
+      assert(fromMv == direct, s"$fromMv vs $direct")
       assert(spark.table("imv_t").count() == before.map(_.getLong(1)).sum + 1)
     } finally {
       ops.Ddl.execute(spark, "DROP MATERIALIZED VIEW imv_mv")
@@ -716,19 +721,23 @@ class DdlSpec extends SparkSpec {
       def stale: Boolean = ops.Ddl.execute(spark, "SHOW INDEXES").collect()
         .find(_.getString(0) == "di_ix").get.getBoolean(3)
       assert(stale)
-      // before the refresh, only the COVERED base branch redirects; the
-      // uncovered snapshot branch keeps its plain filter (covered-subset
-      // rule, branch by branch) and results stay exact
+      // before the refresh, the stale index stands down: the table read
+      // keeps its plain filter and results stay exact
       def viewQ = spark.table("di_t").filter(col("n_regionkey") === 77)
       def semiCount: Int =
         "Join LeftSemi".r.findAllIn(viewQ.queryExecution.optimizedPlan.toString)
           .length
-      assert(semiCount == 1, viewQ.queryExecution.optimizedPlan.toString.take(1500))
+      assert(semiCount == 0, viewQ.queryExecution.optimizedPlan.toString.take(1500))
       assert(viewQ.count() == 1)
+      val built = java.nio.file.Files.list(java.nio.file.Paths.get(
+        graft.plans.IndexCatalog.named("di_ix").get.indexPath)).count()
       ops.Ddl.execute(spark, "REFRESH INDEX di_ix")
       assert(!stale)
-      // now BOTH union branches are covered and redirect to the index
-      assert(semiCount == 2, viewQ.queryExecution.optimizedPlan.toString.take(1500))
+      // the refresh indexed only the appended epoch (new index files
+      // beside the old ones), and the read redirects to the index again
+      assert(java.nio.file.Files.list(java.nio.file.Paths.get(
+        graft.plans.IndexCatalog.named("di_ix").get.indexPath)).count() > built)
+      assert(semiCount == 1, viewQ.queryExecution.optimizedPlan.toString.take(1500))
       assert(viewQ.collect().map(_.getInt(0)).toSeq == Seq(90))
       // second append + CREATE-after-insert path: a fresh index on an
       // append-only table covers the snapshots immediately
@@ -740,12 +749,12 @@ class DdlSpec extends SparkSpec {
       assert(q2.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
       assert(q2.collect().map(_.getInt(0)).toSeq == Seq(91))
       ops.Ddl.execute(spark, "DROP INDEX di_ix2")
-      // a non-append mutation falls back: REFRESH rebuilds from base and
-      // the view read (whose branch shape is no longer pure scans) is
-      // correct without redirection
+      // a non-append mutation falls back: REFRESH rebuilds from the
+      // table's current state, and the read redirects and stays exact
       ops.Ddl.execute(spark, "DELETE FROM di_t WHERE n_nationkey = 0")
       ops.Ddl.execute(spark, "REFRESH INDEX di_ix")
       assert(!stale)
+      assert(semiCount == 1, viewQ.queryExecution.optimizedPlan.toString.take(1500))
       assert(viewQ.count() == 1)
     } finally {
       ops.Ddl.execute(spark, "DROP INDEX di_ix")
@@ -1199,47 +1208,97 @@ class DdlSpec extends SparkSpec {
     spark.sql("DROP TABLE load_p")
   }
 
-  test("a persisted LOAD entry without a snapshot gets one on first replay") {
-    // catalogs written before single-part LOAD snapshotted its rows log
-    // Mut("load", csv, ""); the first replay writes the CSV's snapshot,
-    // aligned to the schema the table had just before the LOAD (here with
-    // a computed column), and persists it — the CSV is never read again
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_load")
+  test("a catalog entry without a kv store migrates into one on first touch") {
+    // catalogs written before keyed tables were stored in kv hold only the
+    // mutation log, whose INSERT/LOAD/MERGE rows live in parquet snapshots
+    // (a legacy LOAD may have none and name its CSV). The first touch
+    // re-runs the log into a store; every version reads what it read before
+    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_kv")
     val cat = dir.resolve("graft_catalog.json")
     val base = s"${sf("sf0.001")}/region.parquet"
+    def snap(name: String, sql: String): String = {
+      val p = dir.resolve(name).toString
+      spark.sql(sql).write.parquet(p)
+      p
+    }
+    val ins = snap("ins", "SELECT 10 AS r_regionkey, 'ten' AS r_name")
     val csv = dir.resolve("csv").toString
-    spark.read.parquet(base).where("r_regionkey < 2")
-      .selectExpr("r_name", "r_regionkey * 2 AS k2", "r_regionkey", "'extra' AS junk")
+    spark.sql("SELECT 'eleven' AS r_name, 11 AS r_regionkey, 'x' AS junk")
       .write.option("header", "true").csv(csv)
+    val mrg = snap("mrg", "SELECT 2 AS r_regionkey, 'two-m' AS r_name " +
+      "UNION ALL SELECT 12, 'twelve'")
+    val drop2 = snap("drop2", "SELECT 3 AS r_regionkey UNION ALL SELECT 4")
+    val out2 = snap("out2", "SELECT 4 AS r_regionkey, 'four-m' AS r_name")
+    val upd = "CASE WHEN (r_regionkey = 1) THEN CAST((upper(r_name)) AS STRING) " +
+      "ELSE `r_name` END"
+    val muts = Seq(
+      ("insert", "", ins), ("load", csv, ""), ("delete", "r_regionkey = 0", ""),
+      ("update", "r_name", upd), ("merge", "s.r_regionkey = r_regionkey", mrg),
+      ("merge2", drop2, out2), ("add", "k2", "r_regionkey * 2"),
+      ("rename", "r_name", "name2"),
+      ("add", "vis", "CASE WHEN r_regionkey = 12 THEN 'secret' ELSE '' END"),
+      ("viscol", "vis", ""))
+    val mutsJson = muts.zipWithIndex.map { case ((op, a, b), i) =>
+      s"""{"op": "$op", "a": "$a", "b": "$b", "ts": "${1001 + i}"}"""
+    }.mkString(",\n    ")
     java.nio.file.Files.writeString(cat,
-      s"""{"seq": 1, "tables": [{"name": "legacy_p", "path": "$base",
+      s"""{"seq": 1, "tables": [{"name": "legacy_kv", "path": "$base",
          |  "keys": ["r_regionkey"], "created": 1000, "stats": [], "muts": [
-         |    {"op": "add", "a": "k2", "b": "r_regionkey * 2", "ts": "1001"},
-         |    {"op": "load", "a": "$csv", "b": "", "ts": "1002"},
-         |    {"op": "add", "a": "k3", "b": "k2 + 1", "ts": "1003"}]}],
+         |    $mutsJson]}],
          | "mvs": [], "dsv2": [], "indexes": []}""".stripMargin)
+    // the expected state after each version, from the base rows
+    val base0 = spark.read.parquet(base).collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    def upsert(rows: Seq[(Int, String)], up: Seq[(Int, String)]) =
+      rows.filterNot(r => up.exists(_._1 == r._1)) ++ up
+    val states = Seq(base0, base0 :+ (10 -> "ten"),
+      base0 :+ (10 -> "ten") :+ (11 -> "eleven"))
+    val v3 = states.last.filterNot(_._1 == 0)
+    val v4 = v3.map { case (k, n) => (k, if (k == 1) n.toUpperCase else n) }
+    val v5 = upsert(v4, Seq(2 -> "two-m", 12 -> "twelve"))
+    val v6 = upsert(v5.filterNot(_._1 == 3), Seq(4 -> "four-m"))
+    def show(rows: Seq[Seq[Any]]) = rows.map(_.map(String.valueOf)).sortBy(_.mkString("|"))
+    val k2 = v6.map { case (k, n) => Seq(k, n, k * 2) }
+    val vis = k2.map(r => r :+ (if (r.head == 12) "secret" else ""))
+    val want: Seq[(Seq[String], Seq[Seq[String]])] = Seq(
+      (Seq("r_regionkey", "r_name"), show(states(0).map(r => Seq(r._1, r._2)))),
+      (Seq("r_regionkey", "r_name"), show(states(1).map(r => Seq(r._1, r._2)))),
+      (Seq("r_regionkey", "r_name"), show(states(2).map(r => Seq(r._1, r._2)))),
+      (Seq("r_regionkey", "r_name"), show(v3.map(r => Seq(r._1, r._2)))),
+      (Seq("r_regionkey", "r_name"), show(v4.map(r => Seq(r._1, r._2)))),
+      (Seq("r_regionkey", "r_name"), show(v5.map(r => Seq(r._1, r._2)))),
+      (Seq("r_regionkey", "r_name"), show(v6.map(r => Seq(r._1, r._2)))),
+      (Seq("r_regionkey", "r_name", "k2"), show(k2)),
+      (Seq("r_regionkey", "name2", "k2"), show(k2)),
+      (Seq("r_regionkey", "name2", "k2", "vis"), show(vis)),
+      (Seq("r_regionkey", "name2", "k2", "vis"), show(vis.filterNot(_.head == 12))))
+    def read(v: Int) = {
+      val df = spark.sql(s"SELECT * FROM graft.legacy_kv VERSION AS OF $v")
+      (df.columns.toSeq, show(df.collect().map(_.toSeq).toSeq))
+    }
     val prev = sys.props.get("graft.catalog.path")
     sys.props("graft.catalog.path") = cat.toString
-    def rows(q: String) =
-      spark.sql(q).collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
-    val want = rows(s"SELECT *, r_regionkey * 2 AS k2, r_regionkey * 2 + 1 AS k3 " +
-      s"FROM parquet.`$base` UNION ALL SELECT *, r_regionkey * 2, r_regionkey * 2 + 1 " +
-      s"FROM parquet.`$base` WHERE r_regionkey < 2")
     try {
       ops.Ddl.resetForTest()
-      if (spark.catalog.tableExists("legacy_p")) spark.catalog.dropTempView("legacy_p")
-      assert(rows("SELECT * FROM graft.legacy_p") == want)
-      val snap = ops.Ddl.lookup("legacy_p").get.muts(1).b
-      assert(snap.nonEmpty && java.nio.file.Files.exists(java.nio.file.Paths.get(snap)))
-      // persisted: a restart reads the snapshot, not the (now deleted) CSV
+      if (spark.catalog.tableExists("legacy_kv")) spark.catalog.dropTempView("legacy_kv")
+      (0 to 10).foreach(v => assert(read(v) == want(v), s"version $v"))
+      // the log kept every entry's op, detail and commit clock, and each
+      // entry now names the store epoch it ends at
+      val t = ops.Ddl.lookup("legacy_kv").get
+      assert(t.store.nonEmpty)
+      assert(t.muts.map(m => (m.op, m.a, m.b)) == muts)
+      assert(t.muts.map(_.ts) == (1001L to 1010L))
+      assert(t.muts.forall(_.epoch >= 0L))
+      // persisted: a restart reads the store, with the CSV gone
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(csv))
       ops.Ddl.resetForTest()
-      assert(ops.Ddl.lookup("legacy_p").get.muts(1).b == snap)
-      spark.sql("DESCRIBE legacy_p").collect() // registers the bare view
-      assert(rows("SELECT * FROM legacy_p") == want)
-      assert(rows("SELECT * FROM graft.legacy_p VERSION AS OF 2") ==
-        rows(s"SELECT r_regionkey, r_name, k2 FROM graft.legacy_p"))
-      spark.sql("DROP TABLE legacy_p")
+      assert(ops.Ddl.lookup("legacy_kv").get.store == t.store)
+      spark.sql("DESCRIBE legacy_kv").collect() // registers the bare view
+      assert((spark.table("legacy_kv").columns.toSeq,
+        show(spark.table("legacy_kv").collect().map(_.toSeq).toSeq)) == want(10))
+      (0 to 10).foreach(v => assert(read(v) == want(v), s"version $v after restart"))
+      spark.sql("DROP TABLE legacy_kv")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(t.store)))
     } finally {
       prev match {
         case Some(v) => sys.props("graft.catalog.path") = v
@@ -1316,7 +1375,7 @@ class DdlSpec extends SparkSpec {
     val prev = sys.props.get("graft.catalog.path")
     sys.props("graft.catalog.path") = tmp.toString
     val src = s"${sf("sf0.001")}/orders.parquet"
-    def agg() = spark.read.parquet(src)
+    def agg() = spark.sql("SELECT * FROM graft.mvp_src")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("cnt"),
         sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
@@ -1330,11 +1389,10 @@ class DdlSpec extends SparkSpec {
       // --- restart: in-memory registries gone, catalog file remains ---
       ops.Ddl.resetForTest(); graft.plans.MvCatalog.clear()
       spark.catalog.dropTempView("mvp_mv"); spark.catalog.dropTempView("mvp_src")
-      // a pure-DataFrame aggregate (never touches the DDL surface) gets
-      // the rewrite back via the optimizer rule's lazy load
+      // an aggregate over the table (no DDL statement runs) gets the
+      // rewrite back via the optimizer rule's lazy load
       val paths = scanPaths(agg())
       assert(paths.exists(_.contains("graft_mvs")), paths.mkString(";"))
-      assert(!paths.exists(_.contains("orders.parquet")), paths.mkString(";"))
       // ...and values still match the direct scan
       val direct = spark.read.parquet(src).groupBy(col("o_orderstatus")).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1345,7 +1403,7 @@ class DdlSpec extends SparkSpec {
       spark.sql("DROP MATERIALIZED VIEW mvp_mv")
       ops.Ddl.resetForTest(); graft.plans.MvCatalog.clear()
       val after = scanPaths(agg())
-      assert(after.exists(_.contains("orders.parquet")), after.mkString(";"))
+      assert(!after.exists(_.contains("graft_mvs")), after.mkString(";"))
       spark.sql("DROP TABLE mvp_src")
     } finally {
       prev match {
@@ -2004,5 +2062,337 @@ class DdlSpec extends SparkSpec {
       .head.getString(0) == "Y")
     assert(spark.table("nrendb.t").count() == 25)
     Ddl.execute(spark, "DROP TABLE nrendb.t")
+  }
+
+  /** Runs `body` against a fresh catalog file, restoring the old one. */
+  private def withCatalog(prefix: String)(body: java.nio.file.Path => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    val prev = sys.props.get("graft.catalog.path")
+    sys.props("graft.catalog.path") = dir.resolve("graft_catalog.json").toString
+    try { ops.Ddl.resetForTest(); body(dir) }
+    finally {
+      prev match {
+        case Some(v) => sys.props("graft.catalog.path") = v
+        case None    => sys.props.remove("graft.catalog.path")
+      }
+      ops.Ddl.resetForTest()
+    }
+  }
+
+  /** A frame's schema and row multiset, comparable across reads. */
+  private def state(df: org.apache.spark.sql.DataFrame) =
+    (df.schema.map(f => f.name -> f.dataType.simpleString),
+      df.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|")))
+
+  test("time travel across schema changes reads each version's columns, types and rows") {
+    withCatalog("graft_tt_schema") { dir =>
+      val base = dir.resolve("base").toString
+      spark.range(4).selectExpr("CAST(id AS INT) AS k", "CAST(id * 2 AS INT) AS v",
+        "concat('s', id) AS s").write.parquet(base)
+      spark.sql(s"CREATE TABLE tts MAPPED BY '$base' KEYS (k)")
+      Seq("ALTER TABLE tts ADD COLUMN c AS v * 10",
+        "INSERT INTO tts VALUES (10, 1, 'a', 5)",
+        "ALTER TABLE tts ADD COLUMN d DEFAULT 7",
+        "INSERT INTO tts VALUES (11, 2, 'b', 6)",
+        "ALTER TABLE tts RENAME COLUMN s TO s2",
+        "UPDATE tts SET v = v + 100 WHERE k >= 10",
+        "ALTER TABLE tts ALTER COLUMN v TYPE BIGINT",
+        "INSERT INTO tts VALUES (12, 3, 'c', 8, 9)",
+        "ALTER TABLE tts DROP COLUMN c",
+        "UPDATE tts SET d = 0 WHERE k = 12").foreach(spark.sql)
+      // the model: version -> (columns with types, rows)
+      val b0 = (0 until 4).map(i => Seq(i, i * 2, s"s$i"))
+      val v1 = b0.map(r => r :+ r(1).asInstanceOf[Int] * 10)
+      val v2 = v1 :+ Seq(10, 1, "a", 5)
+      val v3 = v2.map(_ :+ null)
+      val v4 = v3 :+ Seq(11, 2, "b", 6, 7)
+      val v6 = v4.map(r => if (r.head.asInstanceOf[Int] >= 10)
+        r.updated(1, r(1).asInstanceOf[Int] + 100) else r)
+      val v8 = v6 :+ Seq(12, 3, "c", 8, 9)
+      val v9 = v8.map(r => r.patch(3, Nil, 1))
+      val v10 = v9.map(r => if (r.head == 12) r.updated(3, 0) else r)
+      val i3 = Seq("k" -> "int", "v" -> "int", "s" -> "string")
+      val want = Seq(
+        (i3, b0), (i3 :+ ("c" -> "int"), v1), (i3 :+ ("c" -> "int"), v2),
+        (i3 :+ ("c" -> "int") :+ ("d" -> "int"), v3),
+        (i3 :+ ("c" -> "int") :+ ("d" -> "int"), v4),
+        (Seq("k" -> "int", "v" -> "int", "s2" -> "string", "c" -> "int", "d" -> "int"), v4),
+        (Seq("k" -> "int", "v" -> "int", "s2" -> "string", "c" -> "int", "d" -> "int"), v6),
+        (Seq("k" -> "int", "v" -> "bigint", "s2" -> "string", "c" -> "int", "d" -> "int"), v6),
+        (Seq("k" -> "int", "v" -> "bigint", "s2" -> "string", "c" -> "int", "d" -> "int"), v8),
+        (Seq("k" -> "int", "v" -> "bigint", "s2" -> "string", "d" -> "int"), v9),
+        (Seq("k" -> "int", "v" -> "bigint", "s2" -> "string", "d" -> "int"), v10))
+        .map { case (cols, rows) =>
+          (cols, rows.map(_.map(String.valueOf)).sortBy(_.mkString("|"))) }
+      (0 to 10).foreach { v =>
+        assert(state(spark.sql(s"SELECT * FROM graft.tts VERSION AS OF $v")) == want(v),
+          s"version $v")
+      }
+      assert(state(spark.table("tts")) == want(10))
+      spark.sql("DROP TABLE tts")
+    }
+  }
+
+  test("RESTORE across MOR DML and ALTER keeps every version; DML continues after it") {
+    withCatalog("graft_restore_mor") { dir =>
+      val base = dir.resolve("base").toString
+      spark.range(5).selectExpr("CAST(id AS INT) AS k", "concat('n', id) AS n")
+        .write.parquet(base)
+      spark.sql(s"CREATE TABLE rst MAPPED BY '$base' KEYS (k)")
+      spark.sql("INSERT INTO rst VALUES (10, 'ten')")
+      spark.sql("UPDATE rst SET n = upper(n) WHERE k < 2")
+      spark.sql("MERGE INTO rst t USING (SELECT 3 AS k, 'm3' AS n UNION ALL " +
+        "SELECT 20, 'm20') s ON s.k = t.k WHEN MATCHED THEN UPDATE SET * " +
+        "WHEN NOT MATCHED THEN INSERT *")
+      spark.sql("ALTER TABLE rst ADD COLUMN x AS k * 3")
+      def at(v: Int) = state(spark.sql(s"SELECT * FROM graft.rst VERSION AS OF $v"))
+      val before = (0 to 1).map(at)
+      // back to version 1: before the UPDATE, the MERGE and the ADD COLUMN
+      spark.sql("RESTORE TABLE rst TO VERSION 1")
+      assert((0 to 1).map(at) == before)
+      assert(state(spark.table("rst")) == before(1))
+      // DML goes on from the restored state, and the dropped column's name
+      // is free again
+      spark.sql("DELETE FROM rst WHERE k = 4")
+      spark.sql("INSERT INTO rst VALUES (30, 'thirty')")
+      spark.sql("ALTER TABLE rst ADD COLUMN x AS k + 1")
+      val cols = Seq("k" -> "int", "n" -> "string")
+      def rows(rs: (Int, String)*) = rs.map(r => Seq(r._1.toString, r._2))
+        .sortBy(_.mkString("|"))
+      val v1 = rows((0, "n0"), (1, "n1"), (2, "n2"), (3, "n3"), (4, "n4"), (10, "ten"))
+      val v2 = v1.filterNot(_.head == "4")
+      val v3 = (v2 :+ Seq("30", "thirty")).sortBy(_.mkString("|"))
+      val v4 = v3.map(r => r :+ (r.head.toInt + 1).toString)
+      val want = Seq((cols, before(0)._2), (cols, v1), (cols, v2), (cols, v3),
+        (cols :+ ("x" -> "int"), v4))
+      def check(): Unit = {
+        assert(spark.sql("SHOW VERSIONS rst").collect().map(_.getString(1)).toSeq ==
+          Seq("base", "insert", "delete", "insert", "add"))
+        (0 to 4).foreach(v => assert(at(v) == want(v), s"version $v"))
+        assert(state(spark.table("rst")) == want(4))
+      }
+      check()
+      // restart: the truncated log and the store both persist
+      ops.Ddl.resetForTest()
+      spark.catalog.dropTempView("rst")
+      spark.sql("DESCRIBE rst").collect()
+      check()
+      spark.sql("DROP TABLE rst")
+    }
+  }
+
+  test("a MAPPED BY table over an empty parquet reads its empty versions and takes DML") {
+    withCatalog("graft_empty_base") { dir =>
+      val base = dir.resolve("base").toString
+      spark.range(0).selectExpr("CAST(id AS INT) AS k", "CAST(id AS STRING) AS n")
+        .write.parquet(base)
+      spark.sql(s"CREATE TABLE emp MAPPED BY '$base' KEYS (k)")
+      spark.sql("DELETE FROM emp WHERE k = 1")
+      spark.sql("UPDATE emp SET n = 'x' WHERE k = 1")
+      spark.sql("INSERT INTO emp VALUES (1, 'a')")
+      spark.sql("MERGE INTO emp t USING (SELECT 2 AS k, 'b' AS n) s ON s.k = t.k " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+      val cols = Seq("k" -> "int", "n" -> "string")
+      def at(v: Int) = state(spark.sql(s"SELECT * FROM graft.emp VERSION AS OF $v"))
+      (0 to 2).foreach(v => assert(at(v) == (cols, Nil), s"version $v"))
+      assert(at(3) == (cols, Seq(Seq("1", "a"))))
+      assert(at(4) == (cols, Seq(Seq("1", "a"), Seq("2", "b"))))
+      spark.sql("RESTORE TABLE emp TO VERSION 0")
+      assert(state(spark.table("emp")) == (cols, Nil))
+      spark.sql("DROP TABLE emp")
+    }
+  }
+
+  test("keyed ALTER COLUMN TYPE takes Spark's lossless up-casts; RESTORE crosses them") {
+    withCatalog("graft_widen_up") { dir =>
+      val base = dir.resolve("base").toString
+      spark.range(3).selectExpr("CAST(id AS INT) AS k", "CAST(id + 0.1 AS FLOAT) AS f",
+        "CAST(id * 3 AS INT) AS v", "date_add(DATE'2020-01-01', CAST(id AS INT)) AS d")
+        .write.parquet(base)
+      spark.sql(s"CREATE TABLE wup MAPPED BY '$base' KEYS (k)")
+      def at(v: Int) = state(spark.sql(s"SELECT * FROM graft.wup VERSION AS OF $v"))
+      val v0 = at(0)
+      Seq("ALTER TABLE wup ALTER COLUMN f TYPE DOUBLE",
+        "ALTER TABLE wup ALTER COLUMN v TYPE DOUBLE",
+        "ALTER TABLE wup ALTER COLUMN d TYPE TIMESTAMP",
+        "INSERT INTO wup VALUES (7, 0.3D, 1.5, TIMESTAMP'2021-02-03 04:05:06')",
+        "UPDATE wup SET v = v + 0.25 WHERE k = 1").foreach(spark.sql)
+      // positions keep; committed values re-read exactly under the wide types
+      // (a FLOAT widens to the exact double of the float, not of its text)
+      val want = state(spark.sql("SELECT * FROM VALUES " +
+        "(0, CAST(CAST(0.1 AS FLOAT) AS DOUBLE), 0.0D, CAST(DATE'2020-01-01' AS TIMESTAMP)), " +
+        "(1, CAST(CAST(1.1 AS FLOAT) AS DOUBLE), 3.25D, CAST(DATE'2020-01-02' AS TIMESTAMP)), " +
+        "(2, CAST(CAST(2.1 AS FLOAT) AS DOUBLE), 6.0D, CAST(DATE'2020-01-03' AS TIMESTAMP)), " +
+        "(7, 0.3D, 1.5D, TIMESTAMP'2021-02-03 04:05:06') AS t(k, f, v, d)"))
+      assert(state(spark.table("wup")) == want)
+      assert(at(5) == want)
+      // each earlier version reads its own types
+      assert(at(0)._1 == Seq("k" -> "int", "f" -> "float", "v" -> "int", "d" -> "date"))
+      assert(at(1)._1 == Seq("k" -> "int", "f" -> "double", "v" -> "int", "d" -> "date"))
+      assert(at(3)._1 == Seq("k" -> "int", "f" -> "double", "v" -> "double", "d" -> "timestamp"))
+      assert(at(3)._2.map(r => Seq(r(0), r(2))) ==
+        Seq(Seq("0", "0.0"), Seq("1", "3.0"), Seq("2", "6.0")))
+      // narrowing refuses
+      intercept[IllegalArgumentException] {
+        spark.sql("ALTER TABLE wup ALTER COLUMN v TYPE INT")
+      }
+      intercept[IllegalArgumentException] {
+        spark.sql("ALTER TABLE wup ALTER COLUMN d TYPE DATE")
+      }
+      // back to version 1: before two widens, the INSERT and the UPDATE
+      val v1 = at(1)
+      spark.sql("RESTORE TABLE wup TO VERSION 1")
+      assert(state(spark.table("wup")) == v1)
+      assert(at(0) == v0)
+      // the column widens again, and DML goes on
+      spark.sql("ALTER TABLE wup ALTER COLUMN v TYPE BIGINT")
+      spark.sql("INSERT INTO wup VALUES (8, 8.5D, 5000000000, DATE'2022-01-01')")
+      val v3 = state(spark.table("wup"))
+      assert(spark.sql("SELECT v FROM wup WHERE k = 8").head.getLong(0) == 5000000000L)
+      assert(spark.sql("SHOW VERSIONS wup").collect().map(_.getString(1)).toSeq ==
+        Seq("base", "widen", "widen", "insert"))
+      ops.Ddl.resetForTest()
+      spark.catalog.dropTempView("wup")
+      assert((0 to 3).map(at) == Seq(v0, v1, at(2), v3))
+      spark.sql("DESCRIBE wup").collect() // registers the bare view
+      assert(state(spark.table("wup")) == v3)
+      spark.sql("DROP TABLE wup")
+    }
+  }
+
+  test("an ALTER whose fill fails at runtime leaves the schema and the log unchanged") {
+    withCatalog("graft_add_fail") { dir =>
+      val base = dir.resolve("base").toString
+      spark.range(3).selectExpr("CAST(id AS INT) AS k", "CAST(id AS STRING) AS s")
+        .write.parquet(base)
+      spark.sql(s"CREATE TABLE afail MAPPED BY '$base' KEYS (k)")
+      def cur() = state(spark.sql("SELECT * FROM graft.afail"))
+      val before = cur()
+      intercept[Exception] {
+        spark.sql("ALTER TABLE afail ADD COLUMN c AS CASE WHEN k >= 0 THEN " +
+          "CAST(raise_error('boom') AS INT) ELSE 0 END")
+      }
+      assert(cur() == before)
+      assert(ops.Ddl.lookup("afail").get.muts.isEmpty)
+      // the name is free: a retry with a good expression lands
+      spark.sql("ALTER TABLE afail ADD COLUMN c AS k * 2")
+      assert(cur()._1.map(_._1) == Seq("k", "s", "c"))
+      assert(state(spark.sql("SELECT * FROM graft.afail VERSION AS OF 0")) == before)
+      spark.sql("DROP TABLE afail")
+    }
+  }
+
+  test("MAPPED BY refuses column types and string values the kv store cannot hold") {
+    // the store holds no TINYINT/SMALLINT/BINARY/STRUCT/MAP column, and its
+    // text codec no tab, newline or carriage return in a string value: a
+    // base file or a write carrying one is refused
+    withCatalog("graft_codec") { dir =>
+      val small = dir.resolve("small").toString
+      spark.sql("SELECT 1 AS k, CAST(2 AS SMALLINT) AS s").write.parquet(small)
+      intercept[Exception](spark.sql(s"CREATE TABLE codec_t MAPPED BY '$small' KEYS (k)"))
+      assert(ops.Ddl.lookup("codec_t").isEmpty)
+      assert(ops.Ddl.dsv2Get("__keyed.codec_t").isEmpty)
+      val bad = dir.resolve("bad").toString
+      spark.sql("SELECT 1 AS k, concat('a', char(9), 'b') AS s").write.parquet(bad)
+      intercept[Exception](spark.sql(s"CREATE TABLE codec_t MAPPED BY '$bad' KEYS (k)"))
+      assert(ops.Ddl.lookup("codec_t").isEmpty)
+      assert(ops.Ddl.dsv2Get("__keyed.codec_t").isEmpty)
+      val ok = dir.resolve("ok").toString
+      spark.sql("SELECT 1 AS k, 'a' AS s").write.parquet(ok)
+      spark.sql(s"CREATE TABLE codec_t MAPPED BY '$ok' KEYS (k)")
+      val before = state(spark.table("codec_t"))
+      intercept[Exception] {
+        spark.sql("INSERT INTO codec_t VALUES (2, concat('x', char(10), 'y'))")
+      }
+      intercept[Exception] {
+        spark.sql("UPDATE codec_t SET s = concat('p', char(13)) WHERE k = 1")
+      }
+      assert(state(spark.table("codec_t")) == before)
+      assert(state(spark.sql("SELECT * FROM graft.codec_t")) == before)
+      assert(spark.sql("SHOW VERSIONS codec_t").count() == 1)
+      spark.sql("DROP TABLE codec_t")
+    }
+  }
+
+  test("a legacy table that cannot migrate refuses loudly; the rest migrate") {
+    import scala.jdk.CollectionConverters._
+    withCatalog("graft_legacy_fail") { dir =>
+      val cat = dir.resolve("graft_catalog.json")
+      val base = dir.resolve("base").toString
+      spark.range(3).selectExpr("CAST(id AS INT) AS k", "CAST(id * 2 AS INT) AS v",
+        "concat('s', id) AS s").write.parquet(base)
+      val ins = dir.resolve("ins").toString
+      spark.sql("SELECT 10 AS k, 5 AS v, 'x' AS s").write.parquet(ins)
+      val upd = "CASE WHEN (k = 10) THEN CAST((v + 0.5) AS DOUBLE) ELSE `v` END"
+      // good_t widens INT -> DOUBLE (an up-cast the store cannot do in
+      // place); bad_t's log "widens" a STRING to INT, which no up-cast does
+      java.nio.file.Files.writeString(cat,
+        s"""{"seq": 1, "tables": [
+           |  {"name": "good_t", "path": "$base", "keys": ["k"], "created": 1000,
+           |   "stats": [], "muts": [
+           |    {"op": "insert", "a": "", "b": "$ins", "ts": "1001"},
+           |    {"op": "widen", "a": "v", "b": "DOUBLE", "ts": "1002"},
+           |    {"op": "update", "a": "v", "b": "$upd", "ts": "1003"}]},
+           |  {"name": "bad_t", "path": "$base", "keys": ["k"], "created": 1000,
+           |   "stats": [], "muts": [
+           |    {"op": "insert", "a": "", "b": "$ins", "ts": "1001"},
+           |    {"op": "widen", "a": "s", "b": "INT", "ts": "1002"}]}],
+           | "mvs": [{"name": "good_mv", "source": "$base", "snapshot": "$dir/old_mv",
+           |   "groups": ["s"], "cnt": "cnt", "sums": {"k": "sum_k"},
+           |   "dectype": "DECIMAL(38,6)", "table": "good_t"}],
+           | "dsv2": [],
+           | "indexes": [
+           |   {"name": "good_ix", "source": "$base", "col": "s",
+           |    "index": "$dir/old_ix", "keys": ["k"], "builtAt": 0, "table": "good_t"},
+           |   {"name": "bad_ix", "source": "$base", "col": "s",
+           |    "index": "$dir/old_bad_ix", "keys": ["k"], "builtAt": 0, "table": "bad_t"}]}
+           |""".stripMargin)
+      ops.Ddl.resetForTest()
+      def at(v: Int) = state(spark.sql(s"SELECT * FROM graft.good_t VERSION AS OF $v"))
+      val b0 = (0 until 3).map(i => Seq(i.toString, (i * 2).toString, s"s$i"))
+      val b1 = b0 :+ Seq("10", "5", "x")
+      val b2 = b1.map(r => r.updated(1, r(1).toDouble.toString))
+      val b3 = b2.map(r => if (r.head == "10") r.updated(1, "5.5") else r)
+      val ints = Seq("k" -> "int", "v" -> "int", "s" -> "string")
+      val dbls = Seq("k" -> "int", "v" -> "double", "s" -> "string")
+      def sorted(rows: Seq[Seq[String]]) = rows.sortBy(_.mkString("|"))
+      assert((0 to 3).map(at) == Seq((ints, sorted(b0)), (ints, sorted(b1)),
+        (dbls, sorted(b2)), (dbls, sorted(b3))))
+      // bad_t: no half-built store, and every read names the cause
+      assert(ops.Ddl.lookup("bad_t").get.store.isEmpty)
+      assert(ops.Ddl.dsv2Get("__keyed.bad_t").isEmpty)
+      assert(!java.nio.file.Files.list(dir.resolve("graft_keyed")).iterator().asScala
+        .exists(_.getFileName.toString.startsWith("bad_t")))
+      Seq("SELECT * FROM graft.bad_t", "SELECT * FROM graft.bad_t VERSION AS OF 0")
+        .foreach { q =>
+          val e = intercept[Exception](spark.sql(q).collect())
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(x => String.valueOf(x.getMessage).contains("migration failed")),
+            e.toString)
+        }
+      // the legacy index and MV of good_t are kv ones over its store now;
+      // bad_t's index waits, unregistered, for its table
+      val ixs = spark.sql("SHOW INDEXES").collect()
+      assert(ixs.map(_.getString(0)).toSeq == Seq("good_ix"))
+      assert(ixs.head.getString(1) == ops.Ddl.lookup("good_t").get.store)
+      assert(!ixs.head.getBoolean(3))
+      val q = spark.table("good_t").filter(col("s") === "x")
+      assert(q.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
+      assert(q.count() == 1)
+      assert(graft.plans.MvCatalog.named("good_mv").exists(_.kvVersion >= 0L))
+      assert(spark.table("good_mv").agg(sum(col("cnt"))).head.getLong(0) == 4L)
+      // the migrated and the waiting entries are persisted
+      ops.Ddl.resetForTest()
+      assert(ops.Ddl.lookup("good_t").get.store.nonEmpty)
+      assert(ops.Ddl.lookup("bad_t").get.muts.map(_.op) == Seq("insert", "widen"))
+      assert(java.nio.file.Files.readString(cat).contains("bad_ix"))
+      assert(graft.plans.IndexCatalog.named("bad_ix").isEmpty)
+      spark.sql("DROP INDEX good_ix")
+      spark.sql("DROP MATERIALIZED VIEW good_mv")
+      spark.sql("DROP TABLE good_t")
+      // a table that could not migrate can still be dropped
+      spark.sql("DROP TABLE bad_t")
+      assert(ops.Ddl.lookup("bad_t").isEmpty)
+    }
   }
 }

@@ -1549,6 +1549,37 @@ class DsV2Spec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft.rst.t")
   }
 
+  test("a CACHE'd kv table serves the rows of a RESTORE and a path-route write") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_kv_cache").toString
+    def epochWrite(epoch: Long, rows: (Long, String)*): Unit =
+      rows.toSeq.toDF("id", "s").write.format("graft.sources.GraftKvSink")
+        .option("path", dir).option("epoch", epoch.toString)
+        .mode("append").save()
+    epochWrite(1L, (1L, "a"), (2L, "b"))
+    epochWrite(2L, (3L, "c"))
+    spark.sql("DROP TABLE IF EXISTS graft.kvc.t")
+    spark.sql("CREATE TABLE graft.kvc.t (id BIGINT, s STRING) " +
+      s"USING graft_kv OPTIONS (path '$dir')")
+    def ids(): Seq[Long] =
+      spark.sql("SELECT id FROM graft.kvc.t").as[Long].collect().toSeq.sorted
+    spark.sql("CACHE TABLE graft.kvc.t")
+    try {
+      assert(spark.catalog.isCached("graft.kvc.t"))
+      assert(ids() == Seq(1L, 2L, 3L))
+      // a RESTORE commits outside Spark's own write commands
+      spark.sql("RESTORE TABLE graft.kvc.t TO VERSION AS OF 1")
+      assert(ids() == Seq(1L, 2L))
+      // so does a write to the table's directory
+      epochWrite(5L, (9L, "z"))
+      assert(ids() == Seq(1L, 2L, 9L))
+      assert(spark.catalog.isCached("graft.kvc.t"))
+    } finally {
+      spark.sql("UNCACHE TABLE graft.kvc.t")
+      spark.sql("DROP TABLE IF EXISTS graft.kvc.t")
+    }
+  }
+
   test("sortBy tables: the connector requests ordered distribution, files cluster") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_kv_sort").toString

@@ -144,56 +144,57 @@ class PlanSpec extends SparkSpec {
       val shown = graft.ops.Ddl.execute(spark, "SHOW INDEXES").collect()
         .map(r => (r.getString(0), r.getString(2)))
       assert(shown.contains(("pidx_ck", "o_custkey")), shown.mkString(";"))
-      val df = graft.ops.KeyRange.indexRewriteFrame(spark, d)
+      val df = graft.ops.KeyRange.indexRewriteFrame(spark, "pidx_t")
       // the optimized plan must read the INDEX parquet and carry a LeftSemi
       val paths = scanPaths(df)
       assert(paths.exists(_.contains("graft_indexes")), paths.mkString(";"))
       val opt = df.queryExecution.optimizedPlan.toString
       assert(opt.contains("LeftSemi"), opt.take(1500))
-      // and the indexed conjunct is GONE from the base side: the only
-      // custkey reference below the join is in the index-probe filter
-      // (results prove semantics; the oracle gate hash-matches them)
+      // results prove semantics; the oracle gate hash-matches them
       val direct = spark.read.parquet(s"$d/orders.parquet")
         .filter(col("o_custkey").isin(11L, 57L, 123L) &&
           col("o_totalprice") > 1000.0)
         .count()
       assert(df.count() == direct && direct > 0)
-      // a DUPLICATED-path read is rewritten soundly since r13's covered-
-      // subset rule (the semi-join keeps each copy independently — probe
-      // keys are path-agnostic), and duplicates are preserved exactly
-      val multi = spark.read.parquet(s"$d/orders.parquet", s"$d/orders.parquet")
-        .filter(col("o_custkey") === 11L)
-      assert(scanPaths(multi).exists(_.contains("graft_indexes")))
-      assert(multi.count() == 2 * spark.read.parquet(s"$d/orders.parquet")
+      // the same rewrite serves the graft.t spelling of the table
+      val viaSql = spark.sql("SELECT * FROM graft.pidx_t WHERE o_custkey = 11")
+      assert(scanPaths(viaSql).exists(_.contains("graft_indexes")))
+      assert(viaSql.count() == spark.read.parquet(s"$d/orders.parquet")
         .filter(col("o_custkey") === 11L).count())
-      // veto: a scan including a path the index has never seen must not be
-      // redirected — rows outside the covered set could satisfy the
-      // predicate yet be dropped by the semi-join
-      val foreign = java.nio.file.Files.createTempDirectory("graft_idx_foreign")
-      spark.read.parquet(s"$d/orders.parquet").limit(5)
-        .write.mode("overwrite").parquet(foreign.toString)
-      val mixed = spark.read.parquet(s"$d/orders.parquet", foreign.toString)
-        .filter(col("o_custkey") === 11L)
-      assert(!scanPaths(mixed).exists(_.contains("graft_indexes")))
       // a key-pruning projection still rewrites correctly: predicate
       // pushdown has moved the filter onto the bare relation (which always
       // exposes the key), so the semi-join lands UNDER the projection
-      val pruned = spark.read.parquet(s"$d/orders.parquet")
+      val pruned = spark.table("pidx_t")
         .select(col("o_custkey"))
         .filter(col("o_custkey") === 11L)
       assert(scanPaths(pruned).exists(_.contains("graft_indexes")))
       assert(pruned.count() == spark.read.parquet(s"$d/orders.parquet")
         .filter(col("o_custkey") === 11L).count())
       // non-indexable predicate forms stay full scans
-      val range = spark.read.parquet(s"$d/orders.parquet")
-        .filter(col("o_custkey") > 100L)
+      val range = spark.table("pidx_t").filter(col("o_custkey") > 100L)
       assert(!scanPaths(range).exists(_.contains("graft_indexes")))
+      // an independent read of the base parquet is a different dataset:
+      // the index covers the table's store, never that file
+      val bare = spark.read.parquet(s"$d/orders.parquet")
+        .filter(col("o_custkey") === 11L)
+      assert(!scanPaths(bare).exists(_.contains("graft_indexes")))
       // restart: a fresh process re-registers from the persisted catalog
       graft.ops.Ddl.resetForTest()
       assert(graft.plans.IndexCatalog.isEmpty)
-      val again = graft.ops.KeyRange.indexRewriteFrame(spark, d)
+      val again = graft.ops.KeyRange.indexRewriteFrame(spark, "pidx_t")
       assert(scanPaths(again).exists(_.contains("graft_indexes")),
         "persisted index did not survive the simulated restart")
+      // veto: DML moves the store past the index's build version, so the
+      // rewrite stands down until REFRESH INDEX
+      graft.ops.Ddl.execute(spark, "DELETE FROM pidx_t WHERE o_custkey = 11")
+      assert(!scanPaths(graft.ops.KeyRange.indexRewriteFrame(spark, "pidx_t"))
+        .exists(_.contains("graft_indexes")))
+      graft.ops.Ddl.execute(spark, "REFRESH INDEX pidx_ck")
+      val refreshed = graft.ops.KeyRange.indexRewriteFrame(spark, "pidx_t")
+      assert(scanPaths(refreshed).exists(_.contains("graft_indexes")))
+      assert(refreshed.count() == spark.read.parquet(s"$d/orders.parquet")
+        .filter(col("o_custkey").isin(57L, 123L) && col("o_totalprice") > 1000.0)
+        .count())
     } finally {
       graft.ops.Ddl.execute(spark, "DROP INDEX pidx_ck")
       graft.ops.Ddl.execute(spark, "DROP TABLE pidx_t")
