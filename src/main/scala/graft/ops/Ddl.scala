@@ -34,8 +34,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, IntegerType, 
   *   CREATE VIEW <name> AS <sql>
   *   LOAD DATA INPATH '<csv path>' INTO TABLE <name>
   *   INSERT INTO <name> VALUES (...)[, (...)] | INSERT INTO <name> SELECT ...
-  *   DELETE FROM <name> WHERE <pred>
-  *   UPDATE <name> SET <col> = <expr> WHERE <pred>
+  *   DELETE FROM <name> ... | UPDATE <name> ... | MERGE INTO <name> ...
+  *     (Spark's grammar, subject to the key checks of [[rowLevelDml]])
   *   ANALYZE TABLE <name> COMPUTE STATISTICS [FOR [ALL] COLUMNS [a, b]]
   *   SHOW STATS <name>
   * ONE TABLE ENGINE: every statement keeps its grammar and validation here
@@ -66,11 +66,11 @@ object Ddl {
 
   /** One logged statement: op ∈ add (col, expr) | default (col, expr) |
     * drop (col, -) | rename (from, to) | widen (col, type) | load (csv
-    * path, -) | insert | delete (pred, -) | update (col, frozen CASE
-    * expr) | merge / merge2 (ON condition, -) | viscol (col, -); squash
-    * entries survive only in migrated histories. Kept as strings so the
-    * catalog file stays a flat JSON list and SHOW VERSIONS shows the
-    * statement the user ran. `ts`: wall-clock millis stamped when the
+    * path, -) | insert | delete (pred, -) | update (cols, frozen CASE
+    * exprs, comma-separated) | merge (ON condition, -) | viscol (col, -);
+    * squash and merge2 entries survive only in migrated histories. Kept as
+    * strings so the catalog file stays a flat JSON list and SHOW VERSIONS
+    * shows the statement the user ran. `ts`: wall-clock millis stamped when the
     * mutation was logged — strictly monotonic per table (max(now,
     * prior+1)), the same commit clock the kv manifest records per epoch,
     * so `TIMESTAMP AS OF` resolves on keyed tables by the identical prefix
@@ -600,12 +600,18 @@ object Ddl {
     s"""(?is)\\s*INSERT\\s+INTO\\s+($Id)\\s+(VALUES\\s+.+)""".r
   private val InsertSelectRe =
     s"""(?is)\\s*INSERT\\s+INTO\\s+($Id)\\s+(SELECT\\s+.+)""".r
-  // DELETE FROM <t> WHERE <pred> / UPDATE <t> SET <col> = <expr> WHERE
-  // <pred> — both run as Spark's row-level DML on the store
-  private val DeleteRe =
-    s"""(?is)\\s*DELETE\\s+FROM\\s+($Id)\\s+WHERE\\s+(.+)""".r
-  private val UpdateRe =
-    s"""(?is)\\s*UPDATE\\s+($Id)\\s+SET\\s+(\\w+)\\s*=\\s*(.+?)\\s+WHERE\\s+(.+)""".r
+  // Row-level DML on a keyed table, in Spark's own grammar:
+  //   DELETE FROM <t> [[AS] a] [WHERE <pred>]
+  //   UPDATE <t> [[AS] a] SET <col> = <expr>[, ...] [WHERE <pred>]
+  //   MERGE INTO <t> [[AS] a] USING (<query>) | <table> [AS] s ON <key equality>
+  //     WHEN MATCHED [AND <cond>] THEN UPDATE SET * | UPDATE SET c = e, ... | DELETE
+  //     WHEN NOT MATCHED [BY TARGET] [AND <cond>] THEN INSERT * | INSERT (cols) VALUES (exprs)
+  //     WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE | UPDATE SET c = e, ...
+  // These only route the statement by its head; Spark parses the rest and
+  // [[rowLevelDml]] checks and runs it.
+  private val DeleteHeadRe = s"""(?is)\\s*DELETE\\s+FROM\\s+($Id)(?:\\s.*)?""".r
+  private val UpdateHeadRe = s"""(?is)\\s*UPDATE\\s+($Id)(?:\\s.*)?""".r
+  private val MergeHeadRe = s"""(?is)\\s*MERGE\\s+INTO\\s+($Id)(?:\\s.*)?""".r
   // CREATE MATERIALIZED VIEW <mv> ON <t> GROUP BY (c, ...) SUMS (x, ...)
   // — materialize the rollup (count + exact-decimal sums) to a managed
   // parquet snapshot and register it with the transparent rewrite rule
@@ -948,177 +954,6 @@ object Ddl {
     ("""(?is)\s*CREATE\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+SHALLOW\s+CLONE\s+""" +
       """((?:\w+\.){0,2}\w+)(?:\s+VERSION\s+AS\s+OF\s+(?:(\d+)|'(\w+)'))?""" +
       """\s+LOCATION\s+'([^']+)'\s*""").r
-  // MERGE INTO <t> USING (<select>) [AS] s ON <key equality> WHEN MATCHED
-  // THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT * — the Delta-style
-  // star forms: a whole-row upsert keyed on the table's PRIMARY KEY. The
-  // ON clause must be exactly the key-equality conjunction (validated);
-  // arbitrary merge conditions/partial SET lists are out of scope for the
-  // keyed-view surface.
-  private val MergeRe =
-    s"""(?is)\\s*MERGE\\s+INTO\\s+($Id)\\s+USING\\s+\\((.+)\\)(?:\\s+(?:AS\\s+)?(?!ON\\b)(\\w+))?\\s+ON\\s+(.+?)\\s+WHEN\\s+MATCHED\\s+THEN\\s+UPDATE\\s+SET\\s+\\*\\s+WHEN\\s+NOT\\s+MATCHED\\s+THEN\\s+INSERT\\s+\\*\\s*""".r
-
-  // Generalized MERGE (beyond the star form): any number of
-  //   WHEN MATCHED [AND <cond>] THEN UPDATE SET c = e, … | UPDATE SET * | DELETE
-  //   WHEN NOT MATCHED [BY TARGET] [AND <cond>] THEN INSERT * | INSERT (cols) VALUES (exprs)
-  //   WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE | UPDATE SET c = e, …
-  // First matching clause per group wins (standard MERGE semantics). The ON
-  // clause keeps the star form's discipline: exactly the PRIMARY KEY
-  // equality conjunction, source-to-target. Runs as Spark's own MERGE on
-  // the store, logged as op "merge2".
-  // USING accepts a parenthesized subquery or a bare table/view name (the
-  // daily-driver `MERGE INTO t USING staging s ON …` form)
-  private val MergeGenRe =
-    s"""(?is)\\s*MERGE\\s+INTO\\s+($Id)(?:\\s+(?:AS\\s+)?(?!USING\\b)(\\w+))?\\s+USING\\s+(?:\\((.+)\\)|([\\w.]+))(?:\\s+(?:AS\\s+)?(?!ON\\b)(\\w+))?\\s+ON\\s+(.+?)\\s+(WHEN\\s+.+?)\\s*""".r
-
-  private sealed trait MergeClause { def cond: Option[String] }
-  private sealed trait MatchedC extends MergeClause
-  private sealed trait InsertC extends MergeClause
-  private sealed trait BySourceC extends MergeClause
-  private final case class MatchedUpdate(cond: Option[String], star: Boolean,
-      sets: Seq[(Option[String], String, String)]) extends MatchedC
-  private final case class MatchedDelete(cond: Option[String]) extends MatchedC
-  private final case class InsertRow(cond: Option[String], star: Boolean,
-      cols: Seq[String], vals: Seq[String]) extends InsertC
-  private final case class BySourceDelete(cond: Option[String]) extends BySourceC
-  private final case class BySourceUpdate(cond: Option[String],
-      sets: Seq[(Option[String], String, String)]) extends BySourceC
-
-  /** Split on top-level commas — commas inside (), [], '…' or "…" belong to
-    * the expression, not the list. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0; var q: Char = 0
-    s.foreach { ch =>
-      if (q != 0) { cur += ch; if (ch == q) q = 0 }
-      else ch match {
-        case '\'' | '"'        => q = ch; cur += ch
-        case '(' | '['         => depth += 1; cur += ch
-        case ')' | ']'         => depth -= 1; cur += ch
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _                 => cur += ch
-      }
-    }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** `c1 = e1, t.c2 = e2, …` → (lhs qualifier, column, expression). Splits
-    * each assignment at its FIRST top-level `=`; the expression may itself
-    * contain `=` (comparisons, CASE). */
-  private def parseAssignments(s: String): Seq[(Option[String], String, String)] = {
-    val AssignRe = """(?s)\s*(?:(\w+)\s*\.\s*)?(\w+)\s*=\s*(.+?)\s*""".r
-    splitTopLevel(s).map {
-      case AssignRe(q, c, e) => (Option(q), c, e)
-      case a => throw new IllegalArgumentException(
-        s"bad MERGE assignment '$a' (expected [alias.]column = expression)")
-    }
-  }
-
-  /** Index of the first TOP-LEVEL `THEN` keyword in `s` — outside (), [],
-    * quotes, AND outside any CASE…END nesting — or -1. A clause condition
-    * may legally contain a CASE expression whose own THENs must not
-    * terminate it; a non-greedy `AND (.+?) THEN` regex binds to the first
-    * inner THEN and mis-parses exactly that daily-driver form. Keyword
-    * scan, same discipline as [[splitTopLevel]]. */
-  private def topLevelThenIdx(s: String): Int = {
-    var depth = 0; var caseDepth = 0; var q: Char = 0
-    var i = 0
-    def wordAt(i: Int, w: String): Boolean =
-      i + w.length <= s.length &&
-        s.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) && s.charAt(i - 1) != '_') &&
-        (i + w.length == s.length ||
-          !Character.isLetterOrDigit(s.charAt(i + w.length)) && s.charAt(i + w.length) != '_')
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (q != 0) { if (ch == q) q = 0; i += 1 }
-      else ch match {
-        case '\'' | '"' => q = ch; i += 1
-        case '(' | '['  => depth += 1; i += 1
-        case ')' | ']'  => depth -= 1; i += 1
-        case _ =>
-          if (depth == 0 && wordAt(i, "CASE")) { caseDepth += 1; i += 4 }
-          else if (depth == 0 && caseDepth > 0 && wordAt(i, "END")) {
-            caseDepth -= 1; i += 3
-          } else if (depth == 0 && caseDepth == 0 && wordAt(i, "THEN")) return i
-          else i += 1
-      }
-    }
-    -1
-  }
-
-  private def parseMergeClauses(text: String): Seq[MergeClause] = {
-    // clause head (which WHEN variant) matched by regex; the remainder —
-    // `[AND <cond>] THEN <action>` — is split at the top-level THEN by a
-    // CASE-aware keyword scan, so conditions containing CASE…THEN…END
-    // parse instead of truncating at the inner THEN
-    val HeadBySource = """(?is)\s*NOT\s+MATCHED\s+BY\s+SOURCE\b(.*)""".r
-    val HeadNotMatched = """(?is)\s*NOT\s+MATCHED\s*(?:BY\s+TARGET\b)?(.*)""".r
-    val HeadMatched = """(?is)\s*MATCHED\b(.*)""".r
-    val ActUpdate = """(?is)\s*UPDATE\s+SET\s+(.+?)\s*""".r
-    val ActDelete = """(?is)\s*DELETE\s*""".r
-    val ActInsert = """(?is)\s*INSERT\s+(.+?)\s*""".r
-    val InsValsRe = """(?is)\s*\(([^)]*)\)\s*VALUES\s*\((.+)\)\s*""".r
-    def condAndAction(rest: String, kind: String): (Option[String], String) = {
-      val thenIdx = topLevelThenIdx(rest)
-      require(thenIdx >= 0, s"MERGE WHEN $kind clause has no THEN: '$rest'")
-      val pre = rest.take(thenIdx).trim
-      val action = rest.drop(thenIdx + 4).trim
-      val cond =
-        if (pre.isEmpty) None
-        else {
-          val AndRe = """(?is)\s*AND\s+(.+)""".r
-          pre match {
-            case AndRe(c) => Some(c.trim)
-            case other => throw new IllegalArgumentException(
-              s"bad MERGE WHEN $kind clause (expected AND <condition> THEN): '$other'")
-          }
-        }
-      (cond, action)
-    }
-    def parseInsert(c: Option[String], body: String): InsertRow = body match {
-      case "*"                   => InsertRow(c, star = true, Nil, Nil)
-      case InsValsRe(cols, vals) =>
-        val cs = splitTopLevel(cols).map(_.replaceAll("`", ""))
-        val vs = splitTopLevel(vals)
-        require(cs.length == vs.length,
-          s"INSERT column list (${cs.length}) and VALUES (${vs.length}) differ in length")
-        InsertRow(c, star = false, cs, vs)
-      case other => throw new IllegalArgumentException(
-        s"bad MERGE INSERT form '$other' (expected * or (cols) VALUES (exprs))")
-    }
-    // split at each WHEN that introduces a clause (lookahead keeps CASE
-    // WHEN inside conditions/expressions intact)
-    text.split("(?is)\\s*\\bWHEN\\s+(?=(?:NOT\\s+)?MATCHED\\b)")
-      .toSeq.map(_.trim).filter(_.nonEmpty).map {
-        case HeadBySource(rest) =>
-          condAndAction(rest, "NOT MATCHED BY SOURCE") match {
-            case (c, ActDelete())     => BySourceDelete(c)
-            case (c, ActUpdate(sets)) => BySourceUpdate(c, parseAssignments(sets))
-            case (_, a) => throw new IllegalArgumentException(
-              s"bad NOT MATCHED BY SOURCE action '$a' (expected DELETE or UPDATE SET …)")
-          }
-        case HeadMatched(rest) =>
-          condAndAction(rest, "MATCHED") match {
-            case (c, ActDelete())     => MatchedDelete(c)
-            case (c, ActUpdate(sets)) =>
-              if (sets.trim == "*") MatchedUpdate(c, star = true, Nil)
-              else MatchedUpdate(c, star = false, parseAssignments(sets))
-            case (_, a) => throw new IllegalArgumentException(
-              s"bad MATCHED action '$a' (expected UPDATE SET … or DELETE)")
-          }
-        case HeadNotMatched(rest) =>
-          condAndAction(rest, "NOT MATCHED") match {
-            case (c, ActInsert(body)) => parseInsert(c, body.trim)
-            case (_, a) => throw new IllegalArgumentException(
-              s"bad NOT MATCHED action '$a' (expected INSERT * or INSERT (cols) VALUES (exprs))")
-          }
-        case other => throw new IllegalArgumentException(
-          s"unrecognized MERGE clause 'WHEN $other'")
-      }
-  }
-
   private def isQualified(name: String): Boolean = name.contains('.')
   private def quoted(name: String): String =
     name.split('.').map(p => s"`$p`").mkString(".")
@@ -1695,49 +1530,197 @@ object Ddl {
     persist()
   }
 
-  /** Spark's own MERGE on the store: `MERGE INTO` it `AS tAlias` from
-    * `(srcSql) AS alias`, ON the key equality (the statement's own ON clause
-    * was checked to be exactly that), then the clauses in the statement's
-    * order (first match wins within each group, as in Spark). Every
-    * assignment is cast to its column's type in `schema` (the current
-    * version's), and an INSERT names every column, unlisted ones NULL. */
-  private def mergeIntoStore(spark: SparkSession, t: KeyedTable, tAlias: String,
-      srcSql: String, alias: String, schema: StructType,
-      clauses: Seq[MergeClause]): Unit = {
-    val fields = schema.fields.toSeq
-    def cast(e: String, f: org.apache.spark.sql.types.StructField) =
-      s"CAST(($e) AS ${f.dataType.sql})"
-    def fromSrc(f: org.apache.spark.sql.types.StructField) =
-      cast(s"`$alias`.${quotedCol(f.name)}", f)
-    def when(kind: String, c: MergeClause) =
-      s"WHEN $kind${c.cond.fold("")(x => s" AND $x")} THEN "
-    def set(star: Boolean, sets: Seq[(Option[String], String, String)]) =
-      "UPDATE SET " + (if (star) fields.map(f => s"${quotedCol(f.name)} = ${fromSrc(f)}")
-      else sets.map { case (_, c, e) =>
-        val f = fields.find(_.name.equalsIgnoreCase(c)).get
-        s"${quotedCol(f.name)} = ${cast(e, f)}"
-      }).mkString(", ")
-    val actions = clauses.map {
-      case c @ MatchedUpdate(_, star, sets) => when("MATCHED", c) + set(star, sets)
-      case c: MatchedDelete => when("MATCHED", c) + "DELETE"
-      case c @ InsertRow(_, star, cols0, vals) =>
-        when("NOT MATCHED", c) +
-          s"INSERT (${fields.map(f => quotedCol(f.name)).mkString(", ")}) " +
-          fields.map { f =>
-            if (star) fromSrc(f)
-            else cols0.indexWhere(_.equalsIgnoreCase(f.name)) match {
-              case -1 => s"CAST(NULL AS ${f.dataType.sql})"
-              case j  => cast(vals(j), f)
-            }
-          }.mkString("VALUES (", ", ", ")")
-      case c: BySourceDelete => when("NOT MATCHED BY SOURCE", c) + "DELETE"
-      case c @ BySourceUpdate(_, sets) =>
-        when("NOT MATCHED BY SOURCE", c) + set(star = false, sets)
+  /** Keyed DELETE, UPDATE and MERGE: Spark parses the statement (with the
+    * injected parser's `graft.` reference expansion, so a source may read
+    * `graft.t VERSION AS OF n`), the tree is checked against the table's
+    * keys and current columns, and the plan runs with its target swapped
+    * for the store. Assignments are cast to their column's current type,
+    * `*` actions expand to explicit column lists (hidden `__graft_dropped_*`
+    * store columns are never named), and a MERGE's ON is rebuilt as the key
+    * equality it was checked to be. The log shows each expression as the
+    * statement spelled it. Returns the table's name. */
+  private def rowLevelDml(spark: SparkSession, name: String, sql: String): String = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression,
+      IsNotNull, IsNull, Literal, Or}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val t = keyed(spark, name)
+    val plan =
+      try spark.sessionState.sqlParser match {
+        case p: graft.plans.GraftSqlParser => p.parseStandard(sql)
+        case p => p.parsePlan(sql)
+      } catch { case e: org.apache.spark.sql.catalyst.parser.ParseException =>
+        throw new IllegalArgumentException(e.getMessage, e)
+      }
+    val fields = schemaOf(t).fields.toSeq
+    val tShort = shortName(t)
+    def text(e: Expression): String = (e.origin.sqlText, e.origin.startIndex,
+        e.origin.stopIndex) match {
+      // Spark's shared TRUE literal (a WHERE-less DELETE) keeps whatever
+      // origin it was first built under
+      case (Some(s), Some(a), Some(b)) if e ne Literal.TrueLiteral => s.substring(a, b + 1)
+      case _ => e.sql
     }
-    val on = t.keys.map(k => s"`$tAlias`.${quotedCol(k)} = `$alias`.${quotedCol(k)}")
-      .mkString(" AND ")
-    spark.sql(s"MERGE INTO ${storeRef(t)} AS `$tAlias` USING ($srcSql) AS " +
-      s"`$alias` ON $on ${actions.mkString(" ")}"): Unit
+    def cast(e: Expression, f: org.apache.spark.sql.types.StructField) = Cast(e, f.dataType)
+    def assign(f: org.apache.spark.sql.types.StructField, e: Expression) =
+      Assignment(UnresolvedAttribute(Seq(f.name)), e)
+    def parts(e: Expression): Seq[String] = e match {
+      case a: UnresolvedAttribute => a.nameParts
+      case other => Seq(text(other))
+    }
+    // the target, aliased as the statement says (else by its short name),
+    // swapped for the store
+    def onStore(target: LogicalPlan): (LogicalPlan, String) = {
+      val (alias, u) = target match {
+        case SubqueryAlias(a, u: UnresolvedRelation) => (a.name, u)
+        case u: UnresolvedRelation => (tShort, u)
+        case other => throw new IllegalArgumentException(
+          s"unsupported DML target in: $sql ($other)")
+      }
+      (SubqueryAlias(alias, u.copy(multipartIdentifier =
+        "graft" +: storeKey(t).split('.').toSeq)), alias)
+    }
+    def isTgt(q: Seq[String], tAlias: String) = q.isEmpty ||
+      Seq(tAlias, tShort, t.name).exists(_.equalsIgnoreCase(q.mkString(".")))
+    // an assignment's column: a target column (optionally target-
+    // qualified), never a key
+    def target(key: Expression, tAlias: String, stmt: String) = {
+      val p = parts(key)
+      val c = p.last
+      require(isTgt(p.init, tAlias),
+        s"$stmt SET target must be a ${t.name} column; got '${p.mkString(".")}'")
+      val f = fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
+        throw new IllegalArgumentException(
+          if (stmt == "UPDATE") s"column '$c' not in ${t.name}"
+          else s"unknown column '$c' in MERGE UPDATE SET (table has " +
+            s"${fields.map(_.name).mkString(", ")})"))
+      require(!t.keys.exists(_.equalsIgnoreCase(c)),
+        if (stmt == "UPDATE") s"cannot update key column '$c' of ${t.name}"
+        else s"MERGE cannot update PRIMARY KEY column '$c'")
+      (c, f)
+    }
+    def run(p: LogicalPlan): Unit = org.apache.spark.sql.GraftBridge.ofRows(spark, p): Unit
+    plan match {
+      case d: DeleteFromTable =>
+        // a condition the optimizer folds to true would make this a
+        // metadata-only truncate, which restarts the store's epochs and
+        // so loses every earlier version; the key guard keeps it row-level
+        val k = UnresolvedAttribute(Seq(t.keys.head))
+        run(d.copy(table = onStore(d.table)._1,
+          condition = And(d.condition, Or(IsNull(k), IsNotNull(k)))))
+        commit(spark, t, Mut("delete", text(d.condition), ""))
+      case u: UpdateTable =>
+        val (store, tAlias) = onStore(u.table)
+        val sets = u.assignments.map { a =>
+          val (c, f) = target(a.key, tAlias, "UPDATE")
+          (c, f, a.value)
+        }
+        run(u.copy(table = store, assignments =
+          sets.map { case (_, f, v) => assign(f, cast(v, f)) }))
+        // the log shows each assignment as the CASE it is, its value cast
+        // to the column's type then
+        val pred = u.condition.fold("true")(text)
+        commit(spark, t, Mut("update", sets.map(_._1).mkString(", "),
+          sets.map { case (c, f, v) =>
+            s"CASE WHEN ($pred) THEN CAST((${text(v)}) AS ${f.dataType.sql}) " +
+              s"ELSE `$c` END"
+          }.mkString(", ")))
+      case m: MergeIntoTable =>
+        val (store, tAlias) = onStore(m.targetTable)
+        val alias = m.sourceTable match {
+          case SubqueryAlias(a, _) => a.name
+          case _ => throw new IllegalArgumentException(
+            s"MERGE INTO ${t.name} requires an alias on the USING source " +
+              "(e.g. USING (...) s ON s.key = key) so the ON clause and the " +
+              "clauses can name both sides unambiguously")
+        }
+        require(!tAlias.equalsIgnoreCase(alias),
+          "MERGE target and source aliases must differ")
+        // the ON clause must cover EXACTLY the primary key: each conjunct
+        // an equality joining the SOURCE side to the TARGET side of the
+        // same key column — a tautology like s.k = s.k (or target=target)
+        // would parse but execute as primary-key semantics it never stated
+        def isSrc(q: Seq[String]) = q.length == 1 && q.head.equalsIgnoreCase(alias)
+        def conjuncts(e: Expression): Seq[Expression] = e match {
+          case And(l, r) => conjuncts(l) ++ conjuncts(r)
+          case other => Seq(other)
+        }
+        val onKeys = conjuncts(m.mergeCondition).map {
+          case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute)
+              if a.nameParts.last.equalsIgnoreCase(b.nameParts.last) &&
+                (isSrc(a.nameParts.init) && isTgt(b.nameParts.init, tAlias) ||
+                  isTgt(a.nameParts.init, tAlias) && isSrc(b.nameParts.init)) =>
+            a.nameParts.last.toLowerCase
+          case c => throw new IllegalArgumentException(
+            s"MERGE ON must be a source-to-target key-equality conjunction " +
+              s"($alias.<key> = [$tAlias.]<key>); got '${text(c)}'")
+        }.toSet
+        require(onKeys == t.keys.map(_.toLowerCase).toSet,
+          s"MERGE ON must cover exactly PRIMARY KEY (${t.keys.mkString(", ")})" +
+            s" of ${t.name}; got (${onKeys.mkString(", ")})")
+        def fromSrc(f: org.apache.spark.sql.types.StructField) =
+          assign(f, cast(UnresolvedAttribute(Seq(alias, f.name)), f))
+        // star actions need the source's columns to be the table's; the
+        // rest name their columns, checked here
+        val rewrite: MergeAction => MergeAction = {
+          case UpdateStarAction(c) => UpdateAction(c, fields.map(fromSrc), false)
+          case InsertStarAction(c) => InsertAction(c, fields.map(fromSrc))
+          case a: UpdateAction => a.copy(assignments = a.assignments.map { x =>
+            val f = target(x.key, tAlias, "MERGE UPDATE")._2
+            assign(f, cast(x.value, f))
+          })
+          case a: InsertAction =>
+            val given = a.assignments.map(x => parts(x.key).last -> x.value)
+            given.foreach { case (c, _) => require(fields.exists(_.name.equalsIgnoreCase(c)),
+              s"unknown column '$c' in MERGE INSERT list") }
+            t.keys.foreach(k => require(given.exists(_._1.equalsIgnoreCase(k)),
+              s"MERGE INSERT column list must include PRIMARY KEY column '$k'"))
+            // every column named, the unlisted ones NULL
+            a.copy(assignments = fields.map(f =>
+              assign(f, given.find(_._1.equalsIgnoreCase(f.name)).fold[Expression](
+                Literal(null, f.dataType))(g => cast(g._2, f)))))
+          case other => other
+        }
+        val matched = m.matchedActions.map(rewrite)
+        val notMatched = m.notMatchedActions.map(rewrite)
+        val bySource = m.notMatchedBySourceActions.map(rewrite)
+        val src = org.apache.spark.sql.GraftBridge.ofRows(spark, m.sourceTable)
+        if ((m.matchedActions ++ m.notMatchedActions).exists {
+            case _: UpdateStarAction | _: InsertStarAction => true
+            case _ => false
+          })
+          require(src.columns.map(_.toLowerCase).toSet ==
+            fields.map(_.name.toLowerCase).toSet,
+            s"MERGE with UPDATE SET * / INSERT * needs source columns " +
+              s"(${src.columns.mkString(", ")}) to match ${t.name} " +
+              s"(${fields.map(_.name).mkString(", ")})")
+        t.keys.foreach(k => require(src.columns.exists(_.equalsIgnoreCase(k)),
+          s"MERGE source must carry key column '$k'"))
+        // key sanity on the source, one job: no NULL keys (they can never
+        // join) and no duplicate keys (one target row matched twice is an
+        // error in standard MERGE, and an upsert would duplicate the key)
+        val keyCols = t.keys.map(k => col(quotedCol(k)))
+        val bad = src.groupBy(keyCols: _*).agg(count(lit(1)).as("__n"))
+          .filter(keyCols.map(_.isNull).reduce(_ || _) || col("__n") > 1)
+          .limit(1).collect()
+        bad.headOption.foreach { r =>
+          require(t.keys.indices.forall(i => !r.isNullAt(i)),
+            s"MERGE source has NULL PRIMARY KEY values for ${t.name}")
+          throw new IllegalArgumentException(
+            s"MERGE source has duplicate PRIMARY KEY rows for ${t.name} " +
+              s"(e.g. ${t.keys.zipWithIndex.map { case (k, i) =>
+                s"$k=${r.get(i)}" }.mkString(", ")})")
+        }
+        run(m.copy(targetTable = store,
+          mergeCondition = t.keys.map(k => EqualTo(UnresolvedAttribute(Seq(tAlias, k)),
+            UnresolvedAttribute(Seq(alias, k))): Expression).reduce(And),
+          matchedActions = matched, notMatchedActions = notMatched,
+          notMatchedBySourceActions = bySource))
+        commit(spark, t, Mut("merge", text(m.mergeCondition), ""))
+      case _ => throw new IllegalArgumentException(
+        s"expected DELETE FROM, UPDATE or MERGE INTO ${t.name}: $sql")
+    }
+    t.name
   }
 
   /** The registration funnel: the bare name is a temp view over the
@@ -1977,10 +1960,9 @@ object Ddl {
     case LoadRe(_, n) if lookup(n).isDefined       => Some(statusCols)
     case InsertValuesRe(n, _) if lookup(n).isDefined => Some(statusCols)
     case InsertSelectRe(n, _) if lookup(n).isDefined => Some(statusCols)
-    case DeleteRe(n, _) if lookup(n).isDefined       => Some(statusCols)
-    case UpdateRe(n, _, _, _) if lookup(n).isDefined => Some(statusCols)
-    case MergeRe(n, _, _, _) if lookup(n).isDefined  => Some(statusCols)
-    case MergeGenRe(n, _, _, _, _, _, _) if lookup(n).isDefined => Some(statusCols)
+    case DeleteHeadRe(n) if lookup(n).isDefined     => Some(statusCols)
+    case UpdateHeadRe(n) if lookup(n).isDefined     => Some(statusCols)
+    case MergeHeadRe(n) if lookup(n).isDefined      => Some(statusCols)
     case CreateMvRe(_*)                              => Some(statusCols)
     case ShowVersionsRe(n) if lookup(n).isDefined    => Some(versionsCols)
     case DescHistoryRe(n) if kvTableFor(n).isDefined => Some(historyCols)
@@ -2358,27 +2340,9 @@ object Ddl {
         status("INSERT", insertInto(spark, name, s"SELECT * FROM $valuesTail"))
       case InsertSelectRe(name, selectTail) =>
         status("INSERT", insertInto(spark, name, selectTail))
-      case DeleteRe(name, pred) =>
-        val t = keyed(spark, name)
-        spark.sql(s"DELETE FROM ${storeRef(t)} AS ${quotedCol(shortName(t))} " +
-          s"WHERE $pred")
-        commit(spark, t, Mut("delete", pred, ""))
-        status("DELETE", t.name)
-      case UpdateRe(name, colName, valueExpr, pred) =>
-        val t = keyed(spark, name)
-        val field = spark.table(t.name).schema.fields
-          .find(_.name.equalsIgnoreCase(colName)).getOrElse(
-            throw new IllegalArgumentException(s"column '$colName' not in ${t.name}"))
-        require(!t.keys.exists(_.equalsIgnoreCase(colName)),
-          s"cannot update key column '$colName' of ${t.name}")
-        // CAST pins the column's current type so the value can never
-        // silently widen it; the log shows the update as the CASE it is
-        val value = s"CAST(($valueExpr) AS ${field.dataType.sql})"
-        spark.sql(s"UPDATE ${storeRef(t)} AS ${quotedCol(shortName(t))} " +
-          s"SET ${quotedCol(field.name)} = $value WHERE $pred")
-        commit(spark, t, Mut("update", colName,
-          s"CASE WHEN ($pred) THEN $value ELSE `$colName` END"))
-        status("UPDATE", t.name)
+      case DeleteHeadRe(name) => status("DELETE", rowLevelDml(spark, name, ddl))
+      case UpdateHeadRe(name) => status("UPDATE", rowLevelDml(spark, name, ddl))
+      case MergeHeadRe(name)  => status("MERGE", rowLevelDml(spark, name, ddl))
       case ShowIndexesRe(_*) =>
         ensureLoaded()
         graft.plans.IndexCatalog.all()
@@ -2733,150 +2697,6 @@ object Ddl {
           throw new IllegalArgumentException(s"unknown index '$name'"))
         if (indexDefs.remove(name.toLowerCase).isDefined) persist()
         status("DROP_INDEX", name)
-      case MergeRe(name, srcSql, alias, onCond) =>
-        val t = keyed(spark, name)
-        val cur = spark.table(t.name)
-        require(alias != null,
-          s"MERGE INTO ${t.name} requires an alias on the USING source " +
-            "(e.g. USING (...) s ON s.key = key) so the ON clause can name " +
-            "both sides unambiguously")
-        // the ON clause must cover EXACTLY the primary key: each conjunct
-        // an equality joining the SOURCE side to the TARGET side of the
-        // same key column — a tautology like s.k = s.k (or target=target)
-        // would parse but execute as primary-key semantics it never stated
-        val tShort = t.name.split('.').last
-        def isSrc(q: String) = q != null && q.equalsIgnoreCase(alias)
-        def isTgt(q: String) = q == null || q.equalsIgnoreCase(tShort) ||
-          q.equalsIgnoreCase(t.name)
-        val conds = onCond.split("(?i)\\s+AND\\s+").toSeq
-        val CondRe = """(?s)\s*(?:(\w+)\.)?(\w+)\s*=\s*(?:(\w+)\.)?(\w+)\s*""".r
-        val onKeys = conds.map {
-          case CondRe(q1, a, q2, b) if a.equalsIgnoreCase(b) &&
-              ((isSrc(q1) && isTgt(q2)) || (isTgt(q1) && isSrc(q2))) =>
-            a.toLowerCase
-          case c => throw new IllegalArgumentException(
-            s"MERGE ON must be a source-to-target key-equality conjunction " +
-              s"($alias.<key> = [${t.name}.]<key>); got '$c'")
-        }.toSet
-        require(onKeys == t.keys.map(_.toLowerCase).toSet,
-          s"MERGE ON must cover exactly PRIMARY KEY (${t.keys.mkString(", ")})" +
-            s" of ${t.name}; got (${onKeys.mkString(", ")})")
-        // whole-row upsert (UPDATE SET * / INSERT *): the source must carry
-        // the table's full column set, matched BY NAME with casts
-        val src = spark.sql(srcSql)
-        require(src.columns.map(_.toLowerCase).toSet ==
-          cur.columns.map(_.toLowerCase).toSet,
-          s"MERGE source columns (${src.columns.mkString(", ")}) must match " +
-            s"${t.name} (${cur.columns.mkString(", ")})")
-        // standard MERGE raises when the source matches a target row more
-        // than once; silently keeping duplicate-key source rows would make
-        // the "upsert" emit duplicates under the table's own PRIMARY KEY
-        val dupKeys = src.groupBy(t.keys.map(k => col(quotedCol(k))): _*)
-          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-          .limit(1).collect()
-        require(dupKeys.isEmpty,
-          s"MERGE source has duplicate PRIMARY KEY rows for ${t.name} " +
-            s"(e.g. ${t.keys.zipWithIndex.map { case (k, i) =>
-              s"$k=${dupKeys.head.get(i)}" }.mkString(", ")})")
-        mergeIntoStore(spark, t, "__t", srcSql, alias, cur.schema,
-          Seq(MatchedUpdate(None, star = true, Nil), InsertRow(None, star = true, Nil, Nil)))
-        commit(spark, t, Mut("merge", onCond, ""))
-        status("MERGE", t.name)
-      case MergeGenRe(name, tgtAliasOpt, srcSqlParen, srcTable, alias, onCond,
-          clausesText) =>
-        val srcSql =
-          if (srcSqlParen != null) srcSqlParen else s"SELECT * FROM $srcTable"
-        val t = keyed(spark, name)
-        val cur = spark.table(t.name)
-        require(alias != null,
-          s"MERGE INTO ${t.name} requires an alias on the USING source " +
-            "(e.g. USING (...) s ON s.key = key) so clauses can name " +
-            "both sides unambiguously")
-        val tShort = t.name.split('.').last
-        val tAlias = Option(tgtAliasOpt).getOrElse(tShort)
-        require(!tAlias.equalsIgnoreCase(alias),
-          "MERGE target and source aliases must differ")
-        // ON must be exactly the PRIMARY KEY equality conjunction,
-        // source-to-target — same discipline as the star form
-        def isSrc(q: String) = q != null && q.equalsIgnoreCase(alias)
-        def isTgt(q: String) = q == null || q.equalsIgnoreCase(tAlias) ||
-          q.equalsIgnoreCase(tShort) || q.equalsIgnoreCase(t.name)
-        val conds = onCond.split("(?i)\\s+AND\\s+").toSeq
-        val CondRe = """(?s)\s*(?:(\w+)\.)?(\w+)\s*=\s*(?:(\w+)\.)?(\w+)\s*""".r
-        val onKeys = conds.map {
-          case CondRe(q1, a, q2, b) if a.equalsIgnoreCase(b) &&
-              ((isSrc(q1) && isTgt(q2)) || (isTgt(q1) && isSrc(q2))) =>
-            a.toLowerCase
-          case c => throw new IllegalArgumentException(
-            s"MERGE ON must be a source-to-target key-equality conjunction " +
-              s"($alias.<key> = [$tAlias.]<key>); got '$c'")
-        }.toSet
-        require(onKeys == t.keys.map(_.toLowerCase).toSet,
-          s"MERGE ON must cover exactly PRIMARY KEY (${t.keys.mkString(", ")})" +
-            s" of ${t.name}; got (${onKeys.mkString(", ")})")
-        val clauses = parseMergeClauses(clausesText)
-        val mClauses = clauses.collect { case c: MatchedC => c }
-        val iClauses = clauses.collect { case c: InsertRow => c }
-        val sClauses = clauses.collect { case c: BySourceC => c }
-        // standard MERGE: only the last clause of each group may omit AND
-        Seq(("MATCHED", mClauses: Seq[MergeClause]),
-            ("NOT MATCHED", iClauses), ("NOT MATCHED BY SOURCE", sClauses))
-          .foreach { case (kind, cs) => cs.dropRight(1).foreach(c =>
-            require(c.cond.nonEmpty,
-              s"only the last WHEN $kind clause may omit AND <condition>")) }
-        // assignment LHS: a target column (optionally target-qualified),
-        // never a PRIMARY KEY column (an upsert that rewrites its own key
-        // has no coherent key semantics)
-        def validateSets(sets: Seq[(Option[String], String, String)]): Unit =
-          sets.foreach { case (q, c, _) =>
-            require(q.forall(isTgt),
-              s"MERGE UPDATE SET target must be a ${t.name} column; got '${q.get}.$c'")
-            require(cur.columns.exists(_.equalsIgnoreCase(c)),
-              s"unknown column '$c' in MERGE UPDATE SET (table has " +
-                s"${cur.columns.mkString(", ")})")
-            require(!t.keys.exists(_.equalsIgnoreCase(c)),
-              s"MERGE cannot update PRIMARY KEY column '$c'")
-          }
-        clauses.foreach {
-          case MatchedUpdate(_, false, sets) => validateSets(sets)
-          case BySourceUpdate(_, sets)       => validateSets(sets)
-          case InsertRow(_, false, cols0, _) =>
-            cols0.foreach(c => require(cur.columns.exists(_.equalsIgnoreCase(c)),
-              s"unknown column '$c' in MERGE INSERT list"))
-            t.keys.foreach(k => require(cols0.exists(_.equalsIgnoreCase(k)),
-              s"MERGE INSERT column list must include PRIMARY KEY column '$k'"))
-          case _ => ()
-        }
-        val src0 = spark.sql(srcSql)
-        // star clauses need the full column set; explicit clauses only the keys
-        val needStar = clauses.exists {
-          case MatchedUpdate(_, true, _) => true
-          case InsertRow(_, true, _, _)  => true
-          case _                         => false
-        }
-        if (needStar)
-          require(src0.columns.map(_.toLowerCase).toSet ==
-            cur.columns.map(_.toLowerCase).toSet,
-            s"MERGE with UPDATE SET * / INSERT * needs source columns " +
-              s"(${src0.columns.mkString(", ")}) to match ${t.name} " +
-              s"(${cur.columns.mkString(", ")})")
-        t.keys.foreach(k => require(src0.columns.exists(_.equalsIgnoreCase(k)),
-          s"MERGE source must carry key column '$k'"))
-        // key sanity on the source: no NULL keys (they can never join) and
-        // no duplicate keys (one target row matched twice is an error)
-        val srcKeys = src0.select(t.keys.map(k => col(quotedCol(k))): _*)
-        require(srcKeys.filter(t.keys.map(k => col(quotedCol(k)).isNull)
-            .reduce(_ || _)).limit(1).collect().isEmpty,
-          s"MERGE source has NULL PRIMARY KEY values for ${t.name}")
-        val dup = srcKeys.groupBy(t.keys.map(k => col(quotedCol(k))): _*)
-          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"MERGE source has duplicate PRIMARY KEY rows for ${t.name} " +
-            s"(e.g. ${t.keys.zipWithIndex.map { case (k, i) =>
-              s"$k=${dup.head.get(i)}" }.mkString(", ")})")
-        mergeIntoStore(spark, t, tAlias, srcSql, alias, cur.schema, clauses)
-        commit(spark, t, Mut("merge2", onCond, ""))
-        status("MERGE", t.name)
       case ViewRe(name, sql) =>
         require(lookup(name).isEmpty,
           s"'$name' names a keyed table; DROP it before creating a view")

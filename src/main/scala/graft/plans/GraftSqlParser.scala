@@ -32,10 +32,12 @@ case class GraftDdlCommand(ddl: String, resultSchema: Seq[(String, DataType)])
   *
   * Routing ([[Ddl.intercept]]): statements vanilla Spark cannot parse
   * (MAPPED BY, `ADD COLUMN c AS <expr>`) are always graft's; shared-syntax
-  * statements (DROP/DESCRIBE/CACHE/UNCACHE/ALTER DROP) are graft's only
-  * when the target is a graft keyed table — everything else falls through
-  * to the vanilla parser untouched, so the injection never changes the
-  * semantics of standard Spark SQL.
+  * statements (DROP/DESCRIBE/CACHE/UNCACHE/ALTER DROP, DELETE/UPDATE/
+  * MERGE) are graft's only when the target is a graft keyed table —
+  * everything else falls through to the vanilla parser untouched, so the
+  * injection never changes the semantics of standard Spark SQL. A keyed
+  * DELETE/UPDATE/MERGE comes back through [[parseStandard]]: graft checks
+  * Spark's parse of it rather than parsing it again.
   */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
@@ -47,9 +49,15 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     if (session != null) Ddl.ensureMvLoaded(session)
     Ddl.intercept(sqlText) match {
       case Some(schema) => GraftDdlCommand(sqlText, schema)
-      case None         => expandGraftRefs(delegate.parsePlan(sqlText))
+      case None         => parseStandard(sqlText)
     }
   }
+
+  /** Spark's own parse with the `graft.` reference expansion, and no
+    * routing to graft's statements: what a keyed DELETE/UPDATE/MERGE runs
+    * ([[Ddl.execute]]) once it has been routed here. */
+  def parseStandard(sqlText: String): LogicalPlan =
+    expandGraftRefs(delegate.parsePlan(sqlText))
 
   /** Multipart references to graft KEYED tables and MV snapshots
     * (`graft.t`, `graft.db.t`) expand to their self-contained view SQL

@@ -3968,7 +3968,8 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(pinnedEpoch.isEmpty,
       s"graft_kv: ${info.command} on a VERSION AS OF read is not allowed")
-    if (mor) () => new GraftKvDeltaOperation(dir, info, () => checkConstraints)
+    if (mor) () => new GraftKvDeltaOperation(dir, tableSchema, info,
+      () => checkConstraints)
     else () => new org.apache.spark.sql.connector.write.RowLevelOperation {
       // the scan built during planning defines the replace groups; the
       // write reads them lazily at commit (planning order: scan first)
@@ -3985,7 +3986,8 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
           require(GraftKvSink.readManifest(mfP).deltas.isEmpty,
             s"graft_kv: copy-on-write DML on $dir with merge-on-read delta " +
               "files present — compact first, or set mor=true on the table")
-        new GraftKvScanBuilder(dir, None, onBuild = s => groupScan = s)
+        new GraftKvScanBuilder(dir, None, onBuild = s => groupScan = s,
+          unpublished = Some(tableSchema))
       }
       // requesting _file routes ReplaceData through the projecting write
       // task (plain group-based writes would otherwise hand the writer
@@ -4250,7 +4252,8 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
       }
     }
     new GraftKvScanBuilder(dir, asOf, maxEpochs, onlyFiles = onlyFiles,
-      changeFeed = cdc, startEpoch = startEpoch, fromEpoch = fromEpoch)
+      changeFeed = cdc, startEpoch = startEpoch, fromEpoch = fromEpoch,
+      unpublished = Some(tableSchema))
   }
 }
 
@@ -4265,7 +4268,7 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
   * deltas back into base files. Because nothing is rewritten, MOR DML
   * never fences time travel: an `asOfEpoch` below the delta's epoch reads
   * the exact pre-DML state. */
-final class GraftKvDeltaOperation(dir: String,
+final class GraftKvDeltaOperation(dir: String, tableSchema: StructType,
     info: org.apache.spark.sql.connector.write.RowLevelOperationInfo,
     checksF: () => Map[String, String] = () => Map.empty)
   extends org.apache.spark.sql.connector.write.SupportsDelta {
@@ -4279,7 +4282,8 @@ final class GraftKvDeltaOperation(dir: String,
   // planning-to-execution gap)
   @volatile private var groupScan: GraftKvScan = _
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftKvScanBuilder(dir, None, onBuild = s => groupScan = s)
+    new GraftKvScanBuilder(dir, None, onBuild = s => groupScan = s,
+      unpublished = Some(tableSchema))
   override def rowId(): Array[NamedReference] =
     Array(Expressions.column("_file"), Expressions.column("_pos"))
   override def requiredMetadataAttributes(): Array[NamedReference] =
@@ -4380,9 +4384,13 @@ final class GraftKvDeltaBatchWrite(dir: String, rowSchema: StructType,
       }
     if (committed.nonEmpty) GraftKvSink.withCommitLock(dir) {
       val mfP = GraftKvSink.manifestPath(dir)
-      require(Files.exists(mfP),
-        s"graft_kv: row-level delta write against $dir with no manifest")
-      val m = GraftKvSink.readManifest(mfP)
+      // no manifest: the DML was planned on a table no write has
+      // published yet (its scan's empty state), and this is the first commit
+      val first = !Files.exists(mfP)
+      val m =
+        if (!first) GraftKvSink.readManifest(mfP)
+        else planned.filter(_.version < 0L).getOrElse(throw new IllegalArgumentException(
+          s"graft_kv: row-level delta write against $dir with no manifest"))
       // CONFLICT GATE (version advanced past the plan-time snapshot):
       // this write's position-deletes name (file, pos) pairs computed
       // against the snapshot. Refuse when a snapshot file/delta is gone
@@ -4458,7 +4466,7 @@ final class GraftKvDeltaBatchWrite(dir: String, rowSchema: StructType,
         m.deltas.map(d => GraftKvSink.epochOf(d.name)) ++
         m.removed.map(_.removedAt) ++
         Seq(m.rewrittenUpTo, m.compactedUpTo).filter(_ >= 0L))
-        .maxOption.getOrElse(0L) + 1L
+        .maxOption.fold(if (first) 0L else 1L)(_ + 1L)
       val published = committed.map { c =>
         val fin = s"epoch-$epoch-${c.finalName}"
         Files.move(Paths.get(dir, c.tmpName), Paths.get(dir, fin),
@@ -4579,7 +4587,8 @@ final class GraftKvScanBuilder(dir: String, asOf: Option[Long],
     onlyFiles: Option[Set[String]] = None,
     changeFeed: Boolean = false,
     startEpoch: Option[Long] = None,
-    fromEpoch: Option[Long] = None)
+    fromEpoch: Option[Long] = None,
+    unpublished: Option[StructType] = None)
   extends ScanBuilder
   with org.apache.spark.sql.connector.read.SupportsPushDownFilters
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
@@ -4669,7 +4678,7 @@ final class GraftKvScanBuilder(dir: String, asOf: Option[Long],
       new GraftKvAggScan(dir, asOf, pushedAggs, aggManifest)
     else {
       val s = new GraftKvScan(dir, asOf, fs.toSeq, projection, maxEpochs,
-        onlyFiles, changeFeed, startEpoch, fromEpoch)
+        onlyFiles, changeFeed, startEpoch, fromEpoch, unpublished)
       onBuild(s)
       s
     }
@@ -5874,7 +5883,11 @@ final class GraftKvScan(dir: String, asOfEpoch: Option[Long] = None,
     onlyFiles: Option[Set[String]] = None,
     changeFeed: Boolean = false,
     startEpoch: Option[Long] = None,
-    fromEpoch: Option[Long] = None)
+    fromEpoch: Option[Long] = None,
+    // the catalog schema of a table no write has published yet: with no
+    // manifest on disk the scan reads zero rows of it (None: the manifest
+    // must exist)
+    unpublished: Option[StructType] = None)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
@@ -5907,10 +5920,15 @@ final class GraftKvScan(dir: String, asOfEpoch: Option[Long] = None,
     val prunable = filters.nonEmpty && !changeFeed && onlyFiles.isEmpty &&
       asOfEpoch.isEmpty &&
       projection.forall(p => !p.fieldNames.contains("_file"))
-    if (prunable)
-      GraftKvSink.readManifestPruned(GraftKvSink.manifestPath(dir), filters)
-    else
-      (GraftKvSink.readManifest(GraftKvSink.manifestPath(dir)), -1, -1)
+    val mfP = GraftKvSink.manifestPath(dir)
+    unpublished.filterNot(_ => Files.exists(mfP)) match {
+      // version -1: the version a missing manifest has in every commit's
+      // conflict gate, so a DML planned on the empty table commits
+      case Some(schema) =>
+        (GraftKvSink.Manifest(schema, Nil, version = -1L), -1, -1)
+      case None if prunable => GraftKvSink.readManifestPruned(mfP, filters)
+      case None => (GraftKvSink.readManifest(mfP), -1, -1)
+    }
   }
   /** The manifest THIS scan planned against — a row-level operation's
     * write must run its optimistic-conflict check against the state its

@@ -3802,4 +3802,30 @@ class DsV2Spec extends SparkSpec {
     val sums = back.agg(sum(col("i")), sum(col("d"))).head()
     assert(sums.getLong(0) == long.map(_.getInt(3).toLong).sum + 1 + 2 + 3 - 5)
   }
+
+  test("a kv catalog table no write has published reads empty and takes DML") {
+    val root = java.nio.file.Files.createTempDirectory("graft_kv_unpublished")
+    def rows(t: String, at: String = ""): Seq[(Int, Int)] =
+      spark.sql(s"SELECT k, v FROM graft.unpub.$t $at").collect()
+        .map(r => (r.getInt(0), r.getInt(1))).toSeq.sorted
+    Seq("cow" -> "", "mor" -> ", mor 'true'").foreach { case (t, mor) =>
+      spark.sql(s"DROP TABLE IF EXISTS graft.unpub.$t")
+      spark.sql(s"CREATE TABLE graft.unpub.$t (k INT, v INT) USING graft_kv " +
+        s"OPTIONS (path '${root.resolve(t)}', epochs 'true'$mor)")
+      assert(rows(t).isEmpty, t)
+      assert(spark.sql(s"SELECT count(*) FROM graft.unpub.$t").head().getLong(0) == 0L)
+      spark.sql(s"UPDATE graft.unpub.$t SET v = 1 WHERE k = 1")
+      spark.sql(s"UPDATE graft.unpub.$t SET v = 2")
+      spark.sql(s"DELETE FROM graft.unpub.$t WHERE k = 1")
+      assert(rows(t).isEmpty, t)
+      spark.sql(s"MERGE INTO graft.unpub.$t t USING (SELECT 1 AS k, 10 AS v) s " +
+        "ON s.k = t.k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+      assert(rows(t) == Seq((1, 10)), t)
+      // the first commit is epoch 0, whichever statement makes it
+      assert(rows(t, "VERSION AS OF 0") == Seq((1, 10)), t)
+      spark.sql(s"INSERT INTO graft.unpub.$t VALUES (2, 20)")
+      assert(rows(t, "VERSION AS OF 1") == Seq((1, 10), (2, 20)), t)
+      spark.sql(s"DROP TABLE graft.unpub.$t")
+    }
+  }
 }
