@@ -18,7 +18,13 @@ import org.apache.spark.sql.internal.StaticSQLConf
   * expressions.
   *
   * Built through `withExtensions`, it also raises Spark's compiled-class
-  * cache bound (see GraftExtensions.CodegenCacheEntries).
+  * cache bound (see GraftExtensions.CodegenCacheEntries) and swaps Hadoop's
+  * local filesystem for graft's fork-free one (graft.sources.LocalFs),
+  * which spares streaming checkpoints a `chmod` and a `readlink` process
+  * per file. Limit: both are builder-time system properties, so a
+  * `spark.sql.extensions=` session whose context already exists keeps
+  * Hadoop's class; pass the two `spark.hadoop.*` confs of `LocalFs.Confs`
+  * there.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -28,6 +34,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // by builder .config(...) or spark-submit --conf still wins.
     sys.props.getOrElseUpdate(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
       GraftExtensions.CodegenCacheEntries.toString)
+    // Same point and precedence for the fork-free local filesystem: the
+    // context copies spark.hadoop.* into its Hadoop configuration.
+    graft.sources.LocalFs.Confs.foreach { case (k, v) =>
+      sys.props.getOrElseUpdate(k, v) }
     // SQL-string DDL entry point: intercepts the MAPPED BY grammar (and
     // catalog-guarded shared statements) and falls through to the vanilla
     // parser otherwise — see plans.GraftSqlParser for the routing rules.

@@ -15,18 +15,16 @@ import graft.Tables
   */
 object Events {
 
-  /** Per-JVM scratch roots for the streaming judged queries (one per query,
-    * wiped at each invocation — see streamKvPipeline). */
-  private lazy val streamKvRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_stream_kv")
-  private lazy val streamWmRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_stream_wm")
-  private lazy val streamJoinRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_stream_join")
-  private lazy val streamDedupRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_stream_dd")
-  private lazy val streamStateRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_stream_st")
+  /** Per-JVM scratch parent of the streaming judged queries, deleted at
+    * JVM exit. Each query keeps its feed, checkpoint and output in its own
+    * root under it, wiped at each invocation (see streamKvPipeline). */
+  private lazy val streamScratch: java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory("graft_stream")
+    sys.addShutdownHook(deleteRecursively(p.toFile))
+    p
+  }
+  private def streamRoot(name: String): java.nio.file.Path =
+    streamScratch.resolve(name)
 
   case class StateIn(user_id: Long, event_id: Long)
   case class StateOut(user_id: Long, cnt: Long, idsum: Long)
@@ -399,7 +397,7 @@ object Events {
     // invocations must not leak a data+checkpoint directory per run, and
     // must not append epochs onto the previous invocation's manifest
     // (callers of the PREVIOUS returned frame have already materialized)
-    val root = Events.streamKvRoot
+    val root = streamRoot("kv")
     deleteRecursively(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
@@ -445,7 +443,7 @@ object Events {
     // rule the oracle replays), written executor-side; ts travels as
     // epoch-micros LONG (the connector's type surface) and is decoded
     // below — lossless under the session's pinned UTC
-    val root = Events.streamWmRoot
+    val root = streamRoot("wm")
     deleteRecursively(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
@@ -504,7 +502,7 @@ object Events {
     * purchaseClickJoin suite test; the interval condition is what keeps
     * join state finite at scale.) */
   def streamJoin(s: SparkSession, d: String): DataFrame = {
-    val root = Events.streamJoinRoot
+    val root = streamRoot("join")
     deleteRecursively(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
@@ -519,13 +517,18 @@ object Events {
       col("event_id") % 3 === k && col("user_id") % 2 === 0)
     feedEpoch(0)
     val out = root.resolve("out").toString
-    // stateful-stream cost here is state-store COMMITS (partitions ×
-    // batches × 4 join stores), not data volume: 2 partitions quarter the
-    // fixed overhead vs 8 with identical results (r19: data volume was
-    // halved and the floor did not move — commits dominate). At real
-    // volume size this to the state actually held per partition, as
-    // everywhere else.
-    withConfs(s, "spark.sql.shuffle.partitions" -> "2") {
+    // Per-batch cost here is fixed, not data volume: each batch writes an
+    // offset-log and a commit-log entry, and a delta and a .crc file per
+    // state store (partitions × 4 join stores). Hadoop without libhadoop
+    // forks `chmod` and `readlink` around every such file; through graft's
+    // local filesystem (sources.LocalFs) a batch's state commit takes
+    // 63–97 ms instead of 608–1078 ms (sf0.01, 4 cores). 2 partitions keep
+    // the store count low; at real volume size this to the state actually
+    // held per partition, as everywhere else. No empty batches: under the
+    // 40-day watermark no state expires and an empty batch emits nothing,
+    // yet it would re-commit every store.
+    withConfs(s, "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val src = s.readStream.format("graft.sources.GraftKvSink")
         .option("path", feed).load()
         .withColumn("ts", timestamp_micros(col("ts_us")))
@@ -579,7 +582,7 @@ object Events {
     * irrelevant. */
   def streamStateCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = Events.streamStateRoot
+    val root = streamRoot("st")
     deleteRecursively(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
@@ -627,7 +630,7 @@ object Events {
     * oracle aggregates the fixture directly: exactly one survivor per
     * event_id. */
   def streamDedup(s: SparkSession, d: String): DataFrame = {
-    val root = Events.streamDedupRoot
+    val root = streamRoot("dd")
     deleteRecursively(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
@@ -638,7 +641,10 @@ object Events {
       (col("event_id") % 3 === k) || ((col("event_id") + 1) % 3 === k)
     writeFeedEpochWhere(s, d, feed, 0, cols, chunkPred(0))
     val out = root.resolve("out").toString
-    withConfs(s, "spark.sql.shuffle.partitions" -> "2") {
+    // no empty batches, as in streamJoin: no key expires under the 40-day
+    // watermark, so an empty batch would only re-commit the state stores
+    withConfs(s, "spark.sql.shuffle.partitions" -> "2",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val q = s.readStream.format("graft.sources.GraftKvSink")
         .option("path", feed).load()
         .withColumn("ts", timestamp_micros(col("ts_us")))

@@ -1233,4 +1233,83 @@ class StreamingSpec extends SparkSpec {
     assert(spark.table("graft.sdr2.t").count() == 4 + 2 + 2) // a + 2 streams
     spark.sql("DROP TABLE graft.sdr2.t")
   }
+
+  test("a stateful checkpointed stream starts no readlink or chmod process") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_forks")
+    try {
+      val rec = new jdk.jfr.Recording()
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try {
+        // two batches through a checkpoint (offset and commit logs), a state
+        // store (the dedup keys) and a foreachBatch parquet sink
+        val ms = MemoryStream[Ev]
+        val q = streaming.StreamOps.sinkToParquet(
+          streaming.StreamOps.dedupWithinWatermark(ms.toDF()),
+          s"$dir/out", s"$dir/ckpt")
+        try {
+          ms.addData(Ev(1, ts("2024-01-01T01:00:00Z"), 1, "view"),
+            Ev(1, ts("2024-01-01T01:05:00Z"), 1, "view"))
+          q.processAllAvailable()
+          ms.addData(Ev(1, ts("2024-01-01T01:20:00Z"), 1, "view"),
+            Ev(2, ts("2024-01-01T01:30:00Z"), 2, "click"))
+          q.processAllAvailable()
+        } finally q.stop()
+        // proves the recording sees process starts
+        new ProcessBuilder("true").start().waitFor()
+      } finally rec.stop()
+      val jfr = dir.resolve("forks.jfr")
+      rec.dump(jfr)
+      rec.close()
+      val programs = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command").trim.split("\\s+").head.split('/').last)
+      assert(programs.contains("true"), programs)
+      // Spark's own `rm -rf` (JavaUtils.deleteRecursively) may still fork
+      assert(!programs.exists(Set("readlink", "chmod")), programs)
+      assert(spark.read.parquet(s"$dir/out").select("event_id").as[Long]
+        .collect().sorted.toSeq == Seq(1L, 2L))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("stream_join and stream_dedup run no empty micro-batch") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(e.progress): Unit
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        ended.incrementAndGet(): Unit
+    }
+    // the events of a stopped query are delivered asynchronously, but in
+    // order: its progress events all precede its termination event
+    def batches(run: => Any): Seq[Long] = {
+      progress.clear(); ended.set(0)
+      spark.streams.addListener(listener)
+      try {
+        run
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (ended.get() == 0 && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(ended.get() == 1)
+      } finally spark.streams.removeListener(listener)
+      // an idle trigger may also report progress; only an executed batch
+      // times addBatch
+      progress.asScala.toSeq.filter(_.durationMs.containsKey("addBatch"))
+        .map(_.numInputRows)
+    }
+    val d = sf("sf0.001")
+    val join = batches(ops.Events.streamJoin(spark, d))
+    assert(join.size == 2 && join.forall(_ > 0), join)
+    val dedup = batches(ops.Events.streamDedup(spark, d))
+    assert(dedup.size == 3 && dedup.forall(_ > 0), dedup)
+  }
 }
