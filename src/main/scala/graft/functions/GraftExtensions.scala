@@ -49,6 +49,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // ReplaceData/WriteDelta (see plans.CheckConstraints).
     ext.injectResolutionRule(session => new graft.plans.CheckConstraintRule(session))
     ext.injectOptimizerRule(session => new graft.plans.CheckConstraintDmlRule(session))
+    // Unconditional DELETE on an `epochs` kv table keeps its history (see
+    // plans.KvDeleteAllRule).
+    ext.injectResolutionRule(_ => new graft.plans.KvDeleteAllRule)
     // Transparent rollup rewrite over registered materialized views — a
     // no-op until MvCatalog has registrations (see plans.MvRewriteRule).
     ext.injectOptimizerRule(session => new graft.plans.MvRewriteRule(session))

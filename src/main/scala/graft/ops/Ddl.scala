@@ -67,12 +67,11 @@ object Ddl {
   /** One logged statement: op ∈ add (col, expr) | default (col, expr) |
     * drop (col, -) | rename (from, to) | widen (col, type) | load (csv
     * path, -) | insert | delete (pred, -) | update (cols, frozen CASE
-    * exprs, comma-separated) | merge (ON condition, -) | viscol (col, -);
-    * squash and merge2 entries survive only in migrated histories. Kept as
-    * strings so the catalog file stays a flat JSON list and SHOW VERSIONS
-    * shows the statement the user ran. `ts`: wall-clock millis stamped when the
-    * mutation was logged — strictly monotonic per table (max(now,
-    * prior+1)), the same commit clock the kv manifest records per epoch,
+    * exprs, comma-separated) | merge (ON condition, -) | viscol (col, -).
+    * Kept as strings so the catalog file stays a flat JSON list and SHOW
+    * VERSIONS shows the statement the user ran. `ts`: wall-clock millis
+    * stamped when the mutation was logged — strictly monotonic per table
+    * (max(now, prior+1)), the same commit clock the kv manifest records per epoch,
     * so `TIMESTAMP AS OF` resolves on keyed tables by the identical prefix
     * rule. 0 = logged before commit clocks existed (legacy catalogs): such
     * histories refuse timestamp reads rather than inventing an instant.
@@ -88,8 +87,8 @@ object Ddl {
       // exactly the kv pre-first-commit rule. 0 = legacy (unknown).
       createdTs: Long = 0L,
       // data directory of the graft_kv table holding the rows; "" = an
-      // entry written before keyed tables were stored in kv, migrated on
-      // first touch ([[migrateLegacy]])
+      // entry written before keyed tables were stored in kv, which lists
+      // and drops but refuses every read and statement ([[storeSchema]])
       store: String = "",
       // kv epoch of version 0, the bulk-loaded base (-1: no rows)
       baseEpoch: Long = -1L)
@@ -117,25 +116,12 @@ object Ddl {
   private val indexDefs = TrieMap.empty[String, graft.plans.IndexDef]
   @volatile private var loadedFromDisk = false
   @volatile private var mvViewsReplayed = false
-  @volatile private var legacyMigrated = false
-  /** The thread running [[migrateLegacy]]: its statements re-enter the
-    * parser, and so the migration, which must then return at once. */
-  @volatile private var migratingThread: Thread = null
-  /** Legacy keyed tables whose migration into a kv store failed in this
-    * process: name → cause. */
-  private val migrationFailures = TrieMap.empty[String, String]
-  /** Index and MV definitions written before keyed tables were stored in
-    * kv (no `kvVersion`; their rows came from a keyed table's replay),
-    * keyed `index:<name>` / `mv:<name>`. Never registered for rewriting:
-    * [[migrateLegacy]] re-creates each over its table's store, and
-    * [[persist]] writes them back unchanged until then. */
-  private val legacyDefs =
-    TrieMap.empty[String, com.fasterxml.jackson.databind.JsonNode]
   /** Sequence number of the catalog file as last read/written by THIS
     * process. persist() refuses to overwrite a file whose seq has moved
     * past it (another JVM wrote since we loaded) — last-writer-wins across
-    * processes would silently drop the other writer's tables. -1 = legacy
-    * array-format file (no seq; conflict check skipped once). */
+    * processes would silently drop the other writer's tables. -1 = a file
+    * without a seq (unreadable or not this writer's format; conflict check
+    * skipped once, and the next write replaces it). */
   @volatile private var diskSeq = 0L
 
   /** `"seq" : N` at the head of the catalog file (persist()'s staleness
@@ -169,7 +155,7 @@ object Ddl {
       // (our own writer puts "seq" first; pretty-printed, <64 bytes in)
       // instead of parsing the whole catalog JSON per statement. Anything
       // ambiguous falls back to the full parse, so the check's semantics
-      // are unchanged: legacy array files → -1, unreadable → -1.
+      // are unchanged: no seq → -1, unreadable → -1.
       val cur = try {
         val head = {
           val in = java.nio.file.Files.newInputStream(p)
@@ -183,15 +169,11 @@ object Ddl {
               java.nio.charset.StandardCharsets.UTF_8)
           } finally in.close()
         }
-        val t = head.dropWhile(_.isWhitespace)
-        if (t.startsWith("[")) -1L
-        else SeqHeadRe.findFirstMatchIn(t) match {
+        SeqHeadRe.findFirstMatchIn(head.dropWhile(_.isWhitespace)) match {
           case Some(m) => m.group(1).toLong
           case None => // not our writer's head shape: full parse decides
-            val n = new ObjectMapper().readTree(
-              java.nio.file.Files.readString(p))
-            if (n.isArray) -1L
-            else Option(n.get("seq")).map(_.asLong).getOrElse(-1L)
+            Option(new ObjectMapper().readTree(java.nio.file.Files.readString(p))
+              .get("seq")).map(_.asLong).getOrElse(-1L)
         }
       } catch { case _: Exception => -1L } // unreadable → let the write heal it
       if (cur >= 0 && cur != diskSeq)
@@ -280,10 +262,6 @@ object Ddl {
       }
       idxs.add(m)
     }
-    legacyDefs.toSeq.sortBy(_._1).foreach { case (k, n) =>
-      (if (k.startsWith("mv:")) mvs else idxs)
-        .add(mapper.convertValue(n, classOf[java.util.Map[String, Object]]))
-    }
     val root = new java.util.LinkedHashMap[String, Object]()
     val nextSeq = math.max(diskSeq, 0L) + 1L
     root.put("seq", java.lang.Long.valueOf(nextSeq))
@@ -323,59 +301,63 @@ object Ddl {
         try {
           val mapper = new ObjectMapper()
           val root = mapper.readTree(java.nio.file.Files.readString(p))
-          // current format: {seq, tables:[...], mvs:[...]}; legacy files
-          // are a bare table array (no seq, no mvs) — tolerate both
-          val (tableNodes, mvNodes) =
-            if (root.isArray) {
-              diskSeq = -1L
-              (root.elements().asScala.toSeq, Seq.empty[com.fasterxml.jackson.databind.JsonNode])
-            } else {
-              diskSeq = Option(root.get("seq")).map(_.asLong).getOrElse(-1L)
-              (Option(root.get("tables")).toSeq.flatMap(_.elements().asScala),
-                Option(root.get("mvs")).toSeq.flatMap(_.elements().asScala))
+          // {seq, tables:[...], mvs:[...], dsv2:[...], indexes:[...]}; a bare
+          // table array is the format written before keyed tables were
+          // stored in kv, which nothing reads any more
+          if (root.isArray) System.err.println(s"[graft] ignoring catalog file " +
+            s"$p: it is a bare table array, the format written before keyed " +
+            s"tables were stored in kv; re-create its tables, or delete $p")
+          else {
+            diskSeq = Option(root.get("seq")).map(_.asLong).getOrElse(-1L)
+            def nodes(f: String) = Option(root.get(f)).toSeq.flatMap(_.elements().asScala)
+            nodes("tables").foreach { n =>
+              val name = n.get("name").asText
+              val keys = n.get("keys").elements().asScala.map(_.asText).toSeq
+              val muts = n.get("muts").elements().asScala.map { m =>
+                Mut(m.get("op").asText, m.get("a").asText, m.get("b").asText,
+                  Option(m.get("ts")).map(_.asText.toLong).getOrElse(0L),
+                  Option(m.get("epoch")).map(_.asText.toLong).getOrElse(-1L))
+              }.toSeq
+              // "stats" is absent in pre-stats catalog files — tolerate both.
+              val stats = Option(n.get("stats")).toSeq
+                .flatMap(_.elements().asScala)
+                .map(m => (m.get("stat").asText, m.get("value").asText))
+              val t = KeyedTable(name, n.get("path").asText, keys, muts, stats,
+                Option(n.get("created")).map(_.asLong).getOrElse(0L),
+                Option(n.get("store")).map(_.asText).getOrElse(""),
+                Option(n.get("baseEpoch")).map(_.asLong).getOrElse(-1L))
+              catalog.putIfAbsent(t.name.toLowerCase, t)
             }
-          tableNodes.foreach { n =>
-            val name = n.get("name").asText
-            val keys = n.get("keys").elements().asScala.map(_.asText).toSeq
-            val muts = n.get("muts").elements().asScala.map { m =>
-              Mut(m.get("op").asText, m.get("a").asText, m.get("b").asText,
-                Option(m.get("ts")).map(_.asText.toLong).getOrElse(0L),
-                Option(m.get("epoch")).map(_.asText.toLong).getOrElse(-1L))
-            }.toSeq
-            // "stats" is absent in pre-stats catalog files — tolerate both.
-            val stats = Option(n.get("stats")).toSeq
-              .flatMap(_.elements().asScala)
-              .map(m => (m.get("stat").asText, m.get("value").asText))
-            val t = KeyedTable(name, n.get("path").asText, keys, muts, stats,
-              Option(n.get("created")).map(_.asLong).getOrElse(0L),
-              Option(n.get("store")).map(_.asText).getOrElse(""),
-              Option(n.get("baseEpoch")).map(_.asLong).getOrElse(-1L))
-            catalog.putIfAbsent(t.name.toLowerCase, t)
-          }
-          mvNodes.foreach { n =>
-            val name = n.get("name").asText
-            if (n.get("kvVersion") == null) legacyDefs.putIfAbsent(s"mv:$name", n)
-            else {
-            val sums = Option(n.get("sums")).map { s =>
-              s.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
-            }.getOrElse(Map.empty)
-            val mv = graft.plans.MvDef(
-              n.get("source").asText, n.get("snapshot").asText,
-              n.get("groups").elements().asScala.map(_.asText).toSeq,
-              n.get("cnt").asText, sums,
-              DataType.fromDDL(n.get("dectype").asText),
-              Option(n.get("table")).map(_.asText).getOrElse(""),
-              Option(n.get("kvVersion")).map(_.asLong).getOrElse(-1L),
-              Option(n.get("kvHead")).map(_.asLong).getOrElse(-1L),
-              Option(n.get("kvHeadTs")).map(_.asLong).getOrElse(-1L))
-            if (mvDefs.putIfAbsent(name, mv).isEmpty &&
-                graft.plans.MvCatalog.named(name).isEmpty)
-              graft.plans.MvCatalog.register(name, mv)
+            // an index or MV entry without `kvVersion` was built from a keyed
+            // table's replay, before keyed tables were stored in kv: it is
+            // left out here, and so of the next catalog write
+            def legacyDef(kind: String, n: com.fasterxml.jackson.databind.JsonNode) = {
+              val old = n.get("kvVersion") == null
+              if (old) System.err.println(s"[graft] skipping $kind " +
+                s"'${n.get("name").asText}' in $p: it was built before keyed tables " +
+                s"were stored in kv; DROP its table and re-create both, or delete $p")
+              old
             }
-          }
-          // dsv2 connector tables (absent in older files)
-          Option(if (root.isArray) null else root.get("dsv2")).toSeq
-            .flatMap(_.elements().asScala).foreach { n =>
+            nodes("mvs").filterNot(legacyDef("materialized view", _)).foreach { n =>
+              val name = n.get("name").asText
+              val sums = Option(n.get("sums")).map { s =>
+                s.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+              }.getOrElse(Map.empty)
+              val mv = graft.plans.MvDef(
+                n.get("source").asText, n.get("snapshot").asText,
+                n.get("groups").elements().asScala.map(_.asText).toSeq,
+                n.get("cnt").asText, sums,
+                DataType.fromDDL(n.get("dectype").asText),
+                Option(n.get("table")).map(_.asText).getOrElse(""),
+                n.get("kvVersion").asLong,
+                Option(n.get("kvHead")).map(_.asLong).getOrElse(-1L),
+                Option(n.get("kvHeadTs")).map(_.asLong).getOrElse(-1L))
+              if (mvDefs.putIfAbsent(name, mv).isEmpty &&
+                  graft.plans.MvCatalog.named(name).isEmpty)
+                graft.plans.MvCatalog.register(name, mv)
+            }
+            // dsv2 connector tables (absent in older files)
+            nodes("dsv2").foreach { n =>
               val opts = Option(n.get("options")).map { o =>
                 o.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
               }.getOrElse(Map.empty)
@@ -383,25 +365,21 @@ object Ddl {
                 n.get("schema").asText, opts)
               dsv2Defs.putIfAbsent(d.name.toLowerCase, d)
             }
-          // secondary indexes (absent in older files)
-          Option(if (root.isArray) null else root.get("indexes")).toSeq
-            .flatMap(_.elements().asScala).foreach { n =>
-              if (n.get("kvVersion") == null)
-                legacyDefs.putIfAbsent(s"index:${n.get("name").asText}", n)
-              else {
+            // secondary indexes (absent in older files)
+            nodes("indexes").filterNot(legacyDef("index", _)).foreach { n =>
               val ix = graft.plans.IndexDef(n.get("name").asText,
                 n.get("source").asText, n.get("col").asText,
                 n.get("index").asText,
                 n.get("keys").elements().asScala.map(_.asText).toSeq,
                 Option(n.get("table")).map(_.asText).getOrElse(""),
-                Option(n.get("kvVersion")).map(_.asLong).getOrElse(-1L),
+                n.get("kvVersion").asLong,
                 Option(n.get("kvHead")).map(_.asLong).getOrElse(-1L),
                 Option(n.get("kvHeadTs")).map(_.asLong).getOrElse(-1L))
               if (indexDefs.putIfAbsent(ix.name.toLowerCase, ix).isEmpty &&
                   graft.plans.IndexCatalog.named(ix.name).isEmpty)
                 graft.plans.IndexCatalog.register(ix)
-              }
             }
+          }
         } catch {
           case e: Exception =>
             System.err.println(
@@ -423,9 +401,6 @@ object Ddl {
     visAuths = Seq.empty // session state: a fresh process has no auths
     loadedFromDisk = false
     mvViewsReplayed = false
-    legacyMigrated = false
-    migrationFailures.clear()
-    legacyDefs.clear()
     diskSeq = 0L
   }
 
@@ -453,13 +428,13 @@ object Ddl {
   }
   /** Keyed tables for the catalog plugin's view half: the current
     * version's read of the table's kv store. */
-  def viewSqlFor(spark: SparkSession, name: String): Option[String] =
-    current(spark, name).map(t => readSql(t, t.muts.length))
+  def viewSqlFor(name: String): Option[String] =
+    lookup(name).map(t => readSql(t, t.muts.length))
   /** A keyed table AT A LOG VERSION (version counts applied mutations;
     * 0 = base): what [[asOf]] runs and what the injected parser expands
     * `graft.t VERSION AS OF n` to. */
-  def viewSqlAsOf(spark: SparkSession, name: String, version: Int): Option[String] =
-    current(spark, name).map { t =>
+  def viewSqlAsOf(name: String, version: Int): Option[String] =
+    lookup(name).map { t =>
       require(version >= 0 && version <= t.muts.length,
         s"version $version out of range 0..${t.muts.length} for ${t.name}")
       readSql(t, version)
@@ -470,9 +445,8 @@ object Ddl {
     * Histories logged before commit clocks existed refuse — an invented
     * boundary would silently read the wrong state — as do instants before
     * the table was created (no state existed to read). */
-  def viewSqlAsOfTimestamp(spark: SparkSession, name: String,
-      ms: Long): Option[String] =
-    current(spark, name).map(t => readSql(t, versionAt(t, ms)))
+  def viewSqlAsOfTimestamp(name: String, ms: Long): Option[String] =
+    lookup(name).map(t => readSql(t, versionAt(t, ms)))
   /** The log version a wall-clock instant names (see
     * [[viewSqlAsOfTimestamp]]); stamps are strictly monotonic, so the
     * count of entries at or before the instant IS the prefix length. */
@@ -491,8 +465,8 @@ object Ddl {
     * resolution both SQL read paths share (the injected parser's reference
     * expansion and the TableCatalog plugin's view half), so MV/table
     * resolution semantics can never diverge between them. */
-  def objectSqlFor(spark: SparkSession, name: String): Option[String] =
-    viewSqlFor(spark, name).orElse(
+  def objectSqlFor(name: String): Option[String] =
+    viewSqlFor(name).orElse(
       mvEntries().collectFirst {
         case (n, mv) if n == name.toLowerCase =>
           s"SELECT * FROM parquet.`${mv.snapshotPath}`"
@@ -978,11 +952,6 @@ object Ddl {
   private def managedDir(kind: String): java.nio.file.Path =
     catalogPath.toAbsolutePath.normalize.getParent.resolve(kind)
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
-
   /** The epoch of the store's newest commit (-1: no rows committed yet;
     * the CREATE-time bulk load publishes the manifest even when empty). */
   private def headEpoch(dir: String): Long =
@@ -1003,12 +972,14 @@ object Ddl {
   private final case class KCol(name: String, phys: String, tpe: DataType)
 
   /** The store's columns now, from its catalog entry (no file read). A
-    * table without a store (a legacy entry whose migration failed) refuses
-    * here, so no read or statement sees it as empty. */
+    * table without a store (an entry written before keyed tables were
+    * stored in kv) refuses here, so no read or statement sees it as
+    * empty. */
   private def storeSchema(t: KeyedTable): StructType = {
     if (t.store.isEmpty) throw new IllegalStateException(
-      s"keyed table ${t.name} has no kv store" + migrationFailures.get(
-        t.name.toLowerCase).fold("")(c => s": its migration failed ($c)"))
+      s"keyed table ${t.name} has no kv store: its catalog entry was written " +
+        s"before keyed tables were stored in kv; DROP TABLE ${t.name} and " +
+        s"re-create it, or delete $catalogPath")
     dsv2Get(storeKey(t)).map(d =>
       DataType.fromJson(d.schemaJson).asInstanceOf[StructType]).getOrElse(
       throw new IllegalStateException(s"keyed table ${t.name} lost its store"))
@@ -1146,14 +1117,6 @@ object Ddl {
         throw new IllegalStateException(s"not a schema change: $other")
     }
 
-  /** A keyed table's base parquet, its key columns checked. */
-  private def baseOf(spark: SparkSession, path: String, keys: Seq[String]): DataFrame = {
-    val base = spark.read.parquet(path)
-    keys.foreach(k => require(hasColumn(base.columns, k),
-      s"key column '$k' not in $path schema"))
-    base
-  }
-
   /** A fresh store for a keyed table: the kv catalog table, bulk-loaded
     * from the base parquet as version 0. */
   private def createStore(spark: SparkSession, name: String, path: String,
@@ -1173,117 +1136,7 @@ object Ddl {
 
   private def dropStore(t: KeyedTable): Unit = {
     dsv2Drop(storeKey(t))
-    rmTree(new java.io.File(t.store))
-  }
-
-  /** Catalogs written before keyed tables were stored in kv hold tables
-    * without a store. The first touch in a process re-runs each such
-    * table's log, entry by entry, into a fresh store: every entry keeps
-    * its op, detail and commit clock and gains the epoch it ends at. The
-    * rows of an INSERT, LOAD or MERGE come from the parquet snapshots the
-    * entry names (a LOAD logged without one re-reads its CSV); `squash`
-    * and `viscol` change no rows. A table whose migration fails loses its
-    * half-built store, keeps its legacy entry (a later process retries)
-    * and refuses every read with the cause ([[storeSchema]]); the other
-    * tables migrate regardless. The catalog is persisted afterwards. */
-  private def migrateLegacy(spark: SparkSession): Unit = {
-    if (legacyMigrated || (migratingThread eq Thread.currentThread)) return
-    synchronized {
-      if (legacyMigrated) return
-      migratingThread = Thread.currentThread
-      try {
-        ensureLoaded()
-        val legacy = catalog.values.toSeq.filter(_.store.isEmpty)
-        legacy.foreach { old =>
-          try migrateTable(spark, old)
-          catch { case e: Exception =>
-            migrationFailures.put(old.name.toLowerCase, String.valueOf(e.getMessage))
-            System.err.println(s"[graft] keyed table ${old.name} could not be " +
-              s"migrated into a kv store: ${e.getMessage}")
-          }
-        }
-        migrateLegacyDefs(spark)
-        if (legacy.nonEmpty || legacyDefs.nonEmpty) persist()
-        legacyMigrated = true
-      } finally migratingThread = null
-    }
-  }
-
-  /** Re-creates each legacy index and MV as a kv index / MV over the store
-    * of the keyed table it was created on (its `table`, else the one table
-    * mapping its source parquet). One whose table is gone, or whose
-    * re-creation fails, is dropped with a notice; one whose table failed
-    * to migrate waits for a later process. */
-  private def migrateLegacyDefs(spark: SparkSession): Unit =
-    legacyDefs.toSeq.sortBy(_._1).foreach { case (k, n) =>
-      val name = n.get("name").asText
-      def text(f: String) = Option(n.get(f)).map(_.asText).filter(_.nonEmpty)
-      val owner = text("table").flatMap(lookup).orElse(
-        text("source").map(normPath).flatMap(src =>
-          catalog.values.toSeq.filter(t => normPath(t.path) == src) match {
-            case Seq(t) => Some(t)
-            case _ => None
-          }))
-      def csv(f: String) = n.get(f) match {
-        case null => ""
-        case a if a.isArray => a.elements().asScala.map(_.asText).mkString(",")
-        case o => o.fieldNames().asScala.mkString(",")
-      }
-      if (!owner.exists(_.store.isEmpty)) {
-        legacyDefs.remove(k)
-        try owner match {
-          case Some(t) if k.startsWith("mv:") =>
-            createKvMv(spark, name, s"graft.${storeKey(t)}", csv("groups"), csv("sums"))
-          case Some(t) =>
-            createKvIndex(spark, name, s"graft.${storeKey(t)}", text("col").get,
-              Some(t.keys.mkString(",")))
-          case None => throw new IllegalStateException("its keyed table is gone")
-        } catch { case e: Exception =>
-          System.err.println(s"[graft] dropped ${k.takeWhile(_ != ':')} '$name', " +
-            s"built before keyed tables were stored in kv: ${e.getMessage}")
-        }
-      }
-    }
-
-  /** One legacy table into a fresh store (see [[migrateLegacy]]); on any
-    * failure the store is dropped again and the error rethrown. */
-  private def migrateTable(spark: SparkSession, old: KeyedTable): Unit = {
-    // a store left by a process that died mid-migration is an orphan
-    dsv2Get(storeKey(old)).foreach(d => dropStore(old.copy(store = d.options("path"))))
-    var t = createStore(spark, old.name, old.path,
-      baseOf(spark, old.path, old.keys), old.keys, old.createdTs)
-      .copy(stats = old.stats)
-    try old.muts.foreach { m =>
-      val store = storeRef(t)
-      def keysIn(snap: String) = {
-        val ks = t.keys.map(quotedCol).mkString(", ")
-        s"($ks) IN (SELECT $ks FROM parquet.`$snap`)"
-      }
-      m.op match {
-        case "add" | "default" | "drop" | "rename" | "widen" => alterColumns(spark, t, m)
-        case "load" if m.b.isEmpty =>
-          appendRows(t, readCsvAligned(spark, schemaOf(t), m.a))
-        case "load" | "insert" => appendRows(t, spark.read.parquet(m.b))
-        case "delete" => spark.sql(s"DELETE FROM $store WHERE ${m.a}")
-        case "update" => spark.sql(s"UPDATE $store SET ${quotedCol(m.a)} = ${m.b}")
-        // an upsert: the rows keyed in the dropped-keys snapshot go,
-        // the output snapshot's rows come in
-        case "merge" | "merge2" =>
-          spark.sql(s"DELETE FROM $store WHERE ${keysIn(if (m.op == "merge") m.b else m.a)}")
-          appendRows(t, spark.read.parquet(m.b))
-        case _ => ()
-      }
-      t = t.copy(muts = t.muts :+ m.copy(epoch = headEpoch(t.store)))
-    } catch { case e: Exception => dropStore(t); throw e }
-    catalog.put(t.name.toLowerCase, t)
-    migrationFailures.remove(t.name.toLowerCase)
-    register(spark, t)
-  }
-
-  /** [[lookup]] for read paths: legacy entries are migrated first. */
-  private def current(spark: SparkSession, name: String): Option[KeyedTable] = {
-    migrateLegacy(spark)
-    lookup(name)
+    deleteTree(new java.io.File(t.store))
   }
 
   /** Managed snapshot location for a named materialized view. */
@@ -1495,7 +1348,7 @@ object Ddl {
         .parquet(mv.snapshotPath)
       // the stage was transport only — reclaim it (O(MV) disk otherwise
       // leaks per refresh and outlives DROP MATERIALIZED VIEW)
-      rmTree(new java.io.File(stage))
+      deleteTree(new java.io.File(stage))
     }
     true
   }
@@ -1542,7 +1395,7 @@ object Ddl {
   private def rowLevelDml(spark: SparkSession, name: String, sql: String): String = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
     import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression,
-      IsNotNull, IsNull, Literal, Or}
+      Literal}
     import org.apache.spark.sql.catalyst.plans.logical._
     val t = keyed(spark, name)
     val plan =
@@ -1602,12 +1455,7 @@ object Ddl {
     def run(p: LogicalPlan): Unit = org.apache.spark.sql.GraftBridge.ofRows(spark, p): Unit
     plan match {
       case d: DeleteFromTable =>
-        // a condition the optimizer folds to true would make this a
-        // metadata-only truncate, which restarts the store's epochs and
-        // so loses every earlier version; the key guard keeps it row-level
-        val k = UnresolvedAttribute(Seq(t.keys.head))
-        run(d.copy(table = onStore(d.table)._1,
-          condition = And(d.condition, Or(IsNull(k), IsNotNull(k)))))
+        run(d.copy(table = onStore(d.table)._1))
         commit(spark, t, Mut("delete", text(d.condition), ""))
       case u: UpdateTable =>
         val (store, tAlias) = onStore(u.table)
@@ -1764,9 +1612,11 @@ object Ddl {
     * the catalog entry. */
   def create(spark: SparkSession, ddl: String): KeyedTable = ddl match {
     case CreateRe(name, path, keyList) =>
-      migrateLegacy(spark)
       val keys = keyList.split(",").map(_.trim).toSeq
-      val base = baseOf(spark, path, keys) // a bad key list changes nothing
+      // checked before the old table goes: a bad key list changes nothing
+      val base = spark.read.parquet(path)
+      keys.foreach(k => require(hasColumn(base.columns, k),
+        s"key column '$k' not in $path schema"))
       lookup(name).foreach(dropTable(spark, _))
       val t = createStore(spark, name, path, base, keys, System.currentTimeMillis())
       catalog.put(name.toLowerCase, t)
@@ -1810,9 +1660,7 @@ object Ddl {
     val e = epochAt(t, v)
     val head = headEpoch(t.store)
     if (head != e) {
-      val k = quotedCol(t.keys.head)
-      if (head >= 0L)
-        spark.sql(s"DELETE FROM ${storeRef(t)} WHERE $k IS NULL OR $k IS NOT NULL")
+      if (head >= 0L) spark.sql(s"DELETE FROM ${storeRef(t)}")
       if (e >= 0L) {
         val all = storeSchema(t).fieldNames.map(quotedCol).mkString(", ")
         spark.sql(s"INSERT INTO ${storeRef(t)} SELECT $all FROM ${storeRef(t)} " +
@@ -1868,7 +1716,7 @@ object Ddl {
     * parquet's rows, muts.length = the current table. Read-only — nothing
     * is materialized or changed. */
   def asOf(spark: SparkSession, name: String, version: Int): DataFrame =
-    spark.sql(viewSqlAsOf(spark, name, version).getOrElse(
+    spark.sql(viewSqlAsOf(name, version).getOrElse(
       throw new IllegalArgumentException(s"unknown keyed table: $name")))
 
   /** CDC CHANGEFEED between two versions of a keyed table: the row-level
@@ -2222,7 +2070,6 @@ object Ddl {
   def execute(spark: SparkSession, ddl: String): DataFrame = {
     import spark.implicits._
     ensureMvLoaded(spark) // restart path: re-register persisted MVs + views
-    migrateLegacy(spark)
     def status(op: String, table: String): DataFrame =
       spark.createDataFrame(
         java.util.Arrays.asList(org.apache.spark.sql.Row(op, table)),
@@ -2273,7 +2120,7 @@ object Ddl {
             .filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
         // every labeled table's view re-registers under the new auth set
         ensureLoaded()
-        catalog.values.filter(_.muts.exists(_.op == "viscol"))
+        catalog.values.filter(t => t.store.nonEmpty && t.muts.exists(_.op == "viscol"))
           .foreach(register(spark, _))
         status("SET_VISIBILITY",
           if (visAuths.isEmpty) "none" else visAuths.mkString(","))
@@ -3138,8 +2985,9 @@ object Ddl {
     * the instant (the Iceberg snapshot-at-timestamp rule). The query reads
     * each boundary through an instant READ BACK from SHOW VERSIONS — so a
     * stamp that failed to round-trip, or a prefix rule off by one, cannot
-    * hash-match the oracle's per-version replay. Pre-create instants and
-    * pre-clock legacy histories refuse (pinned in DdlSpec). */
+    * hash-match the oracle's per-version replay. Pre-create instants
+    * refuse (pinned in DdlSpec); so do histories logged before commit
+    * clocks existed ([[versionAt]]), which no test pins. */
   def sqlTimestampAsof(s: SparkSession, d: String): DataFrame = {
     if (lookup("tt_ts").isDefined) execute(s, "DROP TABLE tt_ts")
     execute(s, s"CREATE TABLE tt_ts MAPPED BY '$d/nation.parquet' KEYS (n_nationkey)")
@@ -3663,7 +3511,7 @@ object Ddl {
     * hand-written per query. Bounds may cover a prefix of the key columns. */
   def keyRangeScan(spark: SparkSession, table: String,
       lower: Seq[Any], upper: Seq[Any]): DataFrame = {
-    val t = current(spark, table).getOrElse(
+    val t = lookup(table).getOrElse(
       throw new IllegalArgumentException(s"unknown keyed table: $table"))
     ensureView(spark, t)
     require(lower.length <= t.keys.length && upper.length <= t.keys.length,

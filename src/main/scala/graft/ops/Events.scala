@@ -18,11 +18,7 @@ object Events {
   /** Per-JVM scratch parent of the streaming judged queries, deleted at
     * JVM exit. Each query keeps its feed, checkpoint and output in its own
     * root under it, wiped at each invocation (see streamKvPipeline). */
-  private lazy val streamScratch: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_stream")
-    sys.addShutdownHook(deleteRecursively(p.toFile))
-    p
-  }
+  private lazy val streamScratch: java.nio.file.Path = scratchDir("graft_stream")
   private def streamRoot(name: String): java.nio.file.Path =
     streamScratch.resolve(name)
 
@@ -77,11 +73,6 @@ object Events {
       .mode(if (k == 0) org.apache.spark.sql.SaveMode.Overwrite
             else org.apache.spark.sql.SaveMode.Append)
       .save()
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
 
   /** The idempotent FILE sink every judged streaming query writes through
     * (same recipe kv_cdc_restart pins across a restart): each micro-batch
@@ -398,7 +389,7 @@ object Events {
     // must not append epochs onto the previous invocation's manifest
     // (callers of the PREVIOUS returned frame have already materialized)
     val root = streamRoot("kv")
-    deleteRecursively(root.toFile)
+    deleteTree(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
     val dir = root.resolve("out").toString
@@ -444,7 +435,7 @@ object Events {
     // epoch-micros LONG (the connector's type surface) and is decoded
     // below — lossless under the session's pinned UTC
     val root = streamRoot("wm")
-    deleteRecursively(root.toFile)
+    deleteTree(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
     val cols = Seq(col("event_id"),
@@ -503,7 +494,7 @@ object Events {
     * join state finite at scale.) */
   def streamJoin(s: SparkSession, d: String): DataFrame = {
     val root = streamRoot("join")
-    deleteRecursively(root.toFile)
+    deleteTree(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
     val cols = Seq(col("event_id"),
@@ -583,7 +574,7 @@ object Events {
   def streamStateCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val root = streamRoot("st")
-    deleteRecursively(root.toFile)
+    deleteTree(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
     val cols = Seq(col("event_id"), col("user_id"))
@@ -631,7 +622,7 @@ object Events {
     * event_id. */
   def streamDedup(s: SparkSession, d: String): DataFrame = {
     val root = streamRoot("dd")
-    deleteRecursively(root.toFile)
+    deleteTree(root.toFile)
     java.nio.file.Files.createDirectories(root)
     val feed = root.resolve("feed").toString
     val cols = Seq(col("event_id"),

@@ -51,22 +51,12 @@ object KeyRange {
   /** Per-JVM-unique scratch root: concurrent Verify/Bench processes must not
     * overwrite each other's round-trip files (same dataset → same hash would
     * otherwise race Overwrite against read). */
-  private val scratch: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scratch_")
-    dir.toFile.deleteOnExit()
-    dir.toString
-  }
+  private val scratch: String = scratchDir("graft_scratch_").toString
 
   /** Reset a scratch path (kv table dirs, stream checkpoints) so repeat
     * runs in one JVM start from no history — recursive, so checkpoint
     * subtrees (offsets/, commits/) and any future layout go too. */
-  private def clearDir(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
+  private def clearDir(path: String): Unit = deleteTree(new java.io.File(path))
 
   /** A2: composite-rowkey range scan (l_orderkey, l_linenumber) — the filter
     * reaches the parquet scan as PushedFilters on the leading key column. */
@@ -1687,7 +1677,7 @@ object KeyRange {
   /** §7.45 judged: the TWO-LEVEL MANIFEST — manifest-list + hash-assigned
     * per-partition-bucket shard files, the metadata-scale ring a 100-TB
     * table needs. The single-JSON manifest has a MEASURED cliff
-    * (ManifestProbe, r19: 1e6 file entries = 573 MB JSON, 52-88 s per
+    * (SURVEY §7.45, r19: 1e6 file entries = 573 MB JSON, 52-88 s per
     * op, OOMs an 8 GB driver — and 100 TB at 128 MB files is ~8e5
     * entries); past the split, per-file entries live in shard files and
     * the list carries per-shard content digests, conservative column

@@ -287,11 +287,7 @@ object Similarity {
     * and its shuffle is n×k rows keyed by vec_id. */
   /** Per-JVM scratch root for the persisted-index tables (the KeyRange
     * pattern): concurrent Verify/Bench processes must not share paths. */
-  private lazy val scratch: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sim_scratch_")
-    dir.toFile.deleteOnExit()
-    dir.toString
-  }
+  private lazy val scratch: String = scratchDir("graft_sim_scratch_").toString
 
   /** C3 × A7-DSv2 judged: INCREMENTAL ANN INDEX MAINTENANCE — the
     * dedup_incremental economics applied to similarity search. The IVF

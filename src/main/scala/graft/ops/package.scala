@@ -31,6 +31,20 @@ import org.apache.spark.sql.types._
   *    DESC → NULLS LAST).
   */
 package object ops {
+  /** Deletes `f` and everything under it. */
+  private[graft] def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(): Unit
+  }
+
+  /** A fresh temp directory, deleted with its contents when the JVM exits
+    * (`File.deleteOnExit` removes only a directory that is empty by then). */
+  private[graft] def scratchDir(prefix: String): java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(deleteTree(p.toFile))
+    p
+  }
+
   /** Standard exact-measure operand: plenty of range for sf0.1 money values. */
   val M: DecimalType = DecimalType(18, 6)
   /** Narrow operand for triple products (3×12 digits + carries fits DuckDB's

@@ -103,19 +103,19 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
               v: java.lang.Long,
               org.apache.spark.sql.types.TimestampType |
               org.apache.spark.sql.types.TimestampNTZType)) =>
-            Ddl.viewSqlAsOfTimestamp(session, rest, Math.floorDiv(v, 1000L))
+            Ddl.viewSqlAsOfTimestamp(rest, Math.floorDiv(v, 1000L))
           case Some(org.apache.spark.sql.catalyst.expressions.Literal(
               v: java.lang.Integer, org.apache.spark.sql.types.DateType)) =>
             // a DATE time-travel boundary is midnight in the SESSION zone
             // (the Spark/Delta rule), not UTC midnight
-            Ddl.viewSqlAsOfTimestamp(session, rest,
+            Ddl.viewSqlAsOfTimestamp(rest,
               java.time.LocalDate.ofEpochDay(v.toLong).atStartOfDay(
                 java.time.ZoneId.of(
                   session.sessionState.conf.sessionLocalTimeZone))
                 .toInstant.toEpochMilli)
           case Some(org.apache.spark.sql.catalyst.expressions.Literal(v,
               org.apache.spark.sql.types.StringType)) if v != null =>
-            Ddl.viewSqlAsOfTimestamp(session, rest,
+            Ddl.viewSqlAsOfTimestamp(rest,
               graft.sources.GraftKvSink.parseTsMillis(v.toString))
           case Some(other) => throw new IllegalArgumentException(
             s"graft: $rest TIMESTAMP AS OF takes a literal instant " +
@@ -130,7 +130,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
                 throw new IllegalArgumentException(
                   s"graft: VERSION AS OF takes a mutation-log version, got '$v'")
               }
-            Ddl.viewSqlAsOf(session, rest, n)
+            Ddl.viewSqlAsOf(rest, n)
         }
         expanded match {
           case Some(sql) =>
@@ -143,7 +143,7 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
             u.multipartIdentifier.head.equalsIgnoreCase("graft") =>
         val rest = u.multipartIdentifier.tail.mkString(".")
         if (Ddl.dsv2Get(rest).isDefined) u // connector table → TableCatalog
-        else Ddl.objectSqlFor(session, rest) match {
+        else Ddl.objectSqlFor(rest) match {
           case Some(sql) =>
             org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(
               u.multipartIdentifier.last, delegate.parseQuery(sql))

@@ -939,7 +939,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
     * snapshot parquet), so the analyzer expands them to plain scans with
     * full pushdown. */
   private def viewSql(ident: Identifier): Option[String] =
-    Ddl.objectSqlFor(session, key(ident))
+    Ddl.objectSqlFor(key(ident))
 
   override def viewExists(ident: Identifier): Boolean = viewSql(ident).isDefined
 

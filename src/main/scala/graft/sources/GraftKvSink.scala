@@ -267,7 +267,7 @@ object GraftKvSink {
       // re-serializing any shard whose content digest is unchanged.
       // Everything else (deltas, removed, refs, txn, epochTs, …) stays
       // in the list: those are maintenance-bounded, the 1e6-entry scale
-      // problem is the per-file stats maps (measured in ManifestProbe).
+      // problem is the per-file stats maps (measured, SURVEY §7.45).
       shardCount: Int = 0,
       shardInfo: Seq[ShardInfo] = Nil) {
     /** THE boundary-state visibility rule — the one definition every
@@ -726,7 +726,7 @@ object GraftKvSink {
     Paths.get(dir, "_graft_manifest.json")
 
   // ---- two-level manifest (manifest-list + shards, SURVEY §7.45) -------
-  // The single-JSON manifest has a MEASURED cliff (ManifestProbe, r19):
+  // The single-JSON manifest has a MEASURED cliff (SURVEY §7.45, r19):
   // 1e6 file entries = 573 MB JSON, 52-88 s per op, OOMs an 8 GB driver —
   // and 100 TB at 128 MB files is ~8e5 entries. Past `shardSplitThreshold`
   // live entries, a commit splits the per-file entries into hash-assigned
@@ -3825,7 +3825,7 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
     // streaming replay, VERSION AS OF boundaries, and O(delta) index/MV
     // refresh — which epoch-less tables (the default, whose streams are
     // one-shot snapshots by documented design) never get.
-    stampEpochs: Boolean = false,
+    val stampEpochs: Boolean = false,
     // CHECK constraints (`check.<name>` table properties, the Delta
     // `delta.constraints.*` shape): boolean SQL expressions every row a
     // BATCH WRITE commits must satisfy (NULL passes, standard CHECK
@@ -4014,14 +4014,15 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
     }
   }
 
-  /** Metadata-only DELETE, two shapes. Unconditional (`DELETE FROM t`,
-    * whose always-true condition the optimizer folds away from the
-    * group-based path): truncate the manifest directly. PARTITION-ALIGNED
+  /** Metadata-only DELETE, two shapes. Unconditional (`DELETE FROM t`, or
+    * a condition the optimizer folds to true) on a table without `epochs`:
+    * truncate the manifest directly, history included. PARTITION-ALIGNED
     * (`DELETE FROM t WHERE status = 'F'` on a table partitioned by
-    * status): every current file proves wholly-deleted or wholly-kept by
-    * its recorded tuple, so the delete is ONE manifest publish dropping
-    * exactly the matching partitions' files — no row is read or
-    * rewritten, the decisive difference at 100 TB. Anything
+    * status), and unconditional on an `epochs` table: every current file
+    * proves wholly-deleted or wholly-kept by its recorded tuple, so the
+    * delete is ONE manifest publish dropping exactly the matching files —
+    * no row is read or rewritten, the decisive difference at 100 TB — and
+    * an `epochs` table keeps them as retained history. Anything
     * unclassifiable declines and Spark falls back to the row-level
     * rewrite, which handles every predicate correctly. */
   private def classifyDeleteFiles(
@@ -4031,7 +4032,7 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
     if (!Files.exists(mf)) return Some(Nil)
     val m = GraftKvSink.readManifest(mf)
     if (m.deltas.nonEmpty) return None // overlays: only the rewrite is exact
-    val v1 = filters.map(GraftPartition.v2ToV1)
+    val v1 = filters.filterNot(isAlwaysTrue).map(GraftPartition.v2ToV1)
     if (v1.exists(_.isEmpty)) return None
     val fs = v1.flatten.toSeq
     val cache = scala.collection.mutable.HashMap
@@ -4049,31 +4050,43 @@ final class GraftKvTable(dir: String, tableSchema: StructType,
     }
     Some(drop.result())
   }
+  private def isAlwaysTrue(
+      p: org.apache.spark.sql.connector.expressions.filter.Predicate) =
+    p.name() == "ALWAYS_TRUE"
+  /** An unconditional DELETE that may reset the table, history and all. */
+  private def truncates(
+      filters: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]) =
+    !stampEpochs && filters.forall(isAlwaysTrue)
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Boolean =
-    filters.isEmpty || filters.forall(_.name() == "ALWAYS_TRUE") ||
-      classifyDeleteFiles(filters).isDefined
+    truncates(filters) || classifyDeleteFiles(filters).isDefined
+  /** TRUNCATE TABLE restarts the table empty, history included, with or
+    * without `epochs`. */
+  override def truncateTable(): Boolean = { truncate(); true }
+  private def truncate(): Unit = {
+    require(pinnedEpoch.isEmpty,
+      "graft_kv: DELETE on a VERSION AS OF read is not allowed")
+    val mf = GraftKvSink.manifestPath(dir)
+    if (Files.exists(mf)) GraftKvSink.withCommitLock(dir) {
+      // publish the empty manifest FIRST (the single visibility switch),
+      // THEN reclaim the files: a crash in between leaves harmless
+      // garbage for vacuum, never a manifest pointing at deleted files
+      val m = GraftKvSink.readManifest(mf)
+      GraftKvSink.writeManifest(dir, tableSchema, Seq.empty,
+        priorHint = Some(m))
+      GraftKvSink.deleteOwnedUnheld(dir,
+        m.files.map(_._1) ++ m.deltas.map(_.name) ++ m.removed.map(_.name))
+    }
+  }
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Unit = {
+    if (truncates(filters)) return truncate()
     require(pinnedEpoch.isEmpty,
       "graft_kv: DELETE on a VERSION AS OF read is not allowed")
     val mf = GraftKvSink.manifestPath(dir)
     if (!Files.exists(mf)) return
-    if (filters.isEmpty || filters.forall(_.name() == "ALWAYS_TRUE")) {
-      GraftKvSink.withCommitLock(dir) {
-        // publish the empty manifest FIRST (the single visibility switch),
-        // THEN reclaim the files: a crash in between leaves harmless
-        // garbage for vacuum, never a manifest pointing at deleted files
-        val m = GraftKvSink.readManifest(mf)
-        GraftKvSink.writeManifest(dir, tableSchema, Seq.empty,
-          priorHint = Some(m))
-        GraftKvSink.deleteOwnedUnheld(dir,
-          m.files.map(_._1) ++ m.deltas.map(_.name) ++ m.removed.map(_.name))
-      }
-      return
-    }
     GraftKvSink.withCommitLock(dir) {
       // RE-classify under the lock (a commit may have landed since
       // canDeleteWhere) — a state that no longer classifies refuses

@@ -1208,103 +1208,104 @@ class DdlSpec extends SparkSpec {
     spark.sql("DROP TABLE load_p")
   }
 
-  test("a catalog entry without a kv store migrates into one on first touch") {
-    // catalogs written before keyed tables were stored in kv hold only the
-    // mutation log, whose INSERT/LOAD/MERGE rows live in parquet snapshots
-    // (a legacy LOAD may have none and name its CSV). The first touch
-    // re-runs the log into a store; every version reads what it read before
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_kv")
-    val cat = dir.resolve("graft_catalog.json")
-    val base = s"${sf("sf0.001")}/region.parquet"
-    def snap(name: String, sql: String): String = {
-      val p = dir.resolve(name).toString
-      spark.sql(sql).write.parquet(p)
-      p
-    }
-    val ins = snap("ins", "SELECT 10 AS r_regionkey, 'ten' AS r_name")
-    val csv = dir.resolve("csv").toString
-    spark.sql("SELECT 'eleven' AS r_name, 11 AS r_regionkey, 'x' AS junk")
-      .write.option("header", "true").csv(csv)
-    val mrg = snap("mrg", "SELECT 2 AS r_regionkey, 'two-m' AS r_name " +
-      "UNION ALL SELECT 12, 'twelve'")
-    val drop2 = snap("drop2", "SELECT 3 AS r_regionkey UNION ALL SELECT 4")
-    val out2 = snap("out2", "SELECT 4 AS r_regionkey, 'four-m' AS r_name")
-    val upd = "CASE WHEN (r_regionkey = 1) THEN CAST((upper(r_name)) AS STRING) " +
-      "ELSE `r_name` END"
-    val muts = Seq(
-      ("insert", "", ins), ("load", csv, ""), ("delete", "r_regionkey = 0", ""),
-      ("update", "r_name", upd), ("merge", "s.r_regionkey = r_regionkey", mrg),
-      ("merge2", drop2, out2), ("add", "k2", "r_regionkey * 2"),
-      ("rename", "r_name", "name2"),
-      ("add", "vis", "CASE WHEN r_regionkey = 12 THEN 'secret' ELSE '' END"),
-      ("viscol", "vis", ""))
-    val mutsJson = muts.zipWithIndex.map { case ((op, a, b), i) =>
-      s"""{"op": "$op", "a": "$a", "b": "$b", "ts": "${1001 + i}"}"""
-    }.mkString(",\n    ")
-    java.nio.file.Files.writeString(cat,
-      s"""{"seq": 1, "tables": [{"name": "legacy_kv", "path": "$base",
-         |  "keys": ["r_regionkey"], "created": 1000, "stats": [], "muts": [
-         |    $mutsJson]}],
-         | "mvs": [], "dsv2": [], "indexes": []}""".stripMargin)
-    // the expected state after each version, from the base rows
-    val base0 = spark.read.parquet(base).collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSeq
-    def upsert(rows: Seq[(Int, String)], up: Seq[(Int, String)]) =
-      rows.filterNot(r => up.exists(_._1 == r._1)) ++ up
-    val states = Seq(base0, base0 :+ (10 -> "ten"),
-      base0 :+ (10 -> "ten") :+ (11 -> "eleven"))
-    val v3 = states.last.filterNot(_._1 == 0)
-    val v4 = v3.map { case (k, n) => (k, if (k == 1) n.toUpperCase else n) }
-    val v5 = upsert(v4, Seq(2 -> "two-m", 12 -> "twelve"))
-    val v6 = upsert(v5.filterNot(_._1 == 3), Seq(4 -> "four-m"))
-    def show(rows: Seq[Seq[Any]]) = rows.map(_.map(String.valueOf)).sortBy(_.mkString("|"))
-    val k2 = v6.map { case (k, n) => Seq(k, n, k * 2) }
-    val vis = k2.map(r => r :+ (if (r.head == 12) "secret" else ""))
-    val want: Seq[(Seq[String], Seq[Seq[String]])] = Seq(
-      (Seq("r_regionkey", "r_name"), show(states(0).map(r => Seq(r._1, r._2)))),
-      (Seq("r_regionkey", "r_name"), show(states(1).map(r => Seq(r._1, r._2)))),
-      (Seq("r_regionkey", "r_name"), show(states(2).map(r => Seq(r._1, r._2)))),
-      (Seq("r_regionkey", "r_name"), show(v3.map(r => Seq(r._1, r._2)))),
-      (Seq("r_regionkey", "r_name"), show(v4.map(r => Seq(r._1, r._2)))),
-      (Seq("r_regionkey", "r_name"), show(v5.map(r => Seq(r._1, r._2)))),
-      (Seq("r_regionkey", "r_name"), show(v6.map(r => Seq(r._1, r._2)))),
-      (Seq("r_regionkey", "r_name", "k2"), show(k2)),
-      (Seq("r_regionkey", "name2", "k2"), show(k2)),
-      (Seq("r_regionkey", "name2", "k2", "vis"), show(vis)),
-      (Seq("r_regionkey", "name2", "k2", "vis"), show(vis.filterNot(_.head == 12))))
-    def read(v: Int) = {
-      val df = spark.sql(s"SELECT * FROM graft.legacy_kv VERSION AS OF $v")
-      (df.columns.toSeq, show(df.collect().map(_.toSeq).toSeq))
-    }
-    val prev = sys.props.get("graft.catalog.path")
-    sys.props("graft.catalog.path") = cat.toString
-    try {
-      ops.Ddl.resetForTest()
-      if (spark.catalog.tableExists("legacy_kv")) spark.catalog.dropTempView("legacy_kv")
-      (0 to 10).foreach(v => assert(read(v) == want(v), s"version $v"))
-      // the log kept every entry's op, detail and commit clock, and each
-      // entry now names the store epoch it ends at
-      val t = ops.Ddl.lookup("legacy_kv").get
-      assert(t.store.nonEmpty)
-      assert(t.muts.map(m => (m.op, m.a, m.b)) == muts)
-      assert(t.muts.map(_.ts) == (1001L to 1010L))
-      assert(t.muts.forall(_.epoch >= 0L))
-      // persisted: a restart reads the store, with the CSV gone
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(csv))
-      ops.Ddl.resetForTest()
-      assert(ops.Ddl.lookup("legacy_kv").get.store == t.store)
-      spark.sql("DESCRIBE legacy_kv").collect() // registers the bare view
-      assert((spark.table("legacy_kv").columns.toSeq,
-        show(spark.table("legacy_kv").collect().map(_.toSeq).toSeq)) == want(10))
-      (0 to 10).foreach(v => assert(read(v) == want(v), s"version $v after restart"))
-      spark.sql("DROP TABLE legacy_kv")
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(t.store)))
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.catalog.path") = v
-        case None    => sys.props.remove("graft.catalog.path")
+  test("a catalog written before keyed tables were stored in kv is refused, never migrated") {
+    withCatalog("graft_legacy_cat") { dir =>
+      val cat = dir.resolve("graft_catalog.json")
+      val base = s"${sf("sf0.001")}/region.parquet"
+      val ins = dir.resolve("ins").toString
+      spark.sql("SELECT 10 AS r_regionkey, 'ten' AS r_name").write.parquet(ins)
+      // a table entry without `store`, and an index and an MV entry without
+      // `kvVersion`: the shapes such a catalog holds
+      java.nio.file.Files.writeString(cat,
+        s"""{"seq": 1, "tables": [{"name": "legacy_t", "path": "$base",
+           |  "keys": ["r_regionkey"], "created": 1000, "stats": [], "muts": [
+           |    {"op": "insert", "a": "", "b": "$ins", "ts": "1001"}]}],
+           | "mvs": [{"name": "legacy_mv", "source": "$base", "snapshot": "$dir/old_mv",
+           |   "groups": ["r_name"], "cnt": "cnt", "sums": {},
+           |   "dectype": "DECIMAL(38,6)", "table": "legacy_t"}],
+           | "dsv2": [],
+           | "indexes": [{"name": "legacy_ix", "source": "$base", "col": "r_name",
+           |   "index": "$dir/old_ix", "keys": ["r_regionkey"], "builtAt": 0,
+           |   "table": "legacy_t"}]}
+           |""".stripMargin)
+      def stderrOf(body: => Unit): String = {
+        val buf = new java.io.ByteArrayOutputStream()
+        val prev = System.err
+        System.setErr(new java.io.PrintStream(buf, true))
+        try body finally System.setErr(prev)
+        buf.toString
       }
       ops.Ddl.resetForTest()
+      val skipped = stderrOf(assert(ops.Ddl.lookup("legacy_t").isDefined))
+      assert(skipped.contains("skipping index 'legacy_ix'") &&
+        skipped.contains("skipping materialized view 'legacy_mv'"), skipped)
+      def refused(stmt: String): Unit = {
+        val e = intercept[Exception](spark.sql(stmt).collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(x => String.valueOf(x.getMessage)).toSeq
+        assert(msgs.exists(m => m.contains("written before keyed tables were " +
+          "stored in kv") && m.contains("DROP TABLE legacy_t") &&
+          m.contains(cat.toString)), s"$stmt: $e")
+      }
+      refused("SELECT * FROM graft.legacy_t")
+      refused("SELECT * FROM graft.legacy_t VERSION AS OF 0")
+      refused("INSERT INTO legacy_t VALUES (11, 'eleven')")
+      // the table still lists; its index and MV are not registered
+      assert(ops.Ddl.execute(spark, "SHOW TABLES").collect().map(_.getString(0))
+        .contains("legacy_t"))
+      assert(graft.plans.IndexCatalog.named("legacy_ix").isEmpty)
+      assert(graft.plans.MvCatalog.named("legacy_mv").isEmpty)
+      assert(spark.sql("SHOW INDEXES").collect().isEmpty)
+      // the next catalog write keeps the table entry as it was and leaves
+      // the index and MV entries out
+      spark.sql(s"CREATE TABLE fresh_t MAPPED BY '$base' KEYS (r_regionkey)")
+      val written = java.nio.file.Files.readString(cat)
+      assert(!written.contains("legacy_ix") && !written.contains("legacy_mv"), written)
+      ops.Ddl.resetForTest()
+      val kept = ops.Ddl.lookup("legacy_t").get
+      assert(kept.store.isEmpty && kept.muts.map(m => (m.op, m.b, m.ts)) ==
+        Seq(("insert", ins, 1001L)))
+      refused("SELECT * FROM graft.legacy_t")
+      spark.sql("DROP TABLE legacy_t")
+      assert(ops.Ddl.lookup("legacy_t").isEmpty)
+      ops.Ddl.resetForTest()
+      assert(ops.Ddl.tableNames() == Seq("fresh_t"))
+      spark.sql("DROP TABLE fresh_t")
+      // the older array-format file: one stderr line, an empty catalog, and
+      // the next write replaces the file
+      java.nio.file.Files.writeString(cat,
+        s"""[{"name": "arr_t", "path": "$base", "keys": ["r_regionkey"], "muts": []}]""")
+      ops.Ddl.resetForTest()
+      val arr = stderrOf(assert(ops.Ddl.tableNames().isEmpty))
+      assert(arr.contains("bare table array") && arr.contains(cat.toString), arr)
+      spark.sql(s"CREATE TABLE after_arr MAPPED BY '$base' KEYS (r_regionkey)")
+      ops.Ddl.resetForTest()
+      assert(ops.Ddl.tableNames() == Seq("after_arr"))
+      assert(spark.sql("SELECT count(*) FROM graft.after_arr").head().getLong(0) == 5L)
+      spark.sql("DROP TABLE after_arr")
+    }
+  }
+
+  test("DELETE FROM a keyed table keeps every version; the DELETE's version reads empty") {
+    withCatalog("graft_delete_all") { _ =>
+      spark.sql(s"CREATE TABLE del_all MAPPED BY '${sf("sf0.001")}/region.parquet' " +
+        "KEYS (r_regionkey)")
+      // the first DELETE is a metadata-only publish; the UPDATE leaves a
+      // merge-on-read delta, so the second runs as a row-level delete
+      Seq("DELETE FROM del_all", "INSERT INTO del_all VALUES (7, 'seven')",
+        "UPDATE del_all SET r_name = 'SEVEN' WHERE r_regionkey = 7",
+        "DELETE FROM del_all", "INSERT INTO del_all VALUES (8, 'eight')")
+        .foreach(spark.sql)
+      def at(v: Int): Seq[(Int, String)] =
+        spark.sql(s"SELECT r_regionkey, r_name FROM graft.del_all VERSION AS OF $v")
+          .collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sorted
+      assert(at(0).length == 5)
+      assert((1 to 5).map(at) == Seq(Nil, Seq((7, "seven")), Seq((7, "SEVEN")), Nil,
+        Seq((8, "eight"))))
+      val t = ops.Ddl.lookup("del_all").get
+      val epochs = t.baseEpoch +: t.muts.map(_.epoch)
+      assert(epochs == epochs.distinct.sorted, epochs)
+      spark.sql("DROP TABLE del_all")
     }
   }
 
@@ -2064,7 +2065,8 @@ class DdlSpec extends SparkSpec {
     Ddl.execute(spark, "DROP TABLE nrendb.t")
   }
 
-  /** Runs `body` against a fresh catalog file, restoring the old one. */
+  /** Runs `body` against a fresh catalog file, restoring the old one; the
+    * catalog's directory, stores included, is deleted afterwards. */
   private def withCatalog(prefix: String)(body: java.nio.file.Path => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     val prev = sys.props.get("graft.catalog.path")
@@ -2076,6 +2078,7 @@ class DdlSpec extends SparkSpec {
         case None    => sys.props.remove("graft.catalog.path")
       }
       ops.Ddl.resetForTest()
+      ops.deleteTree(dir.toFile)
     }
   }
 
@@ -2453,88 +2456,6 @@ class DdlSpec extends SparkSpec {
       assert(state(spark.sql("SELECT * FROM graft.codec_t")) == before)
       assert(spark.sql("SHOW VERSIONS codec_t").count() == 1)
       spark.sql("DROP TABLE codec_t")
-    }
-  }
-
-  test("a legacy table that cannot migrate refuses loudly; the rest migrate") {
-    import scala.jdk.CollectionConverters._
-    withCatalog("graft_legacy_fail") { dir =>
-      val cat = dir.resolve("graft_catalog.json")
-      val base = dir.resolve("base").toString
-      spark.range(3).selectExpr("CAST(id AS INT) AS k", "CAST(id * 2 AS INT) AS v",
-        "concat('s', id) AS s").write.parquet(base)
-      val ins = dir.resolve("ins").toString
-      spark.sql("SELECT 10 AS k, 5 AS v, 'x' AS s").write.parquet(ins)
-      val upd = "CASE WHEN (k = 10) THEN CAST((v + 0.5) AS DOUBLE) ELSE `v` END"
-      // good_t widens INT -> DOUBLE (an up-cast the store cannot do in
-      // place); bad_t's log "widens" a STRING to INT, which no up-cast does
-      java.nio.file.Files.writeString(cat,
-        s"""{"seq": 1, "tables": [
-           |  {"name": "good_t", "path": "$base", "keys": ["k"], "created": 1000,
-           |   "stats": [], "muts": [
-           |    {"op": "insert", "a": "", "b": "$ins", "ts": "1001"},
-           |    {"op": "widen", "a": "v", "b": "DOUBLE", "ts": "1002"},
-           |    {"op": "update", "a": "v", "b": "$upd", "ts": "1003"}]},
-           |  {"name": "bad_t", "path": "$base", "keys": ["k"], "created": 1000,
-           |   "stats": [], "muts": [
-           |    {"op": "insert", "a": "", "b": "$ins", "ts": "1001"},
-           |    {"op": "widen", "a": "s", "b": "INT", "ts": "1002"}]}],
-           | "mvs": [{"name": "good_mv", "source": "$base", "snapshot": "$dir/old_mv",
-           |   "groups": ["s"], "cnt": "cnt", "sums": {"k": "sum_k"},
-           |   "dectype": "DECIMAL(38,6)", "table": "good_t"}],
-           | "dsv2": [],
-           | "indexes": [
-           |   {"name": "good_ix", "source": "$base", "col": "s",
-           |    "index": "$dir/old_ix", "keys": ["k"], "builtAt": 0, "table": "good_t"},
-           |   {"name": "bad_ix", "source": "$base", "col": "s",
-           |    "index": "$dir/old_bad_ix", "keys": ["k"], "builtAt": 0, "table": "bad_t"}]}
-           |""".stripMargin)
-      ops.Ddl.resetForTest()
-      def at(v: Int) = state(spark.sql(s"SELECT * FROM graft.good_t VERSION AS OF $v"))
-      val b0 = (0 until 3).map(i => Seq(i.toString, (i * 2).toString, s"s$i"))
-      val b1 = b0 :+ Seq("10", "5", "x")
-      val b2 = b1.map(r => r.updated(1, r(1).toDouble.toString))
-      val b3 = b2.map(r => if (r.head == "10") r.updated(1, "5.5") else r)
-      val ints = Seq("k" -> "int", "v" -> "int", "s" -> "string")
-      val dbls = Seq("k" -> "int", "v" -> "double", "s" -> "string")
-      def sorted(rows: Seq[Seq[String]]) = rows.sortBy(_.mkString("|"))
-      assert((0 to 3).map(at) == Seq((ints, sorted(b0)), (ints, sorted(b1)),
-        (dbls, sorted(b2)), (dbls, sorted(b3))))
-      // bad_t: no half-built store, and every read names the cause
-      assert(ops.Ddl.lookup("bad_t").get.store.isEmpty)
-      assert(ops.Ddl.dsv2Get("__keyed.bad_t").isEmpty)
-      assert(!java.nio.file.Files.list(dir.resolve("graft_keyed")).iterator().asScala
-        .exists(_.getFileName.toString.startsWith("bad_t")))
-      Seq("SELECT * FROM graft.bad_t", "SELECT * FROM graft.bad_t VERSION AS OF 0")
-        .foreach { q =>
-          val e = intercept[Exception](spark.sql(q).collect())
-          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .exists(x => String.valueOf(x.getMessage).contains("migration failed")),
-            e.toString)
-        }
-      // the legacy index and MV of good_t are kv ones over its store now;
-      // bad_t's index waits, unregistered, for its table
-      val ixs = spark.sql("SHOW INDEXES").collect()
-      assert(ixs.map(_.getString(0)).toSeq == Seq("good_ix"))
-      assert(ixs.head.getString(1) == ops.Ddl.lookup("good_t").get.store)
-      assert(!ixs.head.getBoolean(3))
-      val q = spark.table("good_t").filter(col("s") === "x")
-      assert(q.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
-      assert(q.count() == 1)
-      assert(graft.plans.MvCatalog.named("good_mv").exists(_.kvVersion >= 0L))
-      assert(spark.table("good_mv").agg(sum(col("cnt"))).head.getLong(0) == 4L)
-      // the migrated and the waiting entries are persisted
-      ops.Ddl.resetForTest()
-      assert(ops.Ddl.lookup("good_t").get.store.nonEmpty)
-      assert(ops.Ddl.lookup("bad_t").get.muts.map(_.op) == Seq("insert", "widen"))
-      assert(java.nio.file.Files.readString(cat).contains("bad_ix"))
-      assert(graft.plans.IndexCatalog.named("bad_ix").isEmpty)
-      spark.sql("DROP INDEX good_ix")
-      spark.sql("DROP MATERIALIZED VIEW good_mv")
-      spark.sql("DROP TABLE good_t")
-      // a table that could not migrate can still be dropped
-      spark.sql("DROP TABLE bad_t")
-      assert(ops.Ddl.lookup("bad_t").isEmpty)
     }
   }
 }

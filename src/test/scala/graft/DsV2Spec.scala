@@ -3828,4 +3828,42 @@ class DsV2Spec extends SparkSpec {
       spark.sql(s"DROP TABLE graft.unpub.$t")
     }
   }
+
+  test("an always-true DELETE on an epochs table keeps every earlier epoch; TRUNCATE resets") {
+    val root = java.nio.file.Files.createTempDirectory("graft_kv_delete_all")
+    // (table, options, the DELETE); `mor` holds a delta when it deletes
+    try Seq(("cow", "", "DELETE FROM graft.delall.cow"),
+        ("cow1", "", "DELETE FROM graft.delall.cow1 WHERE 1 = 1"),
+        ("mor", ", mor 'true'", "DELETE FROM graft.delall.mor"),
+        ("mor1", ", mor 'true'", "DELETE FROM graft.delall.mor1 WHERE 1 = 1"))
+      .foreach { case (t, opts, delete) =>
+        spark.sql(s"DROP TABLE IF EXISTS graft.delall.$t")
+        spark.sql(s"CREATE TABLE graft.delall.$t (id BIGINT, v STRING) USING graft_kv " +
+          s"OPTIONS (path '${root.resolve(t)}', epochs 'true'$opts)")
+        def rows(at: String = ""): Seq[(Long, String)] =
+          spark.sql(s"SELECT id, v FROM graft.delall.$t $at").collect()
+            .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+        def history(): Seq[Long] = spark.sql(s"DESCRIBE HISTORY graft.delall.$t")
+          .collect().map(_.getLong(0)).toSeq
+        spark.sql(s"INSERT INTO graft.delall.$t VALUES (1L, 'a')")
+        spark.sql(s"INSERT INTO graft.delall.$t VALUES (2L, 'b')")
+        spark.sql(s"UPDATE graft.delall.$t SET v = 'B' WHERE id = 2")
+        val states = Seq(Seq((1L, "a")), Seq((1L, "a"), (2L, "b")),
+          Seq((1L, "a"), (2L, "B")))
+        assert(history().take(3) == Seq(0L, 1L, 2L), s"$t: ${history()}")
+        spark.sql(delete)
+        assert(rows().isEmpty, t)
+        states.indices.foreach(e =>
+          assert(rows(s"VERSION AS OF $e") == states(e), s"$t epoch $e"))
+        val h = history()
+        assert(h.take(3) == Seq(0L, 1L, 2L) && h.length == 4, s"$t: $h")
+        assert(rows(s"VERSION AS OF ${h.last}").isEmpty, t)
+        // TRUNCATE TABLE still restarts the table, history included
+        spark.sql(s"INSERT INTO graft.delall.$t VALUES (3L, 'c')")
+        spark.sql(s"TRUNCATE TABLE graft.delall.$t")
+        assert(rows().isEmpty && history().isEmpty, s"$t: ${history()}")
+        spark.sql(s"DROP TABLE graft.delall.$t")
+      }
+    finally ops.deleteTree(root.toFile)
+  }
 }

@@ -19,10 +19,10 @@ object SparkSpec {
   // that create keyed tables (li_keyed, ddl_rt, ...) persist them into the
   // repo's default spark-warehouse/graft_catalog.json, leaking fixture
   // paths into later shell/bench sessions. Individual tests that exercise
-  // persistence explicitly set (and restore) their own path on top.
+  // persistence explicitly set (and restore) their own path on top. The
+  // directory, with the stores beside the catalog, goes when the JVM exits.
   sys.props.getOrElseUpdate("graft.catalog.path",
-    java.nio.file.Files.createTempDirectory("graft_test_cat")
-      .resolve("graft_catalog.json").toString)
+    ops.scratchDir("graft_test_cat").resolve("graft_catalog.json").toString)
 
   /** Cheap handle whose access runs this object's initializer (the
     * catalog-path prop above) — referenced from the trait constructor. */
